@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
 import time
 
@@ -197,22 +198,26 @@ def _fan_out_inputs(spark, sf_dir: str) -> str:
     from data_lakehouse_platform_spark.catalog import TABLES, load_table
 
     out_root = tempfile.mkdtemp(prefix="dlp-bench-fanout-")
-    for t in TABLES:
-        if t == "events":
-            # the nanos/NTZ-tolerant loader; writes back TIMESTAMP(MICROS)
-            # carrying exactly the values every query sees today
-            df = load_table(spark, sf_dir, t)
-        else:
-            # raw read (no _fan_out repartition) keeps row order: the
-            # writer splits the single input partition sequentially
-            df = spark.read.parquet(f"{sf_dir}/{t}.parquet")
-        rows = df.count()
-        files = fan_out_file_count(rows)
-        (
-            df.write.option("maxRecordsPerFile", math.ceil(rows / files))
-            .mode("overwrite")
-            .parquet(f"{out_root}/{t}.parquet")
-        )
+    try:
+        for t in TABLES:
+            if t == "events":
+                # the nanos/NTZ-tolerant loader; writes back TIMESTAMP(MICROS)
+                # carrying exactly the values every query sees today
+                df = load_table(spark, sf_dir, t)
+            else:
+                # raw read (no _fan_out repartition) keeps row order: the
+                # writer splits the single input partition sequentially
+                df = spark.read.parquet(f"{sf_dir}/{t}.parquet")
+            rows = df.count()
+            files = fan_out_file_count(rows)
+            (
+                df.write.option("maxRecordsPerFile", math.ceil(rows / files))
+                .mode("overwrite")
+                .parquet(f"{out_root}/{t}.parquet")
+            )
+    except BaseException:
+        shutil.rmtree(out_root, ignore_errors=True)  # partial copy
+        raise
     return out_root
 
 
@@ -267,6 +272,21 @@ def main() -> None:
     else:
         sf_dir_run = sf_dir
 
+    try:
+        out = _measure(spark, sf, sf_dir_run, fanout, load_before)
+    finally:
+        if fanout:
+            # per-run tmp copy — removed on every exit path (a failed
+            # query, Ctrl-C), so nothing persists across invocations
+            shutil.rmtree(sf_dir_run, ignore_errors=True)
+    print(json.dumps(out))
+
+
+def _measure(
+    spark, sf: float, sf_dir_run: str, fanout: bool, load_before: float
+) -> dict:
+    """Time the headline queries over ``sf_dir_run`` and return the
+    bench record (printed by :func:`main` as one JSON line)."""
     registry = all_queries()
     names = [n for n in HEADLINE if n in registry]
     missing = [n for n in HEADLINE if n not in registry]
@@ -524,12 +544,7 @@ def main() -> None:
         out["queries_steady"] = steady
         out["steady_total"] = steady_total
     out["fanout"] = fanout
-    print(json.dumps(out))
-    if fanout:
-        # per-run tmp copy — nothing persists across invocations
-        import shutil
-
-        shutil.rmtree(sf_dir_run, ignore_errors=True)
+    return out
 
 
 if __name__ == "__main__":

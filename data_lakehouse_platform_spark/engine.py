@@ -8,8 +8,7 @@ platform needs to switch over:
     lh.sql("SELECT COUNT(*) FROM lineitem") # SQL over registered views
     lh.query("q1_pricing_summary")          # any registry operator
     lh.medallion("/data/lake")              # bronze->silver->gold builder
-    lh.snapshot("/data/gold/dim_products")  # versioned table handle
-    lh.delta("/data/gold/fact_orders")      # Delta _delta_log interop
+    lh.delta("/data/gold/dim_products")     # versioned Delta table handle
     lh.iceberg("/data/ice/events")          # Iceberg metadata interop
     lh.runner()                             # dependency-ordered job DAG
 
@@ -63,19 +62,15 @@ class Lakehouse:
 
         return MedallionPipeline(self.spark, base_dir)
 
-    def snapshot(self, path: str):
-        from data_lakehouse_platform_spark.sources.table_format import SnapshotTable
-
-        return SnapshotTable(path)
-
     def runner(self):
         from data_lakehouse_platform_spark.plans.runner import PipelineRunner
 
         return PipelineRunner(self.spark)
 
     def delta(self, path: str):
-        """Handle on a Delta table (``_delta_log`` interop) — the
-        facade edge for tables a delta-spark user already has."""
+        """Handle on a versioned Delta table (``_delta_log``): time
+        travel, MERGE, OPTIMIZE, VACUUM and the change feed — and the
+        same handle opens tables a delta-spark user already has."""
         from data_lakehouse_platform_spark.sources.delta_lite import (
             DeltaLiteTable,
         )

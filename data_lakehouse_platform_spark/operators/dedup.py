@@ -292,10 +292,10 @@ def incremental_dedup(
     """Cross-batch exact dedup against a persistent content-hash
     LEDGER: rows whose hash appeared in ANY earlier batch are dropped,
     first-in-batch wins among same-batch copies, and the ledger (a
-    versioned SnapshotTable of hashes) advances atomically with each
-    call — the production shape for continuously-ingested corpora,
-    where "have we seen this document before?" must survive restarts
-    and span every batch ever processed.
+    Delta table of hashes, sources/delta_lite.py) advances atomically
+    with each call — the production shape for continuously-ingested
+    corpora, where "have we seen this document before?" must survive
+    restarts and span every batch ever processed.
 
     Plan: one md5 map over the batch, a within-batch keep-first
     (min-id per hash), and a LEFT ANTI join against the ledger — the
@@ -303,22 +303,25 @@ def incremental_dedup(
     hash-shuffle of the (small) batch against the (large, but
     hash-bucketed) ledger.
 
-    Ledger storage is LOG-STRUCTURED: each batch commits ONLY its new
-    hashes (a ``dedup-ledger-delta`` version — O(batch) write cost,
-    not O(corpus) write amplification), and readers take the union of
-    the last ``dedup-ledger-full`` snapshot plus every delta after it.
-    Once ``compact_every`` deltas accumulate, the call folds them into
-    a fresh full snapshot and vacuums the superseded delta data — the
-    same compaction rhythm an LSM tree or Delta's OPTIMIZE uses, so
-    version count and dead bytes stay bounded.
+    Each call APPENDS only its new hashes — O(batch) write cost, not
+    O(corpus) write amplification — and a read of the latest version
+    is the union of every append.  When a call would make the
+    ``compact_every``-th append since the last fold, it first folds
+    the ledger: OPTIMIZE rewrites the accumulated small files, then
+    VACUUM (retain the latest version) reclaims the superseded ones —
+    the same compaction rhythm an LSM tree uses, so live files and
+    dead bytes stay bounded.  The fold runs BEFORE the ledger read, so
+    the returned frame reads only files that survive the call; the
+    next fold deletes them, so consume the result before the next
+    call on the same ledger.
 
     NULL text hashes as empty text (``md5(coalesce(text, ''))``), so a
     null-document per batch can never ride through the anti join
     forever — the first null/empty doc wins, the rest dedup away.
 
-    The ledger commit is txn-less here; wrap calls with SnapshotTable
-    txn ids when batches can replay (streaming pipelines do exactly
-    that, see streaming/pipelines.upsert_stream_to_snapshot). Exact
+    The ledger commit is txn-less here; when batches can replay, stamp
+    the caller's commits with a Delta ``txn`` the way
+    streaming/pipelines.upsert_stream_to_delta_lite does. Exact
     cross-batch semantics assume one writer at a time (concurrent
     batches cannot see each other's in-flight hashes — serialize
     ingest or accept per-pair duplicates between exactly-concurrent
@@ -326,10 +329,10 @@ def incremental_dedup(
 
     Returns the surviving (new-content) rows of ``batch``.
     """
-    from data_lakehouse_platform_spark.sources.table_format import SnapshotTable
+    from data_lakehouse_platform_spark.sources.delta_lite import DeltaLiteTable
 
     spark = batch.sparkSession
-    ledger = SnapshotTable(ledger_path)
+    ledger = DeltaLiteTable(ledger_path)
 
     hashed = batch.withColumn(
         "__h", F.md5(F.coalesce(F.col(text_col), F.lit("")).cast("binary"))
@@ -341,35 +344,15 @@ def incremental_dedup(
         .drop("__rn")
     )
 
-    # Resolve the live ledger: last full snapshot + all deltas after it.
-    snaps = ledger.history()
-    start = 0
-    for i, s in enumerate(snaps):
-        if s.operation == "dedup-ledger-full":
-            start = i
-    live = snaps[start:]
-    seen = None
-    for s in live:
-        part = ledger.read(spark, version=s.version)
-        seen = part if seen is None else seen.unionByName(part)
+    fresh = batch_first
+    if ledger.latest_version() is not None:
+        ops = [c["operation"] for c in reversed(ledger.history())]
+        n_appends = ops.index("OPTIMIZE") if "OPTIMIZE" in ops else len(ops)
+        if n_appends + 1 >= compact_every:
+            ledger.optimize(spark)
+            ledger.vacuum(retain_last=1)
+        seen = ledger.read(spark).select(F.col("content_hash").alias("__h"))
+        fresh = batch_first.join(seen, "__h", "left_anti")
 
-    if seen is not None:
-        fresh = batch_first.join(
-            seen.select(F.col("content_hash").alias("__h")), "__h", "left_anti"
-        )
-    else:
-        fresh = batch_first
-
-    new_hashes = fresh.select(F.col("__h").alias("content_hash")).distinct()
-    n_deltas = sum(1 for s in live if s.operation == "dedup-ledger-delta")
-    if seen is not None and n_deltas + 1 >= compact_every:
-        # Fold: one full snapshot replaces the delta chain, then
-        # reclaim the superseded versions' bytes.
-        ledger.write_snapshot(
-            seen.unionByName(new_hashes).distinct(),
-            operation="dedup-ledger-full",
-        )
-        ledger.vacuum(keep_last=1)
-    else:
-        ledger.write_snapshot(new_hashes, operation="dedup-ledger-delta")
+    ledger.write(fresh.select(F.col("__h").alias("content_hash")).distinct())
     return fresh.drop("__h")

@@ -1,7 +1,7 @@
 """Incremental view maintenance: keep a grouped-aggregate "view" in
 sync with a versioned table by applying CHANGE DELTAS instead of
-recomputing — the step that turns the snapshot table's change data
-feed (sources/table_format.py `changes`) into cheap continuously-
+recomputing — the step that turns a Delta table's change feed
+(sources/delta_lite.py `table_changes`) into cheap continuously-
 maintained gold aggregates.
 
 The algebra: SUM and COUNT are abelian-group aggregates, so a CDF row
@@ -62,7 +62,7 @@ def changes_to_delta(
     measures: Mapping[str, str],
 ) -> DataFrame:
     """Collapse a change feed (``_change_type`` rows from
-    SnapshotTable.changes) into per-group aggregate deltas.  Group
+    DeltaLiteTable.table_changes) into per-group aggregate deltas.  Group
     cardinality bounds the output — a million changed rows in one
     group become one delta row."""
     sign = F.when(

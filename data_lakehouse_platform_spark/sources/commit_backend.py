@@ -34,12 +34,23 @@ import os
 from typing import MutableMapping, Protocol
 
 __all__ = [
+    "ConcurrentModificationError",
     "CommitSlots",
     "PosixCommitSlots",
     "CoordinatedCommitSlots",
     "LocalObjectStore",
     "ObjectStoreCommitSlots",
 ]
+
+
+class ConcurrentModificationError(RuntimeError):
+    """A commit derived from a snapshot (overwrite/DELETE/MERGE/
+    OPTIMIZE/RESTORE, an Iceberg metadata swap) lost its put-if-absent
+    slot to another writer.  Taking the next slot would publish a
+    result computed against a superseded snapshot and silently drop
+    the other writer's change — the condition Delta surfaces as
+    ConcurrentModificationException on a conflicting MERGE.  Callers
+    re-read and retry, or give up."""
 
 
 class CommitSlots(Protocol):

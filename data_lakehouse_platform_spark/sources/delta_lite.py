@@ -2,11 +2,11 @@
 
 The reference's gold tables are real Delta (gold_dim_products.py:118-131
 uses DeltaTable.merge; versioned reads and RESTORE ride the same log).
-This container has no delta-spark jar, so SnapshotTable re-creates the
-*semantics* on plain parquet — but a user migrating from the reference
-may hold actual ``_delta_log`` tables. This module speaks the PUBLIC
+This module needs no delta-spark jar: it speaks the PUBLIC
 Delta protocol (https://github.com/delta-io/delta/blob/master/PROTOCOL.md)
-directly, no jar required:
+directly — the tables it writes are real
+``_delta_log`` tables, and tables a migrating user already holds read
+as-is:
 
 * the log is ``_delta_log/{version:020d}.json`` — one JSON action per
   line: ``protocol``, ``metaData``, ``add``, ``remove``, ``commitInfo``;
@@ -46,8 +46,9 @@ reader REFUSE loudly rather than return wrong rows.
 delta-spark, when present, reads tables this writer produces (plain
 v1 parquet + JSON log + spec-shaped checkpoint).
 
-SnapshotTable remains the engine's native format; DeltaLiteTable is
-the interchange edge for Delta tables a user already has.
+DeltaLiteTable is the engine's native versioned-table format: the
+streaming CDC and fan-out sinks, the dedup ledger and incremental view
+maintenance all commit through it.
 
 STORAGE BOUNDARY — single POSIX filesystem ONLY.  Commits rely on
 ``os.open(..., O_CREAT | O_EXCL)`` put-if-absent and ``os.replace``
@@ -1592,7 +1593,7 @@ class DeltaLiteTable:
         them one slot later would silently miss the intervening
         commit's files, the same conflict Delta raises on a concurrent
         MERGE."""
-        from data_lakehouse_platform_spark.sources.table_format import (
+        from data_lakehouse_platform_spark.sources.commit_backend import (
             ConcurrentModificationError,
         )
 
@@ -4383,16 +4384,29 @@ class DeltaLiteTable:
         for k in keys:
             if k not in old.columns:
                 raise ValueError(f"key column {k!r} not in the table")
+        # intersect matches NULL keys like any other value, so the
+        # joins against its result must too (eqNullSafe) — a plain
+        # equi-join would reclassify a NULL-keyed update as delete +
+        # insert
         upd_keys = (
             inserted.select(*keys)
             .intersect(deleted.select(*keys))
+            .select(*[F.col(k).alias(f"__uk_{k}") for k in keys])
         )
-        ins = inserted.join(upd_keys, on=keys, how="left_anti")
-        dele = deleted.join(upd_keys, on=keys, how="left_anti")
+
+        def _by_key(side: DataFrame, how: str) -> DataFrame:
+            cond = None
+            for k in keys:
+                t = side[k].eqNullSafe(upd_keys[f"__uk_{k}"])
+                cond = t if cond is None else cond & t
+            return side.join(upd_keys, cond, how)
+
+        ins = _by_key(inserted, "left_anti")
+        dele = _by_key(deleted, "left_anti")
         # no forced broadcast: an update-heavy diff makes upd_keys
         # snapshot-sized, so AQE picks broadcast only when it fits
-        upd_post = inserted.join(upd_keys, on=keys, how="left_semi")
-        upd_pre = deleted.join(upd_keys, on=keys, how="left_semi")
+        upd_post = _by_key(inserted, "left_semi")
+        upd_pre = _by_key(deleted, "left_semi")
         return (
             ins.withColumn("_change_type", F.lit("insert"))
             .unionByName(

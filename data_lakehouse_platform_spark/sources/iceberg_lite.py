@@ -44,8 +44,7 @@ v2 tables with append/overwrite snapshots — data parquet under
 ``partition-spec`` / ``format-version`` Avro file metadata), a new
 ``v{N}.metadata.json`` + ``version-hint.text``, flat primitive
 columns only (nested types refuse loudly — use
-SnapshotTable/DeltaLiteTable for the engine's full-featured native
-formats).
+DeltaLiteTable, the engine's full-featured native format).
 
 PARTITIONING (Iceberg's "hidden partitioning"): writes accept
 ``partition_by=[("col", "identity"|"day"|"month"), ...]`` — the
@@ -1928,7 +1927,7 @@ class IcebergLiteTable:
         slot race aborts: every caller computed its metadata against
         the version it read, so taking a later slot would drop the
         intervening commit."""
-        from data_lakehouse_platform_spark.sources.table_format import (
+        from data_lakehouse_platform_spark.sources.commit_backend import (
             ConcurrentModificationError,
         )
 
@@ -2026,8 +2025,7 @@ class IcebergLiteTable:
                 }
             raise IcebergProtocolError(
                 f"column {where}: Spark type {tn} has no Iceberg "
-                "mapping here — use SnapshotTable/DeltaLiteTable for "
-                "such data"
+                "mapping here — use DeltaLiteTable for such data"
             )
 
         return [

@@ -197,78 +197,6 @@ def write_stream_parquet(
     return writer.start()
 
 
-def upsert_stream_to_snapshot(
-    df: DataFrame,
-    table_path: str,
-    key_cols: list[str],
-    ts_col: str,
-    checkpoint_path: str,
-    available_now: bool = True,
-) -> StreamingQuery:
-    """CDC sink: merge each micro-batch into a versioned SnapshotTable
-    (sources/table_format.py) — the reference's Kafka-consumer →
-    Delta-merge flow (orders_consumer.py + gold_dim_products.py merge)
-    as one declarative pipeline.
-
-    Merge rule is last-writer-wins BY EVENT TIMESTAMP, not by arrival:
-    target ∪ batch → row_number over (key ORDER BY ts DESC) → keep 1.
-    Batch/file ordering therefore cannot change the converged table —
-    replays and out-of-order backfills are safe. Exactly-once table
-    versions: each batch commits with txn_id=(checkpoint, batch_id),
-    and SnapshotTable skips already-committed txns, so a replayed
-    micro-batch (post-crash re-delivery) cannot double-commit — the
-    same appId+txnVersion scheme Delta's streaming sink uses.
-
-    Scale: one shuffle per batch keyed on `key_cols`; at 100 TB the
-    target read prunes to partitions containing batch keys (the
-    SnapshotTable stores plain parquet — partition the table by a key
-    prefix and push `key IN (batch keys)` down before the union).
-    """
-    from pyspark.sql import Window
-
-    from data_lakehouse_platform_spark.sources.table_format import SnapshotTable
-
-    table = SnapshotTable(table_path)
-
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        if table.latest_version() is None:
-            combined = batch_df
-        else:
-            target = table.read(spark)
-            combined = target.unionByName(batch_df.select(*target.columns))
-        # Deterministic tiebreak on equal event timestamps: a content
-        # fingerprint over the non-key columns, so the converged table
-        # really is independent of batch/arrival order even when two
-        # conflicting rows carry the same ts (same discipline as
-        # writers.scd2_merge).
-        val_cols = [c for c in combined.columns if c not in key_cols]
-        w = Window.partitionBy(*key_cols).orderBy(
-            F.col(ts_col).desc(), F.xxhash64(*val_cols).desc()
-        )
-        merged = (
-            combined.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
-        table.write_snapshot(
-            merged,
-            operation=f"stream-upsert(batch={batch_id})",
-            txn_id=f"stream:{checkpoint_path}:{batch_id}",
-        )
-
-    writer = (
-        df.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
 def fanout_stream_to_sinks(
     df: DataFrame,
     raw_path: str,
@@ -278,20 +206,31 @@ def fanout_stream_to_sinks(
     available_now: bool = True,
 ) -> StreamingQuery:
     """Multi-sink fanout in ONE stream: each micro-batch lands in a
-    raw parquet archive AND folds into an aggregate SnapshotTable,
+    raw parquet archive AND folds into an aggregate DeltaLiteTable,
     inside a single foreachBatch — the standard way to feed two sinks
     without running (and paying for) the source twice.
 
     Exactly-once on both legs despite foreachBatch's at-least-once
     contract: the raw leg writes to a batch-id-named directory
-    (overwrite-idempotent on replay), and the aggregate leg commits
-    with txn_id=(checkpoint, batch_id) so SnapshotTable drops
-    replayed commits. Partial failure between the two legs replays
-    the whole batch; both legs converge because both are idempotent.
-    """
-    from data_lakehouse_platform_spark.sources.table_format import SnapshotTable
+    (overwrite-idempotent on replay), and the aggregate leg stamps its
+    commit with the Delta ``txn`` action (appId=``stream:<checkpoint>``,
+    version=batch_id) and skips a batch already in
+    :meth:`DeltaLiteTable.txn_versions`. Partial failure between the
+    two legs replays the whole batch; both legs converge because both
+    are idempotent.
 
-    table = SnapshotTable(agg_table_path)
+    The aggregate leg recomputes the WHOLE aggregate (previous counts
+    ∪ batch partials, regrouped) and commits it as one overwrite, not
+    a MERGE: MERGE never matches a NULL key (Delta's semantics), so a
+    NULL group would gain a second row on every batch, while the
+    regroup folds NULL keys like any other.
+    """
+    from data_lakehouse_platform_spark.sources.delta_lite import (
+        DeltaLiteTable,
+    )
+
+    table = DeltaLiteTable(agg_table_path)
+    app_id = f"stream:{checkpoint_path}"
 
     def _fanout(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -299,20 +238,19 @@ def fanout_stream_to_sinks(
         spark = batch_df.sparkSession
         # Leg 1: raw archive, per-batch dir => replay overwrites itself.
         batch_df.write.mode("overwrite").parquet(f"{raw_path}/batch={batch_id}")
-        # Leg 2: merge batch partial counts into the running aggregate.
+        # Leg 2: fold batch partial counts into the running aggregate.
+        first = table.latest_version() is None
+        if not first and table.txn_versions().get(app_id, -1) >= batch_id:
+            return  # replayed batch: already committed, exactly-once
         part = batch_df.groupBy(agg_key).agg(F.count("*").alias("n"))
-        if table.latest_version() is not None:
-            prev = table.read(spark)
+        if not first:
             part = (
-                prev.unionByName(part)
+                table.read(spark)
+                .unionByName(part)
                 .groupBy(agg_key)
                 .agg(F.sum("n").alias("n"))
             )
-        table.upsert(
-            part,
-            key_cols=[agg_key],
-            txn_id=f"{checkpoint_path}#fanout#{batch_id}",
-        )
+        table.write(part, mode="overwrite", txn=(app_id, batch_id))
 
     writer = (
         df.writeStream.foreachBatch(_fanout)
@@ -349,9 +287,7 @@ def upsert_stream_to_delta_lite(
 
     Scale: the batch dedup shuffles only the micro-batch on
     ``key_cols``; the MERGE is delta_lite's copy-on-write rewrite — at
-    100 TB, partition the table and let merge's anti-join prune, or
-    point the stream at :func:`upsert_stream_to_snapshot` whose
-    SnapshotTable merge is DV-surgical.
+    100 TB, partition the table and let merge's anti-join prune.
     """
     from pyspark.sql import Window
 

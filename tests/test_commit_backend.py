@@ -12,15 +12,13 @@ from concurrent.futures import ThreadPoolExecutor
 import pytest
 
 from data_lakehouse_platform_spark.sources.commit_backend import (
+    ConcurrentModificationError,
     CoordinatedCommitSlots,
     PosixCommitSlots,
 )
 from data_lakehouse_platform_spark.sources.delta_lite import DeltaLiteTable
 from data_lakehouse_platform_spark.sources.iceberg_lite import (
     IcebergLiteTable,
-)
-from data_lakehouse_platform_spark.sources.table_format import (
-    ConcurrentModificationError,
 )
 
 

@@ -4,6 +4,8 @@ the same signatures)."""
 
 from __future__ import annotations
 
+import os
+
 from data_lakehouse_platform_spark.catalog import load_table
 from data_lakehouse_platform_spark.operators import dedup as D
 from data_lakehouse_platform_spark.operators import text as T
@@ -129,9 +131,9 @@ def test_incremental_dedup_ledger_spans_batches(spark, tmp_path):
     """Cross-batch dedup: the content-hash ledger persists between
     calls, so a document seen in batch 1 is dropped from batch 2 even
     under a different doc_id; within a batch the lowest id wins; the
-    ledger is a versioned table (one commit per batch)."""
+    ledger is a Delta table (one append per batch)."""
     from data_lakehouse_platform_spark.operators.dedup import incremental_dedup
-    from data_lakehouse_platform_spark.sources.table_format import SnapshotTable
+    from data_lakehouse_platform_spark.sources.delta_lite import DeltaLiteTable
 
     ledger = str(tmp_path / "ledger")
     b1 = spark.createDataFrame(
@@ -148,20 +150,20 @@ def test_incremental_dedup_ledger_spans_batches(spark, tmp_path):
     out2 = incremental_dedup(b2, ledger)
     assert sorted(r["doc_id"] for r in out2.collect()) == [11]  # alpha seen in b1
 
-    t = SnapshotTable(ledger)
-    assert t.latest_version() == 2  # one ledger commit per batch
-    # Log-structured: each version holds only ITS batch's new hashes
+    t = DeltaLiteTable(ledger)
+    assert t.latest_version() == 1  # one ledger commit per batch
+    # Log-structured: each version APPENDS only its batch's new hashes
     # (O(batch) write cost, not an O(corpus) rewrite per batch)...
-    assert t.read(spark, version=2).count() == 1  # just gamma
-    # ...and the live ledger is the union across versions.
-    total = sum(t.read(spark, version=v).count() for v in (1, 2))
-    assert total == 3  # alpha, beta, gamma
-    # empty batch: nothing survives, ledger grows by an empty delta
+    assert t.table_changes(spark, 0, 1).count() == 1  # just gamma
+    # ...and the latest version is the union across appends.
+    assert t.read(spark).count() == 3  # alpha, beta, gamma
+    # empty batch: nothing survives, the ledger gains an empty append
     out3 = incremental_dedup(
         spark.createDataFrame([], "doc_id long, text string"), ledger
     )
-    assert out3.count() == 0 and t.read(spark).count() == 0
-    # and the union-ledger still blocks everything already seen
+    assert out3.count() == 0
+    assert t.latest_version() == 2 and t.read(spark).count() == 3
+    # and the ledger still blocks everything already seen
     out4 = incremental_dedup(
         spark.createDataFrame([(99, "beta text")], "doc_id long, text string"), ledger
     )
@@ -184,25 +186,45 @@ def test_incremental_dedup_null_text_does_not_leak(spark, tmp_path):
     assert out2.count() == 0
 
 
-def test_incremental_dedup_compaction_bounds_versions(spark, tmp_path):
-    """After compact_every deltas the ledger folds into one full
-    snapshot and vacuums the chain — version count and dead bytes stay
-    bounded under continuous ingest, and dedup stays exact across the
-    fold."""
+def test_incremental_dedup_compaction_bounds_files(spark, tmp_path):
+    """Every compact_every-th append first folds the ledger (OPTIMIZE,
+    then VACUUM of the superseded files) — live files and dead bytes
+    stay bounded under continuous ingest, and dedup stays exact across
+    the fold.  The fold runs before the ledger read, so even a folding
+    call's lazy result never reads a file its own vacuum deleted."""
     from data_lakehouse_platform_spark.operators.dedup import incremental_dedup
-    from data_lakehouse_platform_spark.sources.table_format import SnapshotTable
+    from data_lakehouse_platform_spark.sources.delta_lite import DeltaLiteTable
 
     ledger = str(tmp_path / "ledger")
     for i in range(7):
-        incremental_dedup(
-            spark.createDataFrame([(i, f"doc {i}")], "doc_id long, text string"),
+        out = incremental_dedup(
+            spark.createDataFrame(
+                [(i, f"doc {i}"), (10 + i, "doc 0")], "doc_id long, text string"
+            ),
             ledger,
             compact_every=3,
         )
-    t = SnapshotTable(ledger)
-    ops = [s.operation for s in t.history()]
-    assert "dedup-ledger-full" in ops  # a fold happened
-    assert len(ops) <= 4  # vacuum reclaimed the superseded chain
+        want = [0] if i == 0 else [i]  # "doc 0" is only new in call 1
+        assert [r["doc_id"] for r in out.collect()] == want
+    t = DeltaLiteTable(ledger)
+    ops = [c["operation"] for c in t.history()]
+    assert ops.count("OPTIMIZE") == 3  # calls 3, 5 and 7 folded
+    # the last fold left one compacted file plus call 7's append, and
+    # vacuum removed every file the latest version does not reference
+    _meta, live_files, _proto = t._replay(t.latest_version())
+    live = {os.path.abspath(os.path.join(ledger, p)) for p in live_files}
+    on_disk = {
+        os.path.abspath(os.path.join(root, f))
+        for root, _dirs, files in os.walk(ledger)
+        if "_delta_log" not in root
+        for f in files
+        if f.endswith(".parquet")
+    }
+    assert on_disk == live
+    last_adds = [
+        a for a in t._actions(t.latest_version()) if "add" in a
+    ]
+    assert len(live) <= 1 + len(last_adds)
     # exactness across the fold: everything ever seen still blocks
     replay = spark.createDataFrame(
         [(100 + i, f"doc {i}") for i in range(7)], "doc_id long, text string"

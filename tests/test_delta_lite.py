@@ -185,29 +185,13 @@ def test_reader_ignores_orphan_staging_data(spark, tmp_path):
     assert sorted(r.id for r in t.read(spark).collect()) == [1]
 
 
-def test_snapshot_table_interchange(spark, tmp_path):
-    """The engine's native SnapshotTable content can be exported to a
-    Delta-protocol table and read back identically — the migration
-    edge a reference user needs."""
-    from data_lakehouse_platform_spark.sources.table_format import SnapshotTable
-
-    st = SnapshotTable(str(tmp_path / "native"))
-    st.write_snapshot(_df(spark, [(1, "a"), (2, "b")]))
-    dt = DeltaLiteTable(str(tmp_path / "delta"))
-    dt.write(st.read(spark))
-    assert sorted((r.id, r.val) for r in dt.read(spark).collect()) == [
-        (1, "a"),
-        (2, "b"),
-    ]
-
-
 def test_overwrite_lost_race_aborts_not_corrupts(spark, tmp_path):
     """An overwrite whose remove list was computed against a stale
     snapshot must ABORT on a lost commit race (Delta's concurrent-
     modification semantics), never blind-retry one slot later."""
     import os
     import pytest
-    from data_lakehouse_platform_spark.sources.table_format import (
+    from data_lakehouse_platform_spark.sources.commit_backend import (
         ConcurrentModificationError,
     )
 
@@ -1150,6 +1134,32 @@ def test_table_changes_snapshot_diff(spark, tmp_path):
     assert t.table_changes(spark, 2, 2, keys=["id"]).count() == 0
     with pytest.raises(ValueError, match="version range"):
         t.table_changes(spark, 2, 0)
+
+
+def test_table_changes_null_keyed_rows(spark, tmp_path):
+    """The keyed diff treats a NULL key like any other key (null-safe
+    match): unchanged NULL-keyed rows emit nothing, and an updated one
+    emits an update_preimage / update_postimage pair — never a
+    delete + insert."""
+    schema = "k bigint, g string, v double"
+    t = DeltaLiteTable(str(tmp_path / "nullkey"))
+    t.write(spark.createDataFrame([(None, "a", 1.0), (1, "b", 2.0)], schema))
+    t.write(
+        spark.createDataFrame([(None, "a", 1.0), (1, "b", 2.0)], schema),
+        mode="overwrite",
+    )
+    assert t.table_changes(spark, 0, 1, keys=["k"]).count() == 0
+
+    t.write(
+        spark.createDataFrame([(None, "a", 9.0), (1, "b", 2.0)], schema),
+        mode="overwrite",
+    )
+    cdf = t.table_changes(spark, 1, 2, keys=["k"]).collect()
+    assert sorted((r._change_type, r.v) for r in cdf) == [
+        ("update_postimage", 9.0),
+        ("update_preimage", 1.0),
+    ]
+    assert all(r.k is None for r in cdf)
 
 
 def test_dv_delete_on_partitioned_table(spark, tmp_path):

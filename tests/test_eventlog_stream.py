@@ -327,55 +327,6 @@ def test_eventlog_watermarked_window_agg(spark, tmp_path):
     assert got.where(F.col("w.start") >= "2024-01-02 00:00:00").count() == 0
 
 
-def test_eventlog_to_snapshot_bronze_exactly_once(spark, tmp_path):
-    """The reference's core real-time flow — Kafka topic -> consumer ->
-    Delta bronze merge — end to end on this stack: eventlog source
-    (real offsets) -> upsert_stream_to_snapshot (last-writer-wins CDC
-    merge, txn-id exactly-once table versions), across a
-    stop/append/restart cycle with an overlapping key update."""
-    from pyspark.sql import functions as F
-    from data_lakehouse_platform_spark.sources.table_format import SnapshotTable
-    from data_lakehouse_platform_spark.streaming.pipelines import (
-        upsert_stream_to_snapshot,
-    )
-
-    spark.dataSource.register(EventLogStreamDataSource)
-    log = str(tmp_path / "topic")
-    tbl = str(tmp_path / "bronze")
-    ck = str(tmp_path / "ck")
-
-    append_segment(log, _rows(0, 6))  # event_ids 0..5, day 1
-
-    def run():
-        src = (
-            spark.readStream.format("eventlog").option("path", log).load()
-            .withColumn("ets", F.to_timestamp("ts"))
-        )
-        q = upsert_stream_to_snapshot(
-            src, tbl, key_cols=["event_id"], ts_col="ets", checkpoint_path=ck
-        )
-        q.awaitTermination(120)
-
-    run()
-    t = SnapshotTable(tbl)
-    assert t.read(spark).count() == 6
-
-    # while down: a late UPDATE for event 3 (newer ts) + new events
-    upd = dict(_rows(0, 6)[3])
-    upd["ts"] = "2024-01-05 00:00:00"
-    upd["value"] = 999.0
-    append_segment(log, [upd] + _rows(1, 4))
-    run()
-
-    got = t.read(spark)
-    assert got.count() == 10  # 6 + 4 new, update merged not appended
-    assert got.where(F.col("event_id") == 3).collect()[0].value == 999.0
-    # replay safety: restarting with no new data commits no new version
-    v = t.latest_version()
-    run()
-    assert t.latest_version() == v
-
-
 def test_eventlog_bootstrap_then_tail(spark, tmp_path):
     """The kappa bootstrap pattern startingSegment exists for: batch-
     read the history [0, N) for a backfill, then tail the stream from
@@ -572,9 +523,11 @@ def test_upsert_sink_equal_ts_deterministic_winner(spark, tmp_path):
     """Two conflicting updates for one key with the SAME event ts must
     converge deterministically (content-fingerprint tiebreak), not to
     whichever row an arbitrary partition order produced."""
-    from data_lakehouse_platform_spark.sources.table_format import SnapshotTable
+    from data_lakehouse_platform_spark.sources.delta_lite import (
+        DeltaLiteTable,
+    )
     from data_lakehouse_platform_spark.streaming.pipelines import (
-        upsert_stream_to_snapshot,
+        upsert_stream_to_delta_lite,
     )
 
     spark.dataSource.register(EventLogStreamDataSource)
@@ -590,22 +543,22 @@ def test_upsert_sink_equal_ts_deterministic_winner(spark, tmp_path):
         spark.readStream.format("eventlog").option("path", log).load()
         .withColumn("ets", F.to_timestamp("ts"))
     )
-    q = upsert_stream_to_snapshot(
+    q = upsert_stream_to_delta_lite(
         src, tbl, key_cols=["event_id"], ts_col="ets",
         checkpoint_path=str(tmp_path / "ck"),
     )
     q.awaitTermination(120)
-    got = SnapshotTable(tbl).read(spark).collect()
+    got = DeltaLiteTable(tbl).read(spark).collect()
     assert len(got) == 1
     # the tiebreak is deterministic: re-running from scratch converges
     # to the same winner
     tbl2 = str(tmp_path / "tbl2")
-    q = upsert_stream_to_snapshot(
+    q = upsert_stream_to_delta_lite(
         src, tbl2, key_cols=["event_id"], ts_col="ets",
         checkpoint_path=str(tmp_path / "ck2"),
     )
     q.awaitTermination(120)
-    got2 = SnapshotTable(tbl2).read(spark).collect()
+    got2 = DeltaLiteTable(tbl2).read(spark).collect()
     assert [(r.event_type, r.value) for r in got] == [
         (r.event_type, r.value) for r in got2
     ]

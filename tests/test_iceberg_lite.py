@@ -455,50 +455,27 @@ def test_iceberg_write_nested_types_roundtrip(spark, tmp_path):
         t.write(other, mode="append")
 
 
-def test_iceberg_write_interop_with_snapshot_table(spark, tmp_path):
-    """Migration capstone: engine-native SnapshotTable content exported
-    to Iceberg and read back identically."""
-    from data_lakehouse_platform_spark.sources.table_format import (
-        SnapshotTable,
-    )
-
-    st = SnapshotTable(str(tmp_path / "native"))
-    st.write_snapshot(
-        spark.createDataFrame([(1, "a"), (2, "b")], "id long, val string")
-    )
-    ice = IcebergLiteTable(str(tmp_path / "ice"))
-    ice.write(st.read(spark))
-    assert sorted((r.id, r.val) for r in ice.read(spark).collect()) == [
-        (1, "a"), (2, "b")
-    ]
-
-
 def test_cross_format_triangle_capstone(spark, tmp_path):
-    """Migration capstone across all three table surfaces: engine-native
-    SnapshotTable content flows into a Delta table, survives a
-    deletion-vector DELETE and a copy-on-write MERGE there, exports to
-    an Iceberg v2 snapshot, and reads back identically everywhere —
-    the full escape hatch a reference user needs in either direction."""
+    """Migration capstone across both table formats: DataFrame content
+    flows into a Delta table, survives a deletion-vector DELETE and a
+    copy-on-write MERGE there, exports to an Iceberg v2 snapshot, comes
+    back into a fresh Delta table, and reads back identically
+    everywhere — the full escape hatch a reference user needs in
+    either direction."""
     from data_lakehouse_platform_spark.sources.delta_lite import (
         DeltaLiteTable,
-    )
-    from data_lakehouse_platform_spark.sources.table_format import (
-        SnapshotTable,
     )
 
     def rows(df):
         return sorted((r.id, r.val) for r in df.collect())
 
-    st = SnapshotTable(str(tmp_path / "native"))
-    st.write_snapshot(
-        spark.createDataFrame(
-            [(i, c) for i, c in enumerate("abcdef", start=1)],
-            "id long, val string",
-        )
+    source = spark.createDataFrame(
+        [(i, c) for i, c in enumerate("abcdef", start=1)],
+        "id long, val string",
     )
 
     dl = DeltaLiteTable(str(tmp_path / "delta"))
-    dl.write(st.read(spark).coalesce(2))
+    dl.write(source.coalesce(2))
     dl.delete(spark, "id IN (2, 5)")          # DV path, no rewrite
     dl.merge(
         spark,
@@ -512,8 +489,8 @@ def test_cross_format_triangle_capstone(spark, tmp_path):
     ice.write(dl.read(spark))
     assert rows(ice.read(spark)) == expect
 
-    back = SnapshotTable(str(tmp_path / "roundtrip"))
-    back.write_snapshot(ice.read(spark))
+    back = DeltaLiteTable(str(tmp_path / "roundtrip"))
+    back.write(ice.read(spark))
     assert rows(back.read(spark)) == expect
 
 

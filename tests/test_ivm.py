@@ -1,6 +1,6 @@
-"""Incremental view maintenance over the snapshot table's change data
-feed: applying CDF deltas to a grouped-aggregate view must be
-bit-identical to a full rebuild at the target version — including
+"""Incremental view maintenance over a Delta table's change feed
+(keyed table_changes): applying CDF deltas to a grouped-aggregate view
+must be bit-identical to a full rebuild at the target version — including
 updates, inserts, deletes, group births, and group deaths."""
 
 from __future__ import annotations
@@ -14,7 +14,7 @@ from data_lakehouse_platform_spark.operators.ivm import (
     apply_delta,
     changes_to_delta,
 )
-from data_lakehouse_platform_spark.sources.table_format import SnapshotTable
+from data_lakehouse_platform_spark.sources.delta_lite import DeltaLiteTable
 
 _SCHEMA = "k bigint, grp string, amount double"
 
@@ -43,18 +43,18 @@ def _canon(df):
 
 
 def test_cdf_delta_apply_equals_full_rebuild(spark, tmp_path):
-    tbl = SnapshotTable(str(tmp_path / "t"))
-    v0 = tbl.write_snapshot(spark.createDataFrame(_V0, _SCHEMA))
-    v1 = tbl.write_snapshot(spark.createDataFrame(_V1, _SCHEMA))
+    tbl = DeltaLiteTable(str(tmp_path / "t"))
+    v0 = tbl.write(spark.createDataFrame(_V0, _SCHEMA), mode="overwrite")
+    v1 = tbl.write(spark.createDataFrame(_V1, _SCHEMA), mode="overwrite")
 
     measures = {"amount": "amount"}
-    view = agg_state(tbl.read(spark, v0), ["grp"], measures)
+    view = agg_state(tbl.read(spark, version=v0), ["grp"], measures)
 
-    cdf = tbl.changes(spark, ["k"], v0, v1)
+    cdf = tbl.table_changes(spark, v0, v1, keys=["k"])
     delta = changes_to_delta(cdf, ["grp"], measures)
     maintained = apply_delta(view, delta, ["grp"], ["amount"])
 
-    rebuilt = agg_state(tbl.read(spark, v1), ["grp"], measures)
+    rebuilt = agg_state(tbl.read(spark, version=v1), ["grp"], measures)
     assert _canon(maintained) == _canon(rebuilt)
     # group c (all rows deleted) is gone; group d (born) is present
     grps = {r.grp for r in maintained.collect()}
@@ -64,14 +64,15 @@ def test_cdf_delta_apply_equals_full_rebuild(spark, tmp_path):
 def test_delta_chain_across_many_versions(spark, tmp_path):
     """Maintaining the view through a chain of versions — apply each
     version's delta in turn — still matches the final full rebuild."""
-    tbl = SnapshotTable(str(tmp_path / "chain"))
+    tbl = DeltaLiteTable(str(tmp_path / "chain"))
     rows = {k: ("g" + str(k % 3), float(k)) for k in range(1, 21)}
 
     def snap():
-        return tbl.write_snapshot(
+        return tbl.write(
             spark.createDataFrame(
                 [(k, g, a) for k, (g, a) in sorted(rows.items())], _SCHEMA
-            )
+            ),
+            mode="overwrite",
         )
 
     versions = [snap()]
@@ -89,25 +90,30 @@ def test_delta_chain_across_many_versions(spark, tmp_path):
     versions.append(snap())
 
     measures = {"amount": "amount"}
-    view = agg_state(tbl.read(spark, versions[0]), ["grp"], measures)
+    view = agg_state(
+        tbl.read(spark, version=versions[0]), ["grp"], measures
+    )
     for frm, to in zip(versions, versions[1:]):
-        cdf = tbl.changes(spark, ["k"], frm, to)
+        cdf = tbl.table_changes(spark, frm, to, keys=["k"])
         view = apply_delta(
             view, changes_to_delta(cdf, ["grp"], measures), ["grp"], ["amount"]
         )
 
-    rebuilt = agg_state(tbl.read(spark, versions[-1]), ["grp"], measures)
+    rebuilt = agg_state(
+        tbl.read(spark, version=versions[-1]), ["grp"], measures
+    )
     assert _canon(view) == _canon(rebuilt)
 
 
 def test_unchanged_groups_survive_and_zero_delta_noop(spark, tmp_path):
-    tbl = SnapshotTable(str(tmp_path / "noop"))
-    v0 = tbl.write_snapshot(spark.createDataFrame(_V0, _SCHEMA))
-    v1 = tbl.write_snapshot(spark.createDataFrame(_V0, _SCHEMA))  # no change
+    tbl = DeltaLiteTable(str(tmp_path / "noop"))
+    v0 = tbl.write(spark.createDataFrame(_V0, _SCHEMA), mode="overwrite")
+    # no change
+    v1 = tbl.write(spark.createDataFrame(_V0, _SCHEMA), mode="overwrite")
 
     measures = {"amount": "amount"}
-    view = agg_state(tbl.read(spark, v0), ["grp"], measures)
-    cdf = tbl.changes(spark, ["k"], v0, v1)
+    view = agg_state(tbl.read(spark, version=v0), ["grp"], measures)
+    cdf = tbl.table_changes(spark, v0, v1, keys=["k"])
     assert cdf.count() == 0  # fingerprint diff: nothing changed
     maintained = apply_delta(
         view, changes_to_delta(cdf, ["grp"], measures), ["grp"], ["amount"]
@@ -145,7 +151,7 @@ _chain = st.lists(
 @given(_chain)
 @settings(**_SETTINGS)
 def test_ivm_property_random_chains(spark, tmp_path_factory, chain):
-    tbl = SnapshotTable(str(tmp_path_factory.mktemp("ivmprop")))
+    tbl = DeltaLiteTable(str(tmp_path_factory.mktemp("ivmprop")))
     state: dict[int, tuple[str, float]] = {
         k: ("g0", float(k)) for k in range(3)
     }
@@ -154,7 +160,7 @@ def test_ivm_property_random_chains(spark, tmp_path_factory, chain):
         rows = [(k, g, a) for k, (g, a) in sorted(state.items())]
         if not rows:
             rows = [(-1, "g_sentinel", 0.0)]  # keep snapshots non-empty
-        return tbl.write_snapshot(spark.createDataFrame(rows, _SCHEMA))
+        return tbl.write(spark.createDataFrame(rows, _SCHEMA), mode="overwrite")
 
     versions = [snap()]
     for batch in chain:
@@ -166,13 +172,17 @@ def test_ivm_property_random_chains(spark, tmp_path_factory, chain):
         versions.append(snap())
 
     measures = {"amount": "amount"}
-    view = agg_state(tbl.read(spark, versions[0]), ["grp"], measures)
+    view = agg_state(
+        tbl.read(spark, version=versions[0]), ["grp"], measures
+    )
     for frm, to in zip(versions, versions[1:]):
-        cdf = tbl.changes(spark, ["k"], frm, to)
+        cdf = tbl.table_changes(spark, frm, to, keys=["k"])
         view = apply_delta(
             view, changes_to_delta(cdf, ["grp"], measures), ["grp"], ["amount"]
         )
-    rebuilt = agg_state(tbl.read(spark, versions[-1]), ["grp"], measures)
+    rebuilt = agg_state(
+        tbl.read(spark, version=versions[-1]), ["grp"], measures
+    )
     assert _canon(view) == _canon(rebuilt)
 
 
@@ -200,29 +210,37 @@ def test_join_view_delta_equals_rebuild_both_sides_change(spark, tmp_path):
         join_changes_to_delta,
     )
 
-    ta = SnapshotTable(str(tmp_path / "a"))
-    tb = SnapshotTable(str(tmp_path / "b"))
-    va0 = ta.write_snapshot(spark.createDataFrame(_A0, _A_SCHEMA))
-    vb0 = tb.write_snapshot(spark.createDataFrame(_B0, _B_SCHEMA))
-    va1 = ta.write_snapshot(spark.createDataFrame(_A1, _A_SCHEMA))
-    vb1 = tb.write_snapshot(spark.createDataFrame(_B1, _B_SCHEMA))
+    ta = DeltaLiteTable(str(tmp_path / "a"))
+    tb = DeltaLiteTable(str(tmp_path / "b"))
+    va0 = ta.write(spark.createDataFrame(_A0, _A_SCHEMA), mode="overwrite")
+    vb0 = tb.write(spark.createDataFrame(_B0, _B_SCHEMA), mode="overwrite")
+    va1 = ta.write(spark.createDataFrame(_A1, _A_SCHEMA), mode="overwrite")
+    vb1 = tb.write(spark.createDataFrame(_B1, _B_SCHEMA), mode="overwrite")
 
     measures = {"amount": "amount", "rate": "rate"}
     view = join_agg_state(
-        ta.read(spark, va0), tb.read(spark, vb0), ["k"], ["grp"], measures
+        ta.read(spark, version=va0),
+        tb.read(spark, version=vb0),
+        ["k"],
+        ["grp"],
+        measures,
     )
     delta = join_changes_to_delta(
-        ta.changes(spark, ["k"], va0, va1),
-        ta.read(spark, va0),
-        tb.changes(spark, ["k"], vb0, vb1),
-        tb.read(spark, vb1),
+        ta.table_changes(spark, va0, va1, keys=["k"]),
+        ta.read(spark, version=va0),
+        tb.table_changes(spark, vb0, vb1, keys=["k"]),
+        tb.read(spark, version=vb1),
         ["k"],
         ["grp"],
         measures,
     )
     maintained = apply_delta(view, delta, ["grp"], ["amount", "rate"])
     rebuilt = join_agg_state(
-        ta.read(spark, va1), tb.read(spark, vb1), ["k"], ["grp"], measures
+        ta.read(spark, version=va1),
+        tb.read(spark, version=vb1),
+        ["k"],
+        ["grp"],
+        measures,
     )
     assert _canon_join(maintained) == _canon_join(rebuilt)
     grps = {r.grp for r in maintained.collect()}
@@ -237,28 +255,36 @@ def test_join_view_one_sided_change(spark, tmp_path):
         join_changes_to_delta,
     )
 
-    ta = SnapshotTable(str(tmp_path / "a1"))
-    tb = SnapshotTable(str(tmp_path / "b1"))
-    va0 = ta.write_snapshot(spark.createDataFrame(_A0, _A_SCHEMA))
-    vb0 = tb.write_snapshot(spark.createDataFrame(_B0, _B_SCHEMA))
-    va1 = ta.write_snapshot(spark.createDataFrame(_A1, _A_SCHEMA))
+    ta = DeltaLiteTable(str(tmp_path / "a1"))
+    tb = DeltaLiteTable(str(tmp_path / "b1"))
+    va0 = ta.write(spark.createDataFrame(_A0, _A_SCHEMA), mode="overwrite")
+    vb0 = tb.write(spark.createDataFrame(_B0, _B_SCHEMA), mode="overwrite")
+    va1 = ta.write(spark.createDataFrame(_A1, _A_SCHEMA), mode="overwrite")
 
     measures = {"amount": "amount", "rate": "rate"}
     view = join_agg_state(
-        ta.read(spark, va0), tb.read(spark, vb0), ["k"], ["grp"], measures
+        ta.read(spark, version=va0),
+        tb.read(spark, version=vb0),
+        ["k"],
+        ["grp"],
+        measures,
     )
-    empty_changes = tb.changes(spark, ["k"], vb0, vb0)
+    empty_changes = tb.table_changes(spark, vb0, vb0, keys=["k"])
     delta = join_changes_to_delta(
-        ta.changes(spark, ["k"], va0, va1),
-        ta.read(spark, va0),
+        ta.table_changes(spark, va0, va1, keys=["k"]),
+        ta.read(spark, version=va0),
         empty_changes,
-        tb.read(spark, vb0),
+        tb.read(spark, version=vb0),
         ["k"],
         ["grp"],
         measures,
     )
     maintained = apply_delta(view, delta, ["grp"], ["amount", "rate"])
     rebuilt = join_agg_state(
-        ta.read(spark, va1), tb.read(spark, vb0), ["k"], ["grp"], measures
+        ta.read(spark, version=va1),
+        tb.read(spark, version=vb0),
+        ["k"],
+        ["grp"],
+        measures,
     )
     assert _canon_join(maintained) == _canon_join(rebuilt)

@@ -21,7 +21,6 @@ _NAMED_APIS = [
     ("data_lakehouse_platform_spark.sources.writers",
      "write_partitioned_by_date"),
     ("data_lakehouse_platform_spark.sources.writers", "scd2_merge"),
-    ("data_lakehouse_platform_spark.sources.table_format", "SnapshotTable"),
     ("data_lakehouse_platform_spark.sources.delta_lite", "DeltaLiteTable"),
     ("data_lakehouse_platform_spark.sources.iceberg_lite",
      "IcebergLiteTable"),
@@ -30,8 +29,6 @@ _NAMED_APIS = [
     ("data_lakehouse_platform_spark.plans.runner", "PipelineRunner"),
     ("data_lakehouse_platform_spark.streaming.pipelines",
      "enrich_stream_with_dim"),
-    ("data_lakehouse_platform_spark.streaming.pipelines",
-     "upsert_stream_to_snapshot"),
     ("data_lakehouse_platform_spark.streaming.pipelines",
      "upsert_stream_to_delta_lite"),
     ("data_lakehouse_platform_spark.streaming.pipelines",

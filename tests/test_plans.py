@@ -238,8 +238,8 @@ def test_lakehouse_facade(spark, tmp_path):
     assert lh.sql("SELECT COUNT(*) AS n FROM lineitem").collect()[0]["n"] > 0
     assert "revenue" in lh.query("q6_forecast_revenue").columns
     assert "dedup_minhash_lsh" in lh.query_names()
-    t = lh.snapshot(str(tmp_path / "t"))
-    t.write_snapshot(lh.table("region"))
+    t = lh.delta(str(tmp_path / "t"))
+    t.write(lh.table("region"))
     assert t.read(spark).count() == lh.table("region").count()
 
 

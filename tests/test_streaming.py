@@ -260,51 +260,6 @@ def test_stream_stream_band_join(spark, tmp_path):
     assert got == {(1, 5.0), (2, 9.0)}
 
 
-def test_upsert_stream_to_snapshot(spark, tmp_path):
-    """CDC micro-batches merge into the versioned snapshot table with
-    ts last-writer-wins; history records one version per batch and
-    time travel still sees the pre-merge state."""
-    from data_lakehouse_platform_spark.sources.table_format import SnapshotTable
-    from data_lakehouse_platform_spark.streaming.pipelines import (
-        read_event_stream,
-        upsert_stream_to_snapshot,
-    )
-
-    src = tmp_path / "cdc"
-    src.mkdir()
-
-    def rows(ids_ts):
-        return "\n".join(
-            json.dumps(
-                {"event_id": i, "ts": ts, "user_id": i, "event_type": "upd",
-                 "value": float(v), "props": "{}"}
-            )
-            for i, ts, v in ids_ts
-        )
-
-    # batch 1: keys 1-4 at t01; batch 2: keys 3-6 at t02 (3,4 updated)
-    # batch 3: key 3 with an OLDER ts — must NOT win over batch 2's row
-    (src / "f1.json").write_text(rows([(i, "2024-01-01T01:00:00", 10 + i) for i in (1, 2, 3, 4)]))
-    (src / "f2.json").write_text(rows([(i, "2024-01-01T02:00:00", 20 + i) for i in (3, 4, 5, 6)]))
-    (src / "f3.json").write_text(rows([(3, "2024-01-01T00:30:00", 99)]))
-
-    stream = read_event_stream(spark, str(src), max_files_per_trigger=1)
-    table_path = str(tmp_path / "table")
-    q = upsert_stream_to_snapshot(
-        stream, table_path, ["event_id"], "ts", str(tmp_path / "ckpt")
-    )
-    q.awaitTermination(120)
-
-    table = SnapshotTable(table_path)
-    final = {r["event_id"]: r["value"] for r in table.read(spark).collect()}
-    assert final == {1: 11.0, 2: 12.0, 3: 23.0, 4: 24.0, 5: 25.0, 6: 26.0}
-    hist = table.history()
-    assert len(hist) == 3 and all("stream-upsert" in s.operation for s in hist)
-    # time travel: version 1 predates the updates
-    v1 = {r["event_id"]: r["value"] for r in table.read(spark, version=1).collect()}
-    assert v1 == {1: 11.0, 2: 12.0, 3: 13.0, 4: 14.0}
-
-
 def test_sliding_window_stream_matches_batch(spark, tmp_path):
     """Sliding windows drained via availableNow equal the batch-mode
     sliding-window aggregation on the same rows (overlap factor 2)."""
@@ -350,14 +305,16 @@ def test_sliding_window_stream_matches_batch(spark, tmp_path):
 
 
 def test_stream_commits_produce_change_feed(spark, tmp_path):
-    """The CDC upsert sink's per-batch snapshot commits compose with
-    changes(): the version-to-version feed shows exactly what each
-    micro-batch inserted/updated, and a stale row never surfaces as a
-    change."""
-    from data_lakehouse_platform_spark.sources.table_format import SnapshotTable
+    """The CDC upsert sink's per-batch Delta commits compose with
+    table_changes(): the version-to-version feed shows exactly what
+    each micro-batch inserted/updated, and a stale row never surfaces
+    as a change."""
+    from data_lakehouse_platform_spark.sources.delta_lite import (
+        DeltaLiteTable,
+    )
     from data_lakehouse_platform_spark.streaming.pipelines import (
         read_event_stream,
-        upsert_stream_to_snapshot,
+        upsert_stream_to_delta_lite,
     )
 
     src = tmp_path / "cdc"
@@ -378,28 +335,28 @@ def test_stream_commits_produce_change_feed(spark, tmp_path):
 
     stream = read_event_stream(spark, str(src), max_files_per_trigger=1)
     table_path = str(tmp_path / "table")
-    q = upsert_stream_to_snapshot(
+    q = upsert_stream_to_delta_lite(
         stream, table_path, ["event_id"], "ts", str(tmp_path / "ckpt")
     )
     q.awaitTermination(120)
 
-    t = SnapshotTable(table_path)
-    assert t.latest_version() == 3
+    t = DeltaLiteTable(table_path)
+    assert t.latest_version() == 2
 
     # Batch 2 vs batch 1: key 2 updated (12 -> 99), key 3 inserted.
-    feed12 = {
+    feed01 = {
         (r["event_id"], r["_change_type"]): r["value"]
-        for r in t.changes(spark, ["event_id"], 1, 2).collect()
+        for r in t.table_changes(spark, 0, 1, keys=["event_id"]).collect()
     }
-    assert feed12 == {
+    assert feed01 == {
         (2, "update_preimage"): 12.0,
         (2, "update_postimage"): 99.0,
         (3, "insert"): 13.0,
     }
 
-    # Batch 3 carried only a stale row: the LWW merge keeps v2's data,
-    # so the change feed between v2 and v3 is EMPTY.
-    assert t.changes(spark, ["event_id"], 2, 3).count() == 0
+    # Batch 3 carried only a stale row: the LWW merge keeps v1's data,
+    # so the change feed between v1 and v2 is EMPTY.
+    assert t.table_changes(spark, 1, 2, keys=["event_id"]).count() == 0
 
 
 def test_order_tracker_transform_with_state(spark, tmp_path):
@@ -501,15 +458,19 @@ def test_stream_checkpoint_resume_exactly_once(spark, tmp_path):
 
 def test_fanout_stream_two_sinks_exactly_once(spark, tmp_path):
     """One stream, two sinks in one foreachBatch: raw archive and a
-    running aggregate snapshot both converge; draining again with new
-    data only appends the new contribution (idempotent legs)."""
+    running aggregate Delta table both converge; draining again with
+    new data only adds the new contribution (idempotent legs), and a
+    NULL key folds into ONE row like any other key."""
     from data_lakehouse_platform_spark.streaming.pipelines import (
         fanout_stream_to_sinks,
     )
-    from data_lakehouse_platform_spark.sources.table_format import SnapshotTable
+    from data_lakehouse_platform_spark.sources.delta_lite import (
+        DeltaLiteTable,
+    )
 
     src = tmp_path / "in"
     src.mkdir()
+    ckpt = str(tmp_path / "ckpt")
 
     def write_batch(name, rows):
         (src / name).write_text(
@@ -523,23 +484,28 @@ def test_fanout_stream_two_sinks_exactly_once(spark, tmp_path):
             raw_path=str(tmp_path / "raw"),
             agg_table_path=str(tmp_path / "agg"),
             agg_key="k",
-            checkpoint_path=str(tmp_path / "ckpt"),
+            checkpoint_path=ckpt,
         )
         q.awaitTermination(120)
 
-    write_batch("b0.json", ["a", "a", "b"])
+    write_batch("b0.json", ["a", "a", "b", None])
     drain()
-    t = SnapshotTable(str(tmp_path / "agg"))
+    t = DeltaLiteTable(str(tmp_path / "agg"))
     agg1 = {r["k"]: r["n"] for r in t.read(spark).collect()}
-    assert agg1 == {"a": 2, "b": 1}
+    assert agg1 == {"a": 2, "b": 1, None: 1}
     raw1 = spark.read.parquet(str(tmp_path / "raw")).count()
-    assert raw1 == 3
+    assert raw1 == 4
 
-    write_batch("b1.json", ["b", "c"])
+    write_batch("b1.json", ["b", "c", None])
     drain()
-    agg2 = {r["k"]: r["n"] for r in t.read(spark).collect()}
-    assert agg2 == {"a": 2, "b": 2, "c": 1}
-    assert spark.read.parquet(str(tmp_path / "raw")).count() == 5
+    got = [(r["k"], r["n"]) for r in t.read(spark).collect()]
+    assert sorted(got, key=repr) == sorted(
+        [("a", 2), ("b", 2), ("c", 1), (None, 2)], key=repr
+    )  # one NULL row carrying the summed count
+    assert spark.read.parquet(str(tmp_path / "raw")).count() == 7
+    # one commit per batch, stamped for exactly-once replay
+    assert t.latest_version() == 1
+    assert t.txn_versions() == {f"stream:{ckpt}": 1}
 
 
 def test_watermark_merges_late_within_delay_once(spark, tmp_path):
