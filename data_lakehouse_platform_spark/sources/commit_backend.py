@@ -413,14 +413,20 @@ class ObjectStoreCommitSlots:
             return
         _state, token, staged = entry.split("|", 2)
         if not self._store.exists(key):
-            if self._store.exists(staged):
+            try:
                 self._store.put(key, self._store.get(staged))
-            else:
-                raise RuntimeError(
-                    f"commit slot {key!r} is wedged: claim is pending "
-                    "but neither the final object nor its staged "
-                    f"payload ({staged!r}) exists — manual repair "
-                    "required"
-                )
+            except FileNotFoundError:
+                # the winner (or another recoverer) promoted and then
+                # deleted the staged payload after our EXISTS check;
+                # every promoter PUTs the final key before that
+                # DELETE, so the slot is wedged only if it is still
+                # missing now
+                if not self._store.exists(key):
+                    raise RuntimeError(
+                        f"commit slot {key!r} is wedged: claim is "
+                        "pending but neither the final object nor its "
+                        f"staged payload ({staged!r}) exists — manual "
+                        "repair required"
+                    )
         self._claims[key] = f"{self._COMPLETE}|{token}"
         self._store.delete(staged)

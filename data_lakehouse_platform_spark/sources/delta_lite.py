@@ -2400,7 +2400,12 @@ class DeltaLiteTable:
             c for c in current.columns
             if c not in ("__dv_path", "__dv_ridx")
         ]
-        if sorted(source.columns) != sorted(data_cols):
+        # types too, like write(): a source column of another type
+        # would commit files the table schema cannot read
+        cur_types = {f.name: f.dataType for f in current.schema.fields}
+        if sorted(source.columns) != sorted(data_cols) or any(
+            f.dataType != cur_types[f.name] for f in source.schema.fields
+        ):
             raise ValueError(
                 "source schema differs from table schema; Delta-lite "
                 "does not evolve schemas implicitly — align the "

@@ -340,6 +340,40 @@ def test_objectstore_winner_survives_concurrent_recovery(tmp_path):
     assert not [p for p in os.listdir(tmp_path) if p.endswith(".staged")]
 
 
+def test_objectstore_recovery_racing_live_winner_reports_occupied(tmp_path):
+    """The mirror race: a loser recovering a 'pending' claim sees no
+    final object, but the live winner promotes and deletes its staged
+    object before the loser's GET of it.  The slot holds the winner's
+    bytes, so the loser must report it occupied — not raise
+    FileNotFoundError or call the slot wedged."""
+    claims: dict = {}
+    slot = str(tmp_path / "00000000000000000001.json")
+    key = os.path.abspath(slot)
+    staged = f"{key}.live.staged"
+    store = LocalObjectStore()
+    store.put(staged, b"WINNER")
+    claims[key] = f"pending|pid:1:call:live|{staged}"
+
+    loser = ObjectStoreCommitSlots(claims)
+    real_get = loser._store.get
+
+    def racing_get(k):
+        if k == staged:
+            # the winner's step 3 lands first: PUT final, mark
+            # complete, DELETE staged
+            store.put(key, store.get(staged))
+            claims[key] = "complete|pid:1:call:live"
+            store.delete(staged)
+        return real_get(k)
+
+    loser._store.get = racing_get
+    assert loser.put_if_absent(slot, b"loser") is False
+    with open(slot, "rb") as fh:
+        assert fh.read() == b"WINNER"
+    assert claims[key].startswith("complete|")
+    assert not [p for p in os.listdir(tmp_path) if p.endswith(".staged")]
+
+
 def test_objectstore_wedged_slot_does_not_leak_staged(tmp_path):
     """ADVICE r8 (low): when _recover raises the wedged-slot error the
     loser must still clean up its own freshly staged object."""

@@ -32,6 +32,8 @@ _NAMED_APIS = [
     ("data_lakehouse_platform_spark.streaming.pipelines",
      "upsert_stream_to_delta_lite"),
     ("data_lakehouse_platform_spark.streaming.pipelines",
+     "upsert_stream_to_iceberg"),
+    ("data_lakehouse_platform_spark.streaming.pipelines",
      "fanout_stream_to_sinks"),
     ("data_lakehouse_platform_spark.streaming.order_tracker",
      "track_order_completion"),
@@ -62,6 +64,16 @@ _NAMED_METHODS = [
      "IcebergLiteTable", "rewrite_data_files"),
     ("data_lakehouse_platform_spark.sources.delta_lite",
      "DeltaLiteTable", "clone_to"),
+    ("data_lakehouse_platform_spark.sources.delta_lite",
+     "DeltaLiteTable", "restore"),
+    ("data_lakehouse_platform_spark.sources.delta_lite",
+     "DeltaLiteTable", "vacuum"),
+    ("data_lakehouse_platform_spark.sources.delta_lite",
+     "DeltaLiteTable", "table_changes"),
+    ("data_lakehouse_platform_spark.sources.delta_lite",
+     "DeltaLiteTable", "merge"),
+    ("data_lakehouse_platform_spark.sources.delta_lite",
+     "DeltaLiteTable", "optimize"),
     ("data_lakehouse_platform_spark.sources.delta_lite",
      "DeltaLiteTable", "convert_from_parquet"),
     ("data_lakehouse_platform_spark.sources.iceberg_lite",
