@@ -15,6 +15,8 @@ import json
 import os
 import re
 
+import pytest
+
 from data_lakehouse_platform_spark.sources.delta_lite import DeltaLiteTable
 from data_lakehouse_platform_spark.sources.iceberg_lite import (
     IcebergLiteTable,
@@ -352,3 +354,123 @@ def test_fresh_v3dv_build_matches_golden_shapes(spark, tmp_path):
     got = sorted(r.id for r in fresh.read(spark).collect())
     want = sorted(r.id for r in golden.read(spark).collect())
     assert got == want
+
+
+def _seed_row(i):
+    return (i, i % 3, f"row-{i}", i * 2.5)
+
+
+def test_golden_schema_evolved_iceberg_reads_bit_exact(spark):
+    """Schema-evolved fixture: one data file per schema (add ``extra``,
+    rename ``name`` -> ``label``, drop and re-add ``score``, promote
+    ``id`` int -> long).  Every snapshot reads through ITS OWN schema,
+    with older files resolved by field id: a renamed column keeps its
+    values, an added column reads NULL, a re-added name reads NULL
+    (new field id, never the dropped data), an int file casts up."""
+    t = IcebergLiteTable(os.path.join(GOLDEN, "iceberg_schema_evolved"))
+    snaps = t.metadata()["snapshots"]
+    assert [int(s["snapshot-id"]) for s in snaps] == [1, 2, 3, 4, 5]
+    assert [int(s["schema-id"]) for s in snaps] == [0, 1, 2, 4, 5]
+
+    def extra(i):
+        return i * 100 if i >= 4 else None
+
+    def new_score(i):
+        return float(-i) if i >= 8 else None
+
+    base = [("id", "int"), ("bucket", "int")]
+    expect = {
+        1: (base + [("name", "string"), ("score", "double")],
+            [_seed_row(i) for i in range(4)]),
+        2: (base + [("name", "string"), ("score", "double"),
+                    ("extra", "bigint")],
+            [_seed_row(i) + (extra(i),) for i in range(6)]),
+        3: (base + [("label", "string"), ("score", "double"),
+                    ("extra", "bigint")],
+            [_seed_row(i) + (extra(i),) for i in range(8)]),
+        4: (base + [("label", "string"), ("extra", "bigint"),
+                    ("score", "double")],
+            [_seed_row(i)[:3] + (extra(i), new_score(i))
+             for i in range(10)]),
+        5: ([("id", "bigint")] + base[1:]
+            + [("label", "string"), ("extra", "bigint"),
+               ("score", "double")],
+            [_seed_row(i)[:3] + (extra(i), new_score(i))
+             for i in range(12)]),
+    }
+    for sid, (dtypes, rows) in expect.items():
+        df = t.read(spark, snapshot_id=sid)
+        assert df.dtypes == dtypes, sid
+        assert sorted(tuple(r) for r in df.collect()) == sorted(rows), sid
+    latest = t.read(spark)
+    assert latest.dtypes == expect[5][0]
+    assert sorted(tuple(r) for r in latest.collect()) == sorted(expect[5][1])
+
+
+def test_golden_schema_evolved_incremental_read(spark):
+    """The incremental append scan projects every file through the
+    CURRENT schema by field id, pre-rename and pre-promotion files
+    included."""
+    t = IcebergLiteTable(os.path.join(GOLDEN, "iceberg_schema_evolved"))
+    got = sorted(tuple(r) for r in t.incremental_read(spark, 3).collect())
+    assert got == [
+        (i, i % 3, f"row-{i}", i * 100, float(-i)) for i in range(8, 12)
+    ]
+    full = t.incremental_read(spark, None)
+    assert full.columns == ["id", "bucket", "label", "extra", "score"]
+    assert sorted(r.id for r in full.collect()) == list(range(12))
+
+
+def test_golden_spec_evolved_iceberg_reads_bit_exact(spark):
+    """Spec-evolved fixture: ids 0-9 under an identity spec on
+    ``bucket``, ids 10-19 under ``bucket[4]`` of ``id``, then one
+    position delete over both (ids 1 and 11).  Every snapshot reads
+    exactly; each manifest keeps its own spec id; a dict partition
+    filter on a field that only one spec has is refused; predicate
+    reads and manifest-stat pruning stay exact across specs."""
+    from data_lakehouse_platform_spark.sources.avro_lite import (
+        read_container,
+    )
+    from data_lakehouse_platform_spark.sources.iceberg_lite import (
+        IcebergProtocolError,
+    )
+
+    t = IcebergLiteTable(os.path.join(GOLDEN, "iceberg_spec_evolved"))
+    meta = t.metadata()
+    assert [int(s["snapshot-id"]) for s in meta["snapshots"]] == [1, 2, 3]
+    assert [
+        [f["transform"] for f in s["fields"]]
+        for s in meta["partition-specs"]
+    ] == [["identity"], ["bucket[4]"]]
+    expect = {
+        1: [_seed_row(i) for i in range(10)],
+        2: [_seed_row(i) for i in range(20)],
+        3: [_seed_row(i) for i in range(20) if i not in (1, 11)],
+    }
+    for sid, rows in expect.items():
+        got = sorted(
+            tuple(r) for r in t.read(spark, snapshot_id=sid).collect()
+        )
+        assert got == sorted(rows), sid
+
+    cur = next(s for s in meta["snapshots"] if s["snapshot-id"] == 3)
+    _, ml = read_container(cur["manifest-list"])
+    assert {
+        int(r["partition_spec_id"]) for r in ml if int(r["content"]) == 0
+    } == {0, 1}
+    data_files, deletes = t.plan_files()
+    assert sorted({tuple(part) for _p, _s, part in data_files}) == [
+        ("bucket",), ("id_bucket",)
+    ]
+    assert [d["kind"] for d in deletes] == ["pos"]
+
+    with pytest.raises(IcebergProtocolError, match="not\\s+present on every"):
+        t.plan_files(partition_filter={"bucket": 0})
+    got = sorted(
+        r.id for r in t.read(spark, predicate="bucket = 0").collect()
+    )
+    assert got == [i for i in range(20) if i % 3 == 0]
+    kept, total = t.files_matching(spark, "id >= 10")
+    assert total == 7 and len(kept) == 4
+    got = sorted(r.id for r in t.read(spark, predicate="id >= 10").collect())
+    assert got == [i for i in range(10, 20) if i != 11]
