@@ -78,7 +78,14 @@ class Lakehouse:
         return DeltaLiteTable(path)
 
     def iceberg(self, path: str):
-        """Handle on an Iceberg table (metadata.json interop)."""
+        """Handle on an Iceberg table: the interop edge, not a second
+        engine.  It reads what an Iceberg writer produced (snapshots
+        and time travel, position/equality deletes, schema and
+        partition evolution, v3 Puffin deletion vectors) and carries
+        only the write verbs the Iceberg streaming sinks need:
+        ``write``, ``upsert``, ``delete``, ``rewrite_data_files`` and
+        ``committed_batches``.  MERGE, restore, vacuum and schema
+        evolution are :meth:`delta` verbs."""
         from data_lakehouse_platform_spark.sources.iceberg_lite import (
             IcebergLiteTable,
         )

@@ -1,4 +1,19 @@
-"""Dependency-free read-only Apache Iceberg table reader (v1/v2).
+"""Dependency-free Apache Iceberg table reader (v1/v2) and sink writer.
+
+Iceberg is an interop EDGE here, not a second table engine: the
+engine's native format is DeltaLiteTable.  The contract has two
+parts.  (a) READ what an Iceberg writer produced: v1/v2 snapshots and
+time travel, position deletes and sequence-gated equality deletes,
+field-id schema evolution and mixed-spec reads, manifest-stat
+pruning, v3 Puffin deletion vectors (any other v3 construct refuses
+by name), and the incremental append scan the streaming source
+(sources/iceberg_stream.py) tails.  (b) The WRITE verbs the two
+streaming sinks and their tables need: :meth:`~IcebergLiteTable.write`,
+:meth:`~IcebergLiteTable.upsert`, :meth:`~IcebergLiteTable.delete`,
+:meth:`~IcebergLiteTable.rewrite_data_files` and
+:meth:`~IcebergLiteTable.committed_batches`.  Table maintenance —
+MERGE, restore, vacuum, schema evolution, Z-order — lives on
+DeltaLiteTable; a table another engine evolved or expired still reads.
 
 The reference stack's interchange formats are the open table formats
 (delta_lite covers Delta); Iceberg is the other one a migrating user
@@ -37,14 +52,12 @@ data files, equality deletes without equality_ids or referencing
 unknown field ids, absent columns whose NULL type cannot be
 synthesized.
 
-WRITES (:meth:`IcebergLiteTable.write`) cover the migrate-OUT edge:
-v2 tables with append/overwrite snapshots — data parquet under
-``data/``, a spec-shaped manifest + manifest list per commit
-(field-ids from the spec's manifest tables, ``schema`` /
-``partition-spec`` / ``format-version`` Avro file metadata), a new
-``v{N}.metadata.json`` + ``version-hint.text``, flat primitive
-columns only (nested types refuse loudly — use
-DeltaLiteTable, the engine's full-featured native format).
+WRITES (:meth:`IcebergLiteTable.write`) produce v2 tables with
+append/overwrite snapshots — data parquet under ``data/``, a
+spec-shaped manifest + manifest list per commit (field-ids from the
+spec's manifest tables, ``schema`` / ``partition-spec`` /
+``format-version`` Avro file metadata), a new ``v{N}.metadata.json``
++ ``version-hint.text``.
 
 PARTITIONING (Iceberg's "hidden partitioning"): writes accept
 ``partition_by=[("col", "identity"|"day"|"month"), ...]`` — the
@@ -196,6 +209,33 @@ def _manifest_schema(partition_fields: list[dict] | None = None) -> dict:
     }
 
 
+def _new_manifest_row(
+    path: str,
+    content: int,
+    spec_id: int,
+    snap_id: int,
+    seq: int,
+    added_files: int,
+    added_rows: int,
+    min_seq: int | None = None,
+    existing_files: int = 0,
+) -> dict:
+    """The ``_ML_SCHEMA`` manifest-list row for a manifest the current
+    commit wrote (content 0 data, 1 deletes)."""
+    return {
+        "manifest_path": path,
+        "manifest_length": os.path.getsize(path),
+        "partition_spec_id": spec_id, "content": content,
+        "sequence_number": seq,
+        "min_sequence_number": seq if min_seq is None else min_seq,
+        "added_snapshot_id": snap_id,
+        "added_files_count": added_files,
+        "existing_files_count": existing_files, "deleted_files_count": 0,
+        "added_rows_count": added_rows,
+        "existing_rows_count": 0, "deleted_rows_count": 0,
+    }
+
+
 def _kv_map_field(
     name: str, fid: int, kid: int, vid: int, vtype: str
 ) -> dict:
@@ -284,15 +324,6 @@ def _mm_mix_k1(k1):
 def _mm_mix_h1(h1, k1):
     h1 = _mm_rotl(h1.bitwiseXOR(k1), 13)
     return (_mm_mul32(h1, 5) + F.lit(0xE6546B64)).bitwiseAND(F.lit(_U32))
-
-
-def _mm_fmix(h1, length):
-    h1 = h1.bitwiseXOR(length)
-    h1 = h1.bitwiseXOR(F.shiftright(h1, 16))
-    h1 = _mm_mul32(h1, 0x85EBCA6B)
-    h1 = h1.bitwiseXOR(F.shiftright(h1, 13))
-    h1 = _mm_mul32(h1, 0xC2B2AE35)
-    return h1.bitwiseXOR(F.shiftright(h1, 16))
 
 
 # NOTE on tree size: every murmur step references its input several
@@ -753,10 +784,9 @@ class IcebergLiteTable:
         feats: list[str] = []
         # Row lineage (next-row-id / first-row-id) is NOT listed since
         # r10: plain reads are lineage-agnostic (the ids are hidden
-        # metadata), and read_with_lineage() surfaces _row_id /
-        # _last_updated_sequence_number per the spec's derivation —
-        # every spec-compliant v3 table carries next-row-id, so
-        # refusing on it would make the v3 read path vacuous.
+        # metadata) — every spec-compliant v3 table carries
+        # next-row-id, so refusing on it would make the v3 read path
+        # vacuous.
         v3_scalar = {"variant", "timestamp_ns", "timestamptz_ns",
                      "unknown"}
         found_types: set[str] = set()
@@ -833,7 +863,11 @@ class IcebergLiteTable:
         return self.metadata().get("snapshots", [])
 
     def current_snapshot_id(self) -> int | None:
-        sid = self.metadata().get("current-snapshot-id")
+        return self._head(self.metadata())
+
+    @staticmethod
+    def _head(meta: dict) -> int | None:
+        sid = meta.get("current-snapshot-id")
         return None if sid in (None, -1) else int(sid)
 
     # -- snapshot read ---------------------------------------------------
@@ -1195,11 +1229,9 @@ class IcebergLiteTable:
         spark: SparkSession,
         snapshot_id: int | None = None,
         partition_filter=None,
-        ref: str | None = None,
         predicate: str | None = None,
     ) -> DataFrame:
-        """Snapshot read (current snapshot, time travel by id, or a
-        named ref — ``read(ref="audit-2024q1")``).
+        """Snapshot read (current snapshot or time travel by id).
 
         Identity-partitioned source columns are PRESENT in Iceberg data
         files (unlike hive layouts), so reading the parquet directly
@@ -1218,10 +1250,6 @@ class IcebergLiteTable:
         skippable.
         """
         meta = self.metadata()
-        if ref is not None:
-            if snapshot_id is not None:
-                raise ValueError("pass snapshot_id OR ref, not both")
-            snapshot_id = self.resolve_ref(ref)
         data_files, deletes = self.plan_files(snapshot_id, partition_filter)
         if predicate is not None and data_files:
             data_files = self._prune_by_predicate(
@@ -1245,7 +1273,7 @@ class IcebergLiteTable:
                    if partition_filter is not None else "")
             )
         # EXPLICIT time travel reads through the SNAPSHOT's schema
-        # (spec rule): a snapshot taken before a drop_column still
+        # (spec rule): a snapshot taken before a column drop still
         # shows the column.  Current-table reads always use the
         # current schema — a metadata-only evolution applies to the
         # latest snapshot immediately.
@@ -1271,126 +1299,12 @@ class IcebergLiteTable:
             out = out.filter(predicate)
         return out
 
-    def _lineage_assignments(
-        self, snap: dict
-    ) -> dict[str, tuple[int, int]]:
-        """{abs data-file path: (first_row_id, data sequence number)}
-        per the v3 row-lineage inheritance rules: an entry's explicit
-        ``first_row_id`` wins; a null one inherits the manifest-list
-        row's ``first_row_id`` plus the record counts of the PRIOR
-        null-assigned data files in that manifest (spec, "Row
-        Lineage" assignment).  Refuses loudly when neither level
-        carries an assignment — guessing row ids would fabricate
-        lineage."""
-        if "manifest-list" not in snap:
-            raise IcebergProtocolError(
-                "row lineage needs a manifest list carrying "
-                "first_row_id assignments (v1 inline manifests "
-                "predate lineage)"
-            )
-        out: dict[str, tuple[int, int]] = {}
-        _, ml_rows = read_container(_local_path(snap["manifest-list"]))
-        for row in ml_rows:
-            if int(row.get("content") or 0) != 0:
-                continue  # delete manifests carry no row ids
-            mpath = _local_path(row["manifest_path"])
-            mseq = int(row.get("sequence_number") or 0)
-            mfr = row.get("first_row_id")
-            _, entries = read_container(mpath)
-            acc = 0
-            for e in entries:
-                if int(e.get("status") or 0) == 2:
-                    continue
-                d = e["data_file"]
-                if int(d.get("content") or 0) != 0:
-                    continue
-                seq = e.get("sequence_number")
-                seq = mseq if seq is None else int(seq)
-                fr = e.get("first_row_id")
-                if fr is None:
-                    fr = d.get("first_row_id")
-                if fr is None:
-                    if mfr is None:
-                        raise IcebergProtocolError(
-                            f"data file {d['file_path']} has no "
-                            "first_row_id and its manifest carries "
-                            "none to inherit — cannot synthesize row "
-                            "lineage; use an Iceberg runtime"
-                        )
-                    fr = int(mfr) + acc
-                    acc += int(d.get("record_count") or 0)
-                out[
-                    os.path.abspath(_local_path(d["file_path"]))
-                ] = (int(fr), seq)
-        return out
-
-    def read_with_lineage(
-        self,
-        spark: SparkSession,
-        snapshot_id: int | None = None,
-    ) -> DataFrame:
-        """v3 ROW-LINEAGE read (r10): every row carries ``_row_id``
-        and ``_last_updated_sequence_number``.  For data files without
-        materialized lineage columns the spec's derivation applies —
-        ``_row_id = file first_row_id + row position`` and the update
-        sequence is the file's data sequence number.  Files that DO
-        carry materialized lineage columns (a lineage-aware
-        compactor's carry-over output) are refused loudly: projecting
-        the derived values over them would misattribute rows.
-        Deletes (position, equality, Puffin DVs) apply exactly as in
-        :meth:`read` — a deleted row simply has no surviving lineage
-        row."""
-        import pyarrow.parquet as pq
-
-        meta = self.metadata()
-        snaps = {
-            int(s["snapshot-id"]): s for s in meta.get("snapshots", [])
-        }
-        sid = (
-            self.current_snapshot_id()
-            if snapshot_id is None
-            else int(snapshot_id)
-        )
-        if sid is None or sid not in snaps:
-            raise FileNotFoundError(
-                f"snapshot {sid} not in table (have {sorted(snaps)})"
-            )
-        if int(meta.get("format-version", 1)) != 3:
-            raise IcebergProtocolError(
-                "row lineage is a v3 construct; this table is "
-                f"format-version {meta.get('format-version', 1)}"
-            )
-        data_files, deletes = self.plan_files(sid)
-        for p, _s, _pt in data_files:
-            names = set(pq.read_schema(p).names)
-            if names & {"_row_id", "_last_updated_sequence_number"}:
-                raise IcebergProtocolError(
-                    f"{p} carries materialized lineage columns — "
-                    "deriving positional row ids over it would "
-                    "misattribute rows; use an Iceberg runtime"
-                )
-        lineage = self._lineage_assignments(snaps[sid])
-        missing = [
-            p
-            for p, _s, _pt in data_files
-            if os.path.abspath(p) not in lineage
-        ]
-        if missing:
-            raise IcebergProtocolError(
-                f"no row-lineage assignment for {missing[:3]} — "
-                "cannot synthesize _row_id"
-            )
-        return self._read_files(
-            spark, meta, data_files, deletes, lineage=lineage
-        )
-
     def _read_files(
         self,
         spark: SparkSession,
         meta: dict,
         data_files: list[tuple[str, int, dict]],
         deletes: list[dict],
-        lineage: dict[str, tuple[int, int]] | None = None,
     ) -> DataFrame:
         """Read the given data files with all applicable position and
         equality deletes applied (the shared core of :meth:`read` and
@@ -1417,7 +1331,7 @@ class IcebergLiteTable:
         # need them (metadata columns must be referenced pre-projection)
         df = self._resolved_scan(
             spark, meta, [p for p, _s, _pt in data_files],
-            with_meta=bool(pos or eq or dv or lineage),
+            with_meta=bool(pos or eq or dv),
         )
         if dv:
             # Puffin deletion vectors (v3): each descriptor names a
@@ -1527,32 +1441,7 @@ class IcebergLiteTable:
                     cond = cond & F.col(c).eqNullSafe(F.col(f"__ed_{c}"))
                 df = df.join(edel, on=cond, how="left_anti")
             df = df.drop("__ib_seq")
-        if lineage:
-            # v3 row lineage: file-level (first_row_id, data seq)
-            # attached by the same O(1)-per-file broadcast pattern as
-            # the equality-delete sequence map, derived per row from
-            # the in-file position — no extra scan, no shuffle
-            lin_rows = []
-            for p, (fr, lseq) in lineage.items():
-                for k in {p, urllib.parse.quote(p, safe="/=")}:
-                    lin_rows.append((k, int(fr), int(lseq)))
-            ldf = F.broadcast(
-                spark.createDataFrame(
-                    lin_rows,
-                    "__ib_path string, __ib_first long, __ib_lseq long",
-                )
-            )
-            df = (
-                df.join(ldf, on="__ib_path", how="left")
-                .withColumn(
-                    "_row_id", F.col("__ib_first") + F.col("__ib_pos")
-                )
-                .withColumn(
-                    "_last_updated_sequence_number", F.col("__ib_lseq")
-                )
-                .drop("__ib_first", "__ib_lseq")
-            )
-        if pos or eq or dv or lineage:
+        if pos or eq or dv:
             df = df.drop("__ib_path", "__ib_pos")
         return df
 
@@ -1676,7 +1565,7 @@ class IcebergLiteTable:
                 phys = phys_by_lname[lname]
                 if phys is not None:
                     # cast to the CURRENT schema type: after a safe
-                    # type promotion (update_column_type — int->long,
+                    # type promotion (another writer's int->long,
                     # float->double, decimal widening) older files
                     # still hold the narrower physical type; a no-op
                     # for unevolved tables.
@@ -1970,12 +1859,8 @@ class IcebergLiteTable:
         assignment, so appends to existing tables compare equal);
         nested ids continue after n in traversal order — deterministic,
         so re-deriving the schema from a same-shaped DataFrame
-        reproduces identical ids.  Accepts a DataFrame or a bare
-        StructType (add_files derives the latter from parquet footers
-        via pyarrow without a Spark job)."""
-        from pyspark.sql.types import StructType
-
-        schema = df if isinstance(df, StructType) else df.schema
+        reproduces identical ids."""
+        schema = df.schema
         n_top = len(schema.fields)
         counter = [n_top]
 
@@ -2230,7 +2115,7 @@ class IcebergLiteTable:
         """Stage ``df`` as parquet data files under ``data/stage-*``
         and return (path, nrows, size, partition-value dict,
         column-stats dict) tuples — the shared staging pass of
-        :meth:`write` and :meth:`merge`.
+        :meth:`write`, :meth:`upsert` and :meth:`rewrite_data_files`.
 
         One distributed pass: the partition-transform values become
         derived ``__ip_*`` columns that partitionBy turns into
@@ -2311,21 +2196,12 @@ class IcebergLiteTable:
         mode: str = "append",
         partition_by: list | None = None,
         summary_extra: dict | None = None,
-        branch: str = "main",
     ) -> int:
         """Commit ``df`` as a new v2 snapshot (returns its snapshot id).
         ``append`` keeps prior manifests in the new manifest list;
         ``overwrite`` starts the list fresh (full-table replace, the
         prior snapshot stays time-travelable).  Flat primitive columns
         only — refused loudly otherwise.
-
-        ``branch`` targets a named branch ref (Iceberg's
-        write-audit-publish staging): the commit's parent and carried
-        manifests come from the BRANCH head, only the branch pointer
-        advances — ``main`` (current-snapshot-id, snapshot-log, every
-        reader not opting into the ref) is untouched until
-        :meth:`fast_forward` publishes.  The branch must already exist
-        (:meth:`create_branch`); read it back with ``read(ref=...)``.
 
         ``partition_by`` (creation only; appends inherit the table's
         spec) is a list of ``"col"`` (identity) or ``("col",
@@ -2335,17 +2211,8 @@ class IcebergLiteTable:
         """
         import uuid as uuidlib
 
-        from data_lakehouse_platform_spark.sources.avro_lite import (
-            write_container,
-        )
-
         if mode not in ("append", "overwrite"):
             raise ValueError(f"mode must be append|overwrite, got {mode!r}")
-        if branch != "main":
-            # validate BEFORE the staging work: branch writes target an
-            # EXISTING ref (silently creating one on a typo would
-            # publish nothing forever); tags are immutable
-            self._resolve_branch_base(self.metadata(), branch)
         ice_fields = self._iceberg_schema(df)
         id_to_name = {f["id"]: f["name"] for f in ice_fields}
         id_to_type = {f["id"]: f["type"] for f in ice_fields}
@@ -2458,8 +2325,7 @@ class IcebergLiteTable:
                 )
             spec_fields = existing
 
-        mdir = self.metadata_dir
-        os.makedirs(mdir, exist_ok=True)
+        os.makedirs(self.metadata_dir, exist_ok=True)
         data_files = self._stage_data_files(
             df, spec_fields, name_to_id, id_to_name, id_to_type
         )
@@ -2469,29 +2335,6 @@ class IcebergLiteTable:
         seq = int(meta.get("last-sequence-number", 0)) + 1
         now_ms = int(time.time() * 1000)
 
-        entries = [
-            {
-                "status": 1, "snapshot_id": snap_id,
-                "sequence_number": seq, "file_sequence_number": seq,
-                "data_file": {
-                    "content": 0, "file_path": path,
-                    "file_format": "PARQUET", "partition": part,
-                    "record_count": nrows, "file_size_in_bytes": size,
-                    **fstats,
-                },
-            }
-            for path, nrows, size, part, fstats in data_files
-        ]
-        part_avro = [
-            {
-                "name": pf["name"],
-                "type": _partition_avro_type(
-                    pf["transform"], id_to_type[pf["source-id"]]
-                ),
-                "field-id": pf["field-id"],
-            }
-            for pf in spec_fields
-        ]
         # the manifest embeds the TABLE's current schema (authoritative
         # ids + schema-id) — after evolution the DataFrame-derived
         # positional ids would be wrong
@@ -2504,40 +2347,13 @@ class IcebergLiteTable:
             ),
             ice_fields,
         )
-        default_spec_id = int(meta.get("default-spec-id", 0))
-        extra = {
-            "schema": json.dumps(
-                {
-                    "type": "struct",
-                    "schema-id": cur_sid,
-                    "fields": cur_fields,
-                }
-            ).encode(),
-            "partition-spec": json.dumps(spec_fields).encode(),
-            "partition-spec-id": str(default_spec_id).encode(),
-            "format-version": b"2",
-            "content": b"data",
-        }
-        mpath = os.path.join(mdir, f"m-{uuidlib.uuid4().hex}.avro")
-        write_container(mpath, _manifest_schema(part_avro), entries,
-                        extra_metadata=extra)
-        n_rows = sum(n for _, n, _s, _p, _st in data_files)
         ml_rows = [
-            {
-                "manifest_path": mpath,
-                "manifest_length": os.path.getsize(mpath),
-                "partition_spec_id": default_spec_id, "content": 0,
-                "sequence_number": seq, "min_sequence_number": seq,
-                "added_snapshot_id": snap_id,
-                "added_files_count": len(data_files),
-                "existing_files_count": 0, "deleted_files_count": 0,
-                "added_rows_count": n_rows,
-                "existing_rows_count": 0, "deleted_rows_count": 0,
-            }
+            self._add_data_manifest(
+                meta, cur_fields, spec_fields, id_to_type, data_files,
+                snap_id, seq,
+            )
         ]
-        # the commit's BASE is the target branch's head: main reads it
-        # from current-snapshot-id, a staging branch from its ref
-        base_id = self._resolve_branch_base(meta, branch)
+        base_id = self._head(meta)
         if mode == "append" and snaps:
             cur_snap = next(
                 (s for s in snaps if int(s["snapshot-id"]) == base_id),
@@ -2547,54 +2363,11 @@ class IcebergLiteTable:
                 # carried manifests keep their ORIGINAL provenance
                 # (added_snapshot_id / sequence numbers / counts)
                 ml_rows.extend(self._manifest_list_rows(cur_snap))
-        ml_path = os.path.join(
-            mdir, f"snap-{snap_id}-1-{uuidlib.uuid4().hex}.avro"
+        self._commit_snapshot(
+            meta, snap_id, seq, now_ms, ml_rows, mode, base_id,
+            summary_extra,
         )
-        write_container(ml_path, _ML_SCHEMA, ml_rows,
-                        extra_metadata={"format-version": b"2"})
-
-        snap = {
-            "snapshot-id": snap_id, "sequence-number": seq,
-            "timestamp-ms": now_ms, "manifest-list": ml_path,
-            "summary": {
-                "operation": "append" if mode == "append" else "overwrite",
-                # extra summary properties (spec: summary is a string
-                # map) — the streaming sink's exactly-once ledger rides
-                # here (see streaming/pipelines.append_stream_to_iceberg)
-                **{
-                    str(k): str(v)
-                    for k, v in (summary_extra or {}).items()
-                },
-            },
-            "schema-id": cur_sid,
-        }
-        if exists and base_id is not None:
-            snap["parent-snapshot-id"] = int(base_id)
-        meta["snapshots"] = snaps + [snap]
-        meta["last-sequence-number"] = seq
-        meta["last-updated-ms"] = now_ms
-        self._advance_head(meta, snap_id, now_ms, branch)
-
-        self._commit_metadata_json(meta)
         return snap_id
-
-    # -- schema evolution (metadata-only commits) -----------------------
-    #
-    # The spec's evolution model (Iceberg spec "Schema Evolution"):
-    # every column has an immutable field-id; add assigns a NEVER-reused
-    # id (last-column-id high-water mark), rename/promote keep the id,
-    # drop removes the field from the current schema but old snapshots
-    # keep reading THEIR schema.  Each verb appends a new entry to
-    # `schemas` with a bumped schema-id and flips current-schema-id —
-    # one optimistic metadata commit, no data files touched.  The read
-    # side already resolves by field-id (see _resolved_scan); the write
-    # side stamps ids into parquet footers, so evolved tables stay
-    # self-consistent end-to-end.
-
-    #: safe primitive promotions per the spec (plus decimal widening,
-    #: handled separately): the physical narrower type casts up
-    #: losslessly at read time.
-    _TYPE_PROMOTIONS = {("int", "long"), ("float", "double")}
 
     def _current_schema(self, meta: dict) -> tuple[list[dict], int]:
         sid = int(meta.get("current-schema-id", 0))
@@ -2611,295 +2384,6 @@ class IcebergLiteTable:
                 f"current-schema-id {sid} not present in `schemas`"
             )
         return [dict(f) for f in sch["fields"]], sid
-
-    def _commit_schema(self, meta: dict, new_fields: list[dict]) -> int:
-        """Append ``new_fields`` as the next schema, flip
-        current-schema-id, advance last-column-id (a high-water mark:
-        it NEVER decreases, so dropped ids are never reassigned), and
-        commit the metadata file put-if-absent.  Returns the new
-        schema-id."""
-        new_sid = (
-            max(
-                (int(s.get("schema-id", 0)) for s in meta.get("schemas", [])),
-                default=-1,
-            )
-            + 1
-        )
-        meta.setdefault("schemas", []).append(
-            {"type": "struct", "schema-id": new_sid, "fields": new_fields}
-        )
-        meta["current-schema-id"] = new_sid
-        meta["last-column-id"] = max(
-            int(meta.get("last-column-id", 0)),
-            self._max_field_id(new_fields),
-        )
-        meta["last-updated-ms"] = int(time.time() * 1000)
-        self._commit_metadata_json(meta)
-        return new_sid
-
-    def _live_idless_files(self, containing: str | None = None) -> list[str]:
-        """Live data files whose parquet footers carry NO field-id
-        metadata (pre-evolution writes of this module, plain Spark
-        files): those resolve BY NAME, so some evolution verbs would
-        silently corrupt their reads — the callers refuse instead.
-        ``containing`` restricts to files that physically contain that
-        column name."""
-        import pyarrow.parquet as pq
-
-        try:
-            files, _deletes = self.plan_files()
-        except (FileNotFoundError, IcebergProtocolError):
-            return []
-        bad = []
-        for p, _seq, _part in files:
-            sch = pq.read_schema(p)
-            has_ids = any(
-                (f.metadata or {}).get(b"PARQUET:field_id") is not None
-                for f in sch
-            )
-            if has_ids:
-                continue
-            if containing is None or containing in sch.names:
-                bad.append(p)
-        return bad
-
-    def _spec_source_ids(self, meta: dict) -> set[int]:
-        return {
-            int(f["source-id"])
-            for s in meta.get("partition-specs", [])
-            for f in s.get("fields", [])
-        }
-
-    def add_column(self, name: str, ice_type: str) -> int:
-        """ALTER TABLE ADD COLUMN as a metadata commit: assigns the
-        next never-reused field-id; existing files read the column as
-        NULL (by-id resolution), appends must then provide it.
-        ``ice_type`` is an Iceberg primitive (``long``, ``string``,
-        ``decimal(10,2)``, ...).  Returns the new schema-id.
-
-        Reference analog: the reference evolves its MySQL gold tables
-        with ALTER TABLE between loads (bronze_dimension_fact_load.py
-        full-vs-incremental schema drift); this is the table-format
-        equivalent."""
-        meta = self.metadata()
-        fields, _sid = self._current_schema(meta)
-        if any(f["name"] == name for f in fields):
-            raise ValueError(f"column {name!r} already exists")
-        if not isinstance(ice_type, str) or self._iceberg_type_to_spark_ddl(
-            ice_type
-        ) is None:
-            raise ValueError(
-                f"type {ice_type!r} is not a supported Iceberg primitive"
-            )
-        idless = self._live_idless_files(containing=name)
-        if idless:
-            raise IcebergProtocolError(
-                f"cannot add column {name!r}: {len(idless)} live data "
-                "file(s) without field-id footers physically contain "
-                f"that name (e.g. {idless[0]}) — by-name resolution "
-                "would read their OLD data into the new column. "
-                "rewrite_data_files() first."
-            )
-        next_id = (
-            max(
-                int(meta.get("last-column-id", 0)),
-                self._max_field_id(fields),
-            )
-            + 1
-        )
-        fields.append(
-            {
-                "id": next_id,
-                "name": name,
-                "required": False,
-                "type": ice_type,
-            }
-        )
-        return self._commit_schema(meta, fields)
-
-    def rename_column(self, old: str, new: str) -> int:
-        """ALTER TABLE RENAME COLUMN: same field-id, new name — old
-        files keep reading through the id.  Refused while live id-less
-        files exist (their by-name resolution would silently NULL the
-        renamed column).  Returns the new schema-id."""
-        meta = self.metadata()
-        fields, _sid = self._current_schema(meta)
-        if not any(f["name"] == old for f in fields):
-            raise ValueError(f"column {old!r} does not exist")
-        if any(f["name"] == new for f in fields):
-            raise ValueError(f"column {new!r} already exists")
-        idless = self._live_idless_files()
-        if idless:
-            raise IcebergProtocolError(
-                f"cannot rename {old!r}: {len(idless)} live data "
-                f"file(s) lack field-id footers (e.g. {idless[0]}) — "
-                "they resolve by name and would read NULL after the "
-                "rename. rewrite_data_files() first."
-            )
-        for f in fields:
-            if f["name"] == old:
-                f["name"] = new
-        # partition spec field names are immutable in the spec; the
-        # spec references the column by source-id, so it follows the
-        # rename automatically at write time.
-        return self._commit_schema(meta, fields)
-
-    def drop_column(self, name: str) -> int:
-        """ALTER TABLE DROP COLUMN: removes the field from the current
-        schema (old snapshots keep their schema; the id is never
-        reused, so a later re-add of the same name reads old files as
-        NULL — by-id — not as the old data).  Partition-spec source
-        columns are refused.  Returns the new schema-id."""
-        meta = self.metadata()
-        fields, _sid = self._current_schema(meta)
-        victim = next((f for f in fields if f["name"] == name), None)
-        if victim is None:
-            raise ValueError(f"column {name!r} does not exist")
-        if int(victim["id"]) in self._spec_source_ids(meta):
-            raise IcebergProtocolError(
-                f"column {name!r} is a partition-spec source — "
-                "dropping it would orphan the spec"
-            )
-        if len(fields) == 1:
-            raise ValueError("cannot drop the only column")
-        return self._commit_schema(
-            meta, [f for f in fields if f["name"] != name]
-        )
-
-    def update_column_type(self, name: str, new_type: str) -> int:
-        """ALTER TABLE ALTER COLUMN TYPE, safe promotions only
-        (int->long, float->double, decimal(P,S)->decimal(P'>=P,S)):
-        same field-id; older files' narrower physical values cast up
-        at read time (_resolved_scan).  Returns the new schema-id."""
-        meta = self.metadata()
-        fields, _sid = self._current_schema(meta)
-        victim = next((f for f in fields if f["name"] == name), None)
-        if victim is None:
-            raise ValueError(f"column {name!r} does not exist")
-        old_type = victim["type"]
-        ok = (old_type, new_type) in self._TYPE_PROMOTIONS
-        if (
-            not ok
-            and isinstance(old_type, str)
-            and isinstance(new_type, str)
-            and old_type.startswith("decimal(")
-            and new_type.startswith("decimal(")
-        ):
-            op, os_ = old_type[8:-1].split(",")
-            np_, ns = new_type[8:-1].split(",")
-            ok = int(ns) == int(os_) and int(np_) >= int(op)
-        if not ok:
-            raise IcebergProtocolError(
-                f"{old_type!r} -> {new_type!r} is not a safe promotion "
-                "(int->long, float->double, decimal widening at equal "
-                "scale)"
-            )
-        victim["type"] = new_type
-        return self._commit_schema(meta, fields)
-
-    def rollback_to(self, snapshot_id: int) -> int:
-        """Iceberg's ``rollback_to_snapshot``: flip
-        ``current-snapshot-id`` back to an ANCESTOR of the current
-        snapshot — one metadata commit, no snapshots added or removed
-        (the abandoned ones stay time-travelable until expiry; a later
-        write parents off the rolled-back snapshot).  Refuses a
-        snapshot that is not on the current ancestry chain
-        (``set_current_snapshot`` semantics are deliberately NOT
-        offered — jumping across branches silently orphans history)."""
-        meta = self.metadata()
-        snaps = {int(s["snapshot-id"]): s for s in meta.get("snapshots", [])}
-        if snapshot_id not in snaps:
-            raise FileNotFoundError(
-                f"snapshot {snapshot_id} not in table (have "
-                f"{sorted(snaps)})"
-            )
-        cur = self.current_snapshot_id()
-        if cur == snapshot_id:
-            return snapshot_id
-        ancestors = set()
-        walk = cur
-        while walk is not None:
-            ancestors.add(int(walk))
-            walk = snaps.get(int(walk), {}).get("parent-snapshot-id")
-        if snapshot_id not in ancestors:
-            raise IcebergProtocolError(
-                f"snapshot {snapshot_id} is not an ancestor of the "
-                f"current snapshot {cur} — rollback_to only rewinds "
-                "the current lineage"
-            )
-        now_ms = int(time.time() * 1000)
-        meta["current-snapshot-id"] = int(snapshot_id)
-        meta["last-updated-ms"] = now_ms
-        meta.setdefault("snapshot-log", []).append(
-            {"timestamp-ms": now_ms, "snapshot-id": int(snapshot_id)}
-        )
-        self._commit_metadata_json(meta)
-        return int(snapshot_id)
-
-    def update_spec(self, partition_by: list) -> int:
-        """PARTITION EVOLUTION (spec §Partition Evolution): append a
-        new partition spec and flip ``default-spec-id`` — ONE
-        metadata-only commit, no data files touched.  Existing files
-        keep their original spec (every manifest records its
-        partition-spec-id; reads, merge surgery and pruning resolve
-        per manifest), new writes lay out under the new spec — the
-        iceberg answer to "we partitioned by month and the query
-        pattern changed to day".  ``partition_by`` uses write()'s
-        grammar ("col" identity or (col, transform)); pass [] to stop
-        partitioning new data.  Spec field-ids continue from
-        last-partition-id and are never reused.  Returns the new
-        spec id."""
-        meta = self.metadata()
-        fields, _sid = self._current_schema(meta)
-        name_to_id = {f["name"]: int(f["id"]) for f in fields}
-        want = [
-            (item, "identity") if isinstance(item, str) else tuple(item)
-            for item in (partition_by or [])
-        ]
-        for c, _tr in want:
-            if c not in name_to_id:
-                raise ValueError(
-                    f"partition column {c!r} not in the current schema "
-                    f"(have {sorted(name_to_id)})"
-                )
-        specs = meta.get("partition-specs", [])
-        cur_default = next(
-            (
-                s
-                for s in specs
-                if int(s["spec-id"]) == int(meta.get("default-spec-id", 0))
-            ),
-            {"fields": []},
-        )
-        want_shape = [(name_to_id[c], tr) for c, tr in want]
-        if want_shape == [
-            (int(f["source-id"]), f["transform"])
-            for f in cur_default.get("fields", [])
-        ]:
-            raise ValueError(
-                "new spec is identical to the current default"
-            )
-        last_pid = int(meta.get("last-partition-id", 999))
-        new_id = max((int(s["spec-id"]) for s in specs), default=-1) + 1
-        spec_fields = [
-            {
-                "name": _spec_field_name(c, tr),
-                "transform": tr,
-                "source-id": name_to_id[c],
-                "field-id": last_pid + 1 + i,
-            }
-            for i, (c, tr) in enumerate(want)
-        ]
-        meta["partition-specs"] = specs + [
-            {"spec-id": new_id, "fields": spec_fields}
-        ]
-        meta["default-spec-id"] = new_id
-        meta["last-partition-id"] = max(
-            [last_pid] + [f["field-id"] for f in spec_fields]
-        )
-        meta["last-updated-ms"] = int(time.time() * 1000)
-        self._commit_metadata_json(meta)
-        return new_id
 
     def delete(self, spark: SparkSession, predicate: str) -> dict:
         """Delete rows matching ``predicate`` WITHOUT rewriting data
@@ -3047,84 +2531,134 @@ class IcebergLiteTable:
             s for s in snaps if int(s["snapshot-id"]) == cur_id
         )
         ml_rows = [
-            {
-                "manifest_path": mpath,
-                "manifest_length": os.path.getsize(mpath),
-                "partition_spec_id": 0, "content": 1,
-                "sequence_number": seq, "min_sequence_number": seq,
-                "added_snapshot_id": snap_id,
-                "added_files_count": len(dfiles),
-                "existing_files_count": 0,
-                "deleted_files_count": 0,
-                "added_rows_count": n_del,
-                "existing_rows_count": 0, "deleted_rows_count": 0,
-            }
+            _new_manifest_row(mpath, 1, 0, snap_id, seq, len(dfiles), n_del)
         ] + self._manifest_list_rows(cur_snap)  # provenance verbatim
-        ml_path = os.path.join(
-            mdir, f"snap-{snap_id}-1-{uuidlib.uuid4().hex}.avro"
+        self._commit_snapshot(
+            meta, snap_id, seq, now_ms, ml_rows, "delete", cur_id
         )
-        write_container(ml_path, _ML_SCHEMA, ml_rows,
-                        extra_metadata={"format-version": b"2"})
-
-        snap = {
-            "snapshot-id": snap_id, "sequence-number": seq,
-            "timestamp-ms": now_ms, "manifest-list": ml_path,
-            "summary": {"operation": "delete"},
-            "schema-id": int(meta.get("current-schema-id", 0)),
-            "parent-snapshot-id": cur_id,
-        }
-        meta["snapshots"] = snaps + [snap]
-        meta["current-snapshot-id"] = snap_id
-        meta["last-sequence-number"] = seq
-        meta["last-updated-ms"] = now_ms
-        meta.setdefault("snapshot-log", []).append(
-            {"timestamp-ms": now_ms, "snapshot-id": snap_id}
-        )
-        self._commit_metadata_json(meta)
         return {
             "snapshot_id": snap_id,
             "rows_deleted": n_del,
             "files_touched": n_files_touched,
         }
 
-    def _resolve_branch_base(self, meta: dict, branch: str) -> int | None:
-        """The snapshot a ``branch``-targeted commit builds on: main's
-        current snapshot, or the named branch ref's head.  Refuses
-        missing refs (a typo would stage commits nobody publishes) and
-        tags (immutable)."""
-        if branch == "main":
-            cur = meta.get("current-snapshot-id")
-            return None if cur in (None, -1) else int(cur)
-        r = (meta.get("refs") or {}).get(branch)
-        if r is None:
-            raise FileNotFoundError(
-                f"branch {branch!r} does not exist — create_branch() "
-                "first (write-audit-publish stages onto a named ref)"
-            )
-        if r.get("type") != "branch":
-            raise ValueError(f"ref {branch!r} is a tag; tags are "
-                             "immutable")
-        return int(r["snapshot-id"])
+    def _add_data_manifest(
+        self,
+        meta: dict,
+        fields: list[dict],
+        spec_fields: list[dict],
+        id_to_type: dict[int, str],
+        data_files: list[tuple],
+        snap_id: int,
+        seq: int,
+    ) -> dict:
+        """Write ``data_files`` (:meth:`_stage_data_files` tuples) as
+        ADDED entries of one data manifest under the table's default
+        spec, embedding ``fields`` as the current schema; returns the
+        manifest's list row."""
+        import uuid as uuidlib
 
-    def _advance_head(
-        self, meta: dict, snap_id: int, now_ms: int, branch: str
-    ) -> None:
-        """Move the commit target's pointer: main flips
-        current-snapshot-id + snapshot-log (and a materialized main
-        ref); a staging branch moves ONLY its ref."""
-        if branch == "main":
-            meta["current-snapshot-id"] = snap_id
-            meta.setdefault("snapshot-log", []).append(
-                {"timestamp-ms": now_ms, "snapshot-id": snap_id}
-            )
-            if "main" in (meta.get("refs") or {}):
-                meta["refs"]["main"] = {
-                    "snapshot-id": snap_id, "type": "branch",
+        from data_lakehouse_platform_spark.sources.avro_lite import (
+            write_container,
+        )
+
+        entries = [
+            {
+                "status": 1, "snapshot_id": snap_id,
+                "sequence_number": seq, "file_sequence_number": seq,
+                "data_file": {
+                    "content": 0, "file_path": path,
+                    "file_format": "PARQUET", "partition": part,
+                    "record_count": nrows, "file_size_in_bytes": size,
+                    **fstats,
+                },
+            }
+            for path, nrows, size, part, fstats in data_files
+        ]
+        part_avro = [
+            {
+                "name": pf["name"],
+                "type": _partition_avro_type(
+                    pf["transform"], id_to_type[pf["source-id"]]
+                ),
+                "field-id": pf["field-id"],
+            }
+            for pf in spec_fields
+        ]
+        spec_id = int(meta.get("default-spec-id", 0))
+        extra = {
+            "schema": json.dumps(
+                {
+                    "type": "struct",
+                    "schema-id": int(meta.get("current-schema-id", 0)),
+                    "fields": fields,
                 }
-        else:
-            refs = dict(meta.get("refs") or {})
-            refs[branch] = {"snapshot-id": snap_id, "type": "branch"}
-            meta["refs"] = refs
+            ).encode(),
+            "partition-spec": json.dumps(spec_fields).encode(),
+            "partition-spec-id": str(spec_id).encode(),
+            "format-version": b"2",
+            "content": b"data",
+        }
+        mpath = os.path.join(
+            self.metadata_dir, f"m-{uuidlib.uuid4().hex}.avro"
+        )
+        write_container(mpath, _manifest_schema(part_avro), entries,
+                        extra_metadata=extra)
+        return _new_manifest_row(
+            mpath, 0, spec_id, snap_id, seq, len(data_files),
+            sum(n for _, n, _s, _p, _st in data_files),
+        )
+
+    def _commit_snapshot(
+        self,
+        meta: dict,
+        snap_id: int,
+        seq: int,
+        now_ms: int,
+        ml_rows: list[dict],
+        operation: str,
+        parent_id: int | None,
+        summary_extra: dict | None = None,
+    ) -> None:
+        """Write the snapshot's manifest list, append the snapshot,
+        point the table at it (current-snapshot-id, snapshot-log, and
+        the ``main`` ref when another writer materialized one in
+        ``refs``) and commit the metadata put-if-absent.
+        ``summary_extra`` joins the summary string map — the streaming
+        sinks' exactly-once ledger rides there (see
+        :meth:`committed_batches`)."""
+        import uuid as uuidlib
+
+        from data_lakehouse_platform_spark.sources.avro_lite import (
+            write_container,
+        )
+
+        ml_path = os.path.join(
+            self.metadata_dir, f"snap-{snap_id}-1-{uuidlib.uuid4().hex}.avro"
+        )
+        write_container(ml_path, _ML_SCHEMA, ml_rows,
+                        extra_metadata={"format-version": b"2"})
+        snap = {
+            "snapshot-id": snap_id, "sequence-number": seq,
+            "timestamp-ms": now_ms, "manifest-list": ml_path,
+            "summary": {
+                "operation": operation,
+                **{str(k): str(v) for k, v in (summary_extra or {}).items()},
+            },
+            "schema-id": int(meta.get("current-schema-id", 0)),
+        }
+        if parent_id is not None:
+            snap["parent-snapshot-id"] = int(parent_id)
+        meta["snapshots"] = meta.get("snapshots", []) + [snap]
+        meta["current-snapshot-id"] = snap_id
+        meta["last-sequence-number"] = seq
+        meta["last-updated-ms"] = now_ms
+        meta.setdefault("snapshot-log", []).append(
+            {"timestamp-ms": now_ms, "snapshot-id": snap_id}
+        )
+        if "main" in (meta.get("refs") or {}):
+            meta["refs"]["main"] = {"snapshot-id": snap_id, "type": "branch"}
+        self._commit_metadata_json(meta)
 
     def _stage_equality_delete(
         self,
@@ -3224,119 +2758,11 @@ class IcebergLiteTable:
                         extra_metadata=extra)
         return mpath, n_rows
 
-    def delete_equality(
-        self,
-        spark: SparkSession,
-        values: DataFrame,
-        equality_cols: list[str] | None = None,
-        branch: str = "main",
-    ) -> dict:
-        """Commit an EQUALITY-DELETE snapshot (v2 content=2): every row
-        of the table whose ``equality_cols`` tuple appears in
-        ``values`` is deleted — lazily, by match-on-read, without
-        touching any data file.  This is the write side of the
-        streaming-upsert contract this reader already consumes
-        (``_live_files`` surfaces ``equality_ids``; ``_read_files``
-        applies them with strict ``data seq < delete seq`` gating), so
-        round-tripping is spec-symmetric.  Returns ``{"snapshot_id",
-        "keys", "files"}`` — an equality delete never counts matched
-        rows (that is its point: no data scan at commit time).
-
-        Scale: the only distributed work is ``values``'s distinct
-        (key-set sized); the commit itself is manifest surgery.  A
-        100 TB table absorbs a million-key delete in seconds — the
-        cost moves to subsequent reads, which is why
-        :meth:`rewrite_data_files` folds position deletes eagerly but
-        leaves equality manifests for readers until compaction.
-
-        Reference analog: Flink/Iceberg upsert sinks
-        (iceberg-flink's equality-delta writers); the reference
-        platform expresses row retraction only through full-partition
-        rewrites in its batch scripts (scripts/batch/
-        silver_facts.py), which cannot scale past node memory.
-        """
-        import uuid as uuidlib
-
-        meta = self.metadata()
-        cur_id = self._resolve_branch_base(meta, branch)
-        if cur_id is None:
-            raise FileNotFoundError(
-                f"table at {self.path} has no current snapshot"
-            )
-        cur_fields, _sid = self._current_schema(meta)
-        name_to_id = {f["name"]: int(f["id"]) for f in cur_fields}
-        eq_cols = list(equality_cols or values.columns)
-        bad = [c for c in eq_cols if c not in name_to_id]
-        if bad:
-            raise ValueError(
-                f"equality columns {bad} not in table schema "
-                f"(have {sorted(name_to_id)})"
-            )
-        missing = [c for c in eq_cols if c not in values.columns]
-        if missing:
-            raise ValueError(
-                f"equality columns {missing} not in the values DataFrame"
-            )
-        eq_ids = [name_to_id[c] for c in eq_cols]
-
-        dfiles, n_keys = self._stage_equality_delete(
-            values, eq_cols, name_to_id
-        )
-        snaps = meta.get("snapshots", [])
-        snap_id = max(int(s["snapshot-id"]) for s in snaps) + 1
-        seq = int(meta.get("last-sequence-number", 0)) + 1
-        now_ms = int(time.time() * 1000)
-        mpath, n_rows = self._eq_delete_manifest(
-            meta, dfiles, eq_ids, snap_id, seq
-        )
-
-        cur_snap = next(
-            s for s in snaps if int(s["snapshot-id"]) == cur_id
-        )
-        ml_rows = [
-            {
-                "manifest_path": mpath,
-                "manifest_length": os.path.getsize(mpath),
-                "partition_spec_id": 0, "content": 1,
-                "sequence_number": seq, "min_sequence_number": seq,
-                "added_snapshot_id": snap_id,
-                "added_files_count": len(dfiles),
-                "existing_files_count": 0, "deleted_files_count": 0,
-                "added_rows_count": n_rows,
-                "existing_rows_count": 0, "deleted_rows_count": 0,
-            }
-        ] + self._manifest_list_rows(cur_snap)  # provenance verbatim
-        ml_path = os.path.join(
-            self.metadata_dir,
-            f"snap-{snap_id}-1-{uuidlib.uuid4().hex}.avro",
-        )
-        from data_lakehouse_platform_spark.sources.avro_lite import (
-            write_container,
-        )
-
-        write_container(ml_path, _ML_SCHEMA, ml_rows,
-                        extra_metadata={"format-version": b"2"})
-        snap = {
-            "snapshot-id": snap_id, "sequence-number": seq,
-            "timestamp-ms": now_ms, "manifest-list": ml_path,
-            "summary": {"operation": "delete"},
-            "schema-id": int(meta.get("current-schema-id", 0)),
-            "parent-snapshot-id": cur_id,
-        }
-        meta["snapshots"] = snaps + [snap]
-        meta["last-sequence-number"] = seq
-        meta["last-updated-ms"] = now_ms
-        self._advance_head(meta, snap_id, now_ms, branch)
-        self._commit_metadata_json(meta)
-        return {"snapshot_id": snap_id, "keys": n_keys,
-                "files": len(dfiles)}
-
     def upsert(
         self,
         spark: SparkSession,
         source: DataFrame,
         keys: list[str],
-        branch: str = "main",
         summary_extra: dict | None = None,
     ) -> dict:
         """Streaming-style UPSERT in ONE snapshot: an equality delete
@@ -3348,40 +2774,27 @@ class IcebergLiteTable:
         exactly the Flink/Iceberg upsert sink's commit shape
         (equality-delta writer + data writer, one checkpoint commit).
 
-        Unlike :meth:`merge` (copy-on-write: reads matched files,
-        rewrites them, counts updates), ``upsert`` is merge-on-read:
-        commit cost is key-set sized and independent of table size;
-        readers pay the match until :meth:`rewrite_data_files`
-        compacts.  Use merge for batch reconciliation, upsert for
-        high-frequency key-hose ingestion.  ``branch`` stages the
-        commit onto a named ref (the Flink write-audit-publish
-        pattern) exactly like ``write(branch=...)``.  Returns
+        ``upsert`` is merge-on-read: commit cost is key-set sized and
+        independent of table size; readers pay the match until
+        :meth:`rewrite_data_files` compacts.  For a copy-on-write
+        MERGE use :meth:`DeltaLiteTable.merge`.  Returns
         ``{"snapshot_id", "rows", "keys"}``.
         """
-        import uuid as uuidlib
-
-        from data_lakehouse_platform_spark.sources.avro_lite import (
-            write_container,
-        )
-
         try:
             meta = self.metadata()
-            cur_id = self._resolve_branch_base(meta, branch)
         except FileNotFoundError:
-            if branch != "main":
-                raise
-            cur_id = None
+            meta = {}
+        cur_id = self._head(meta)
         if cur_id is None:
             # empty/fresh table: an upsert is a plain append
             return {
                 "snapshot_id": self.write(
-                    source, mode="append", branch=branch,
-                    summary_extra=summary_extra,
+                    source, mode="append", summary_extra=summary_extra,
                 ),
                 "rows": source.count(),
                 "keys": 0,
             }
-        cur_fields, cur_sid = self._current_schema(meta)
+        cur_fields, _sid = self._current_schema(meta)
         tcols = [f["name"] for f in cur_fields]
         if sorted(source.columns) != sorted(tcols):
             raise ValueError(
@@ -3429,540 +2842,32 @@ class IcebergLiteTable:
         del_mpath, del_rows = self._eq_delete_manifest(
             meta, dfiles, eq_ids, snap_id, seq
         )
-        # data manifest — same entry shape as write()
-        entries = [
-            {
-                "status": 1, "snapshot_id": snap_id,
-                "sequence_number": seq, "file_sequence_number": seq,
-                "data_file": {
-                    "content": 0, "file_path": path,
-                    "file_format": "PARQUET", "partition": part,
-                    "record_count": nrows, "file_size_in_bytes": size,
-                    **fstats,
-                },
-            }
-            for path, nrows, size, part, fstats in data_files
-        ]
-        part_avro = [
-            {
-                "name": pf["name"],
-                "type": _partition_avro_type(
-                    pf["transform"], id_to_type[pf["source-id"]]
-                ),
-                "field-id": pf["field-id"],
-            }
-            for pf in spec_fields
-        ]
-        default_spec_id = int(meta.get("default-spec-id", 0))
-        extra = {
-            "schema": json.dumps(
-                {"type": "struct", "schema-id": cur_sid,
-                 "fields": cur_fields}
-            ).encode(),
-            "partition-spec": json.dumps(spec_fields).encode(),
-            "partition-spec-id": str(default_spec_id).encode(),
-            "format-version": b"2",
-            "content": b"data",
-        }
-        data_mpath = os.path.join(
-            self.metadata_dir, f"m-{uuidlib.uuid4().hex}.avro"
-        )
-        write_container(data_mpath, _manifest_schema(part_avro), entries,
-                        extra_metadata=extra)
-        n_rows = sum(n for _, n, _s, _p, _st in data_files)
-
         cur_snap = next(
             s for s in snaps if int(s["snapshot-id"]) == cur_id
+        )
+        data_row = self._add_data_manifest(
+            meta, cur_fields, spec_fields, id_to_type, data_files,
+            snap_id, seq,
         )
         ml_rows = [
-            {
-                "manifest_path": data_mpath,
-                "manifest_length": os.path.getsize(data_mpath),
-                "partition_spec_id": default_spec_id, "content": 0,
-                "sequence_number": seq, "min_sequence_number": seq,
-                "added_snapshot_id": snap_id,
-                "added_files_count": len(data_files),
-                "existing_files_count": 0, "deleted_files_count": 0,
-                "added_rows_count": n_rows,
-                "existing_rows_count": 0, "deleted_rows_count": 0,
-            },
-            {
-                "manifest_path": del_mpath,
-                "manifest_length": os.path.getsize(del_mpath),
-                "partition_spec_id": 0, "content": 1,
-                "sequence_number": seq, "min_sequence_number": seq,
-                "added_snapshot_id": snap_id,
-                "added_files_count": len(dfiles),
-                "existing_files_count": 0, "deleted_files_count": 0,
-                "added_rows_count": del_rows,
-                "existing_rows_count": 0, "deleted_rows_count": 0,
-            },
+            data_row,
+            _new_manifest_row(del_mpath, 1, 0, snap_id, seq, len(dfiles),
+                              del_rows),
         ] + self._manifest_list_rows(cur_snap)
-        ml_path = os.path.join(
-            self.metadata_dir,
-            f"snap-{snap_id}-1-{uuidlib.uuid4().hex}.avro",
+        self._commit_snapshot(
+            meta, snap_id, seq, now_ms, ml_rows, "overwrite", cur_id,
+            summary_extra,
         )
-        write_container(ml_path, _ML_SCHEMA, ml_rows,
-                        extra_metadata={"format-version": b"2"})
-        snap = {
-            "snapshot-id": snap_id, "sequence-number": seq,
-            "timestamp-ms": now_ms, "manifest-list": ml_path,
-            "summary": {
-                "operation": "overwrite",
-                # extra summary properties (spec: string map) — the
-                # streaming upsert sink's exactly-once ledger rides
-                # here (see streaming/pipelines.upsert_stream_to_iceberg)
-                **{
-                    str(k): str(v)
-                    for k, v in (summary_extra or {}).items()
-                },
-            },
-            "schema-id": cur_sid,
-            "parent-snapshot-id": cur_id,
-        }
-        meta["snapshots"] = snaps + [snap]
-        meta["last-sequence-number"] = seq
-        meta["last-updated-ms"] = now_ms
-        self._advance_head(meta, snap_id, now_ms, branch)
-        self._commit_metadata_json(meta)
-        return {"snapshot_id": snap_id, "rows": n_rows, "keys": n_keys}
-
-    def merge(
-        self,
-        spark: SparkSession,
-        source: DataFrame,
-        keys: list[str],
-        matched_update_condition: str | None = None,
-        matched_delete_condition: str | None = None,
-    ) -> dict:
-        """FILE-SCOPED copy-on-write MERGE (Iceberg's ``MERGE INTO``
-        with write.merge.mode=copy-on-write, the delta_lite.merge
-        twin): source rows matching on ``keys`` update the current
-        rows, unmatched source rows insert — ONE atomic overwrite
-        snapshot.  Conditional clauses take SQL predicates over the
-        ``t``/``s`` struct pair exactly like delta_lite.merge
-        (``matched_delete_condition`` evaluates first; a NULL result
-        means not-satisfied).
-
-        Scale shape: only the data files that CONTAIN matched rows are
-        rewritten — matches are located by an ``_metadata``-path
-        semi-join on the keys, the rewrite pass re-reads just those
-        files, and every untouched file survives via manifest surgery:
-        manifests holding a touched file are rewritten with the
-        touched entries marked DELETED (status 2, this snapshot) and
-        the rest carried as EXISTING (status 0) with their ORIGINAL
-        snapshot/sequence provenance, while manifests with no touched
-        file (and all position-delete manifests) are carried verbatim
-        in the new manifest list.  A 100 TB fact upsert confined to
-        one partition rewrites that partition's files, not the table.
-
-        Duplicate keys in ``source`` are refused (iceberg-spark raises
-        the same cardinality violation).  Tables carrying EQUALITY
-        deletes are refused (their sequence-number application
-        semantics belong to the engines that write them — compact with
-        :meth:`rewrite_data_files` first); position deletes are
-        applied to the rewritten rows and their manifests carry
-        forward untouched."""
-        import uuid as uuidlib
-
-        from data_lakehouse_platform_spark.sources.avro_lite import (
-            read_container, write_container,
-        )
-
-        meta = self.metadata()
-        cur_id = self.current_snapshot_id()
-        if cur_id is None:
-            raise FileNotFoundError(
-                f"table at {self.path} has no current snapshot"
-            )
-        cur_fields, cur_sid = self._current_schema(meta)
-        tcols = [f["name"] for f in cur_fields]
-        if sorted(source.columns) != sorted(tcols):
-            raise ValueError(
-                "source schema differs from table schema; align the "
-                "DataFrame first (no implicit evolution)"
-            )
-        bad = [k for k in keys if k not in tcols]
-        if bad:
-            raise ValueError(f"merge keys {bad} not in table columns")
-        data_files, deletes = self.plan_files()
-        if any(d["kind"] == "eq" for d in deletes):
-            raise IcebergProtocolError(
-                "table carries equality-delete files; their sequence-"
-                "number application semantics belong to the engine that "
-                "wrote them — compact with rewrite_data_files() before "
-                "merging"
-            )
-        name_to_id = {f["name"]: int(f["id"]) for f in cur_fields}
-        id_to_name = {v: k for k, v in name_to_id.items()}
-        id_to_type = {int(f["id"]): f["type"] for f in cur_fields}
-        spec_fields = self._table_spec(meta)
-        snaps = meta.get("snapshots", [])
-        cur_snap = next(
-            s for s in snaps if int(s["snapshot-id"]) == cur_id
-        )
-        ml_rows = self._manifest_list_rows(cur_snap)
-        specs_by_id = {
-            int(sp["spec-id"]): [
-                {
-                    "name": f["name"],
-                    "transform": f["transform"],
-                    "source-id": int(f["source-id"]),
-                    "field-id": int(f["field-id"]),
-                }
-                for f in sp.get("fields", [])
-            ]
-            for sp in meta.get("partition-specs", [])
-        }
-        unknown_specs = {
-            int(r.get("partition_spec_id") or 0) for r in ml_rows
-        } - set(specs_by_id)
-        if unknown_specs:
-            raise IcebergProtocolError(
-                f"manifests reference partition specs {sorted(unknown_specs)} "
-                "absent from table metadata — refusing to rewrite them"
-            )
-
-        # ONE evaluation of the source across the location, insert and
-        # rewrite passes (iceberg-spark materializes the source the
-        # same way); lineage truncated, so block loss fails loudly.
-        source = source.localCheckpoint(eager=True)
-        dup = source.groupBy(*keys).count().filter(F.col("count") > 1)
-        if dup.limit(1).count() > 0:
-            raise ValueError(
-                f"source has duplicate keys on {keys}; MERGE requires "
-                "at most one source row per target row"
-            )
-
-        strip = lambda c: F.regexp_replace(  # noqa: E731
-            c, "^[a-zA-Z0-9+.-]+:/+", "/"
-        )
-        prior_pos = [d for d in deletes if d["kind"] == "pos"]
-
-        def _minus_pos(df):
-            if not prior_pos:
-                return df
-            prior = spark.read.parquet(
-                *[d["path"] for d in prior_pos]
-            ).select(
-                strip(F.col("file_path")).alias("__ib_path"),
-                F.col("pos").cast("long").alias("__ib_pos"),
-            )
-            return df.join(
-                prior, on=["__ib_path", "__ib_pos"], how="left_anti"
-            )
-
-        touched_abs: set[str] = set()
-        touched_paths: list[str] = []
-        if data_files:
-            scan = _minus_pos(
-                self._resolved_scan(
-                    spark, meta, [p for p, _s, _pt in data_files],
-                    with_meta=True,
-                )
-            )
-            touched_raw = [
-                r["__ib_path"]
-                for r in scan.join(
-                    source.select(*keys).distinct(), on=keys,
-                    how="left_semi",
-                )
-                .select("__ib_path")
-                .distinct()
-                .collect()
-            ]
-            hit = {os.path.abspath(u) for u in touched_raw} | {
-                os.path.abspath(urllib.parse.unquote(u))
-                for u in touched_raw
-            }
-            for p, _s, _pt in data_files:
-                if os.path.abspath(p) in hit:
-                    touched_abs.add(os.path.abspath(p))
-                    touched_paths.append(p)
-            if len(touched_paths) != len(touched_raw):
-                raise IcebergProtocolError(
-                    "matched a file path that is not in the snapshot"
-                )
-            inserts = source.join(
-                scan.select(*keys), on=keys, how="left_anti"
-            ).select(*tcols)
-        else:
-            inserts = source.select(*tcols)
-
-        rewrite = None
-        if touched_paths:
-            trows = _minus_pos(
-                self._resolved_scan(
-                    spark, meta, touched_paths, with_meta=True
-                )
-            ).select(*tcols)
-            if (
-                matched_update_condition is None
-                and matched_delete_condition is None
-            ):
-                kept = trows.join(
-                    source.select(*keys), on=keys, how="left_anti"
-                )
-                updated_src = source.join(
-                    trows.select(*keys), on=keys, how="left_semi"
-                ).select(*tcols)
-                rewrite = kept.unionByName(updated_src)
-            else:
-                t = trows.select(F.struct(*tcols).alias("t"))
-                srows = source.select(*tcols).select(
-                    F.struct(*tcols).alias("s")
-                )
-                on = None
-                for k in keys:
-                    c = F.col("t")[k] == F.col("s")[k]
-                    on = c if on is None else (on & c)
-                joined = t.join(srows, on=on, how="left")
-                matched = F.col("s").isNotNull()
-                dele = (
-                    F.coalesce(
-                        F.expr(matched_delete_condition), F.lit(False)
-                    )
-                    if matched_delete_condition is not None
-                    else F.lit(False)
-                )
-                upd = (
-                    F.coalesce(
-                        F.expr(matched_update_condition), F.lit(False)
-                    )
-                    if matched_update_condition is not None
-                    else F.lit(True)
-                )
-                rewrite = (
-                    joined.filter(~(matched & dele))
-                    .select(
-                        F.when(matched & upd, F.col("s"))
-                        .otherwise(F.col("t"))
-                        .alias("r")
-                    )
-                    .select("r.*")
-                )
-        new_df = (
-            inserts
-            if rewrite is None
-            else rewrite.unionByName(inserts)
-        )
-        if not touched_paths and inserts.limit(1).count() == 0:
-            return {
-                "snapshot_id": cur_id,
-                "files_rewritten": 0,
-                "files_added": 0,
-            }
-
-        staged = self._stage_data_files(
-            new_df, spec_fields, name_to_id, id_to_name, id_to_type
-        )
-        snap_id = max(int(s["snapshot-id"]) for s in snaps) + 1
-        seq = int(meta.get("last-sequence-number", 0)) + 1
-        now_ms = int(time.time() * 1000)
-        mdir = self.metadata_dir
-
-        default_spec_id = int(meta.get("default-spec-id", 0))
-
-        def _avro_fields(sfields: list[dict]) -> list[dict]:
-            return [
-                {
-                    "name": pf["name"],
-                    "type": _partition_avro_type(
-                        pf["transform"], id_to_type[pf["source-id"]]
-                    ),
-                    "field-id": pf["field-id"],
-                }
-                for pf in sfields
-            ]
-
-        def _man_extra(sfields: list[dict], sid: int) -> dict:
-            return {
-                "schema": json.dumps(
-                    {
-                        "type": "struct",
-                        "schema-id": cur_sid,
-                        "fields": cur_fields,
-                    }
-                ).encode(),
-                "partition-spec": json.dumps(sfields).encode(),
-                "partition-spec-id": str(sid).encode(),
-                "format-version": b"2",
-                "content": b"data",
-            }
-
-        part_avro = _avro_fields(spec_fields)
-        man_extra = _man_extra(spec_fields, default_spec_id)
-        add_entries = [
-            {
-                "status": 1, "snapshot_id": snap_id,
-                "sequence_number": seq, "file_sequence_number": seq,
-                "data_file": {
-                    "content": 0, "file_path": path,
-                    "file_format": "PARQUET", "partition": part,
-                    "record_count": nrows, "file_size_in_bytes": size,
-                    **fstats,
-                },
-            }
-            for path, nrows, size, part, fstats in staged
-        ]
-        new_ml_rows: list[dict] = []
-        if add_entries:
-            mpath = os.path.join(mdir, f"m-{uuidlib.uuid4().hex}.avro")
-            write_container(
-                mpath, _manifest_schema(part_avro), add_entries,
-                extra_metadata=man_extra,
-            )
-            new_ml_rows.append(
-                {
-                    "manifest_path": mpath,
-                    "manifest_length": os.path.getsize(mpath),
-                    "partition_spec_id": default_spec_id, "content": 0,
-                    "sequence_number": seq, "min_sequence_number": seq,
-                    "added_snapshot_id": snap_id,
-                    "added_files_count": len(staged),
-                    "existing_files_count": 0, "deleted_files_count": 0,
-                    "added_rows_count": sum(n for _, n, _s, _p, _st in staged),
-                    "existing_rows_count": 0, "deleted_rows_count": 0,
-                }
-            )
-        # Manifest surgery: rewrite only the manifests that reference a
-        # touched file; carry every other manifest row verbatim.
-        for r in ml_rows:
-            if int(r.get("content") or 0) == 1:
-                new_ml_rows.append(r)  # delete manifests carry forward
-                continue
-            _sch, entries = read_container(r["manifest_path"])
-            live_entries = [
-                e for e in entries if int(e.get("status") or 0) != 2
-            ]
-            hits = [
-                e
-                for e in live_entries
-                if os.path.abspath(
-                    _local_path(e["data_file"]["file_path"])
-                )
-                in touched_abs
-            ]
-            if not hits:
-                new_ml_rows.append(r)
-                continue
-            out_entries = []
-            n_exist = n_dead = rows_exist = rows_dead = 0
-            min_seq = seq
-            for e in live_entries:
-                dfile = e["data_file"]
-                eseq = (
-                    int(e["sequence_number"])
-                    if e.get("sequence_number") is not None
-                    else int(r.get("sequence_number") or 0)
-                )
-                fseq = (
-                    int(e["file_sequence_number"])
-                    if e.get("file_sequence_number") is not None
-                    else eseq
-                )
-                esnap = (
-                    int(e["snapshot_id"])
-                    if e.get("snapshot_id") is not None
-                    else int(r.get("added_snapshot_id") or 0)
-                )
-                dead = (
-                    os.path.abspath(_local_path(dfile["file_path"]))
-                    in touched_abs
-                )
-                nrec = int(dfile.get("record_count") or 0)
-                if dead:
-                    n_dead += 1
-                    rows_dead += nrec
-                else:
-                    n_exist += 1
-                    rows_exist += nrec
-                    min_seq = min(min_seq, eseq)
-                part = dfile.get("partition")
-                out_entries.append(
-                    {
-                        "status": 2 if dead else 0,
-                        "snapshot_id": snap_id if dead else esnap,
-                        "sequence_number": eseq,
-                        "file_sequence_number": fseq,
-                        "data_file": {
-                            "content": int(dfile.get("content") or 0),
-                            "file_path": _local_path(dfile["file_path"]),
-                            "file_format": "PARQUET",
-                            "partition": dict(part) if part else {},
-                            "record_count": nrec,
-                            "file_size_in_bytes": int(
-                                dfile.get("file_size_in_bytes") or 0
-                            ),
-                            # column stats carry VERBATIM: a surviving
-                            # file's bounds are unchanged by the merge
-                            **{
-                                k: dfile.get(k)
-                                for k in (
-                                    "value_counts",
-                                    "null_value_counts",
-                                    "lower_bounds",
-                                    "upper_bounds",
-                                )
-                                if dfile.get(k) is not None
-                            },
-                        },
-                    }
-                )
-            r_spec_id = int(r.get("partition_spec_id") or 0)
-            r_spec = specs_by_id[r_spec_id]
-            m2 = os.path.join(mdir, f"m-{uuidlib.uuid4().hex}.avro")
-            write_container(
-                m2, _manifest_schema(_avro_fields(r_spec)), out_entries,
-                extra_metadata=_man_extra(r_spec, r_spec_id),
-            )
-            new_ml_rows.append(
-                {
-                    "manifest_path": m2,
-                    "manifest_length": os.path.getsize(m2),
-                    "partition_spec_id": r_spec_id, "content": 0,
-                    "sequence_number": seq,
-                    "min_sequence_number": min_seq,
-                    "added_snapshot_id": snap_id,
-                    "added_files_count": 0,
-                    "existing_files_count": n_exist,
-                    "deleted_files_count": n_dead,
-                    "added_rows_count": 0,
-                    "existing_rows_count": rows_exist,
-                    "deleted_rows_count": rows_dead,
-                }
-            )
-        ml_path = os.path.join(
-            mdir, f"snap-{snap_id}-1-{uuidlib.uuid4().hex}.avro"
-        )
-        write_container(ml_path, _ML_SCHEMA, new_ml_rows,
-                        extra_metadata={"format-version": b"2"})
-        snap = {
-            "snapshot-id": snap_id, "sequence-number": seq,
-            "timestamp-ms": now_ms, "manifest-list": ml_path,
-            "summary": {"operation": "overwrite"},
-            "schema-id": cur_sid,
-            "parent-snapshot-id": cur_id,
-        }
-        meta["snapshots"] = snaps + [snap]
-        meta["current-snapshot-id"] = snap_id
-        meta["last-sequence-number"] = seq
-        meta["last-updated-ms"] = now_ms
-        meta.setdefault("snapshot-log", []).append(
-            {"timestamp-ms": now_ms, "snapshot-id": snap_id}
-        )
-        self._commit_metadata_json(meta)
         return {
             "snapshot_id": snap_id,
-            "files_rewritten": len(touched_paths),
-            "files_added": len(staged),
+            "rows": data_row["added_rows_count"],
+            "keys": n_keys,
         }
 
     def rewrite_data_files(
         self,
         spark: SparkSession,
         target_file_bytes: int = 128 << 20,
-        zorder_by: list[str] | None = None,
     ) -> dict:
         """Compaction (Iceberg's rewrite_data_files): bin-pack every
         data file smaller than ``target_file_bytes`` — and every file
@@ -4027,11 +2932,9 @@ class IcebergLiteTable:
             # SPEC MIGRATION: the table holds manifests under evolved
             # (non-default) partition specs — one compaction rewrites
             # EVERY row under the current default spec, the Iceberg
-            # way to converge the layout after update_spec().  All
-            # deletes are applied during the read, so no delete
-            # manifest carries forward.  (zorder_by ordering does not
-            # apply here — the partition transform drives the layout;
-            # re-run with zorder_by afterwards for in-file clustering.)
+            # way to converge the layout after a partition evolution.
+            # All deletes are applied during the read, so no delete
+            # manifest carries forward.
             fields_m, _csid = self._current_schema(meta)
             name_to_id = {f["name"]: int(f["id"]) for f in fields_m}
             id_to_name = {v: k for k, v in name_to_id.items()}
@@ -4059,12 +2962,7 @@ class IcebergLiteTable:
                 dirty = any(
                     os.path.abspath(m[0]) in pos_paths for m in cand
                 )
-                if zorder_by:
-                    # a sort-order rewrite re-clusters EVERY file in the
-                    # partition (Iceberg's rewrite_data_files sort
-                    # strategy / delta OPTIMIZE ZORDER semantics)
-                    cand = list(members)
-                elif len(cand) <= 1 and not dirty:
+                if len(cand) <= 1 and not dirty:
                     kept.extend(members)
                     continue
                 kept.extend(m for m in members if m not in cand)
@@ -4074,29 +2972,11 @@ class IcebergLiteTable:
                 stage = os.path.join(
                     self.path, "data", f"rw-{uuidlib.uuid4().hex[:12]}"
                 )
-                if zorder_by:
-                    from data_lakehouse_platform_spark.sources.clustering import (
-                        zorder_key,
-                    )
-
-                    missing = [c for c in zorder_by if c not in sub.columns]
-                    if missing:
-                        raise ValueError(
-                            f"zorder_by columns {missing} not in the table"
-                        )
-                    staged = (
-                        zorder_key(sub, list(zorder_by))
-                        .repartitionByRange(n_out, F.col("__zkey"))
-                        .sortWithinPartitions("__zkey")
-                        .drop("__zkey")
-                    )
-                else:
-                    staged = sub.coalesce(n_out)
                 # compacted files must keep their field-id footers, or one
                 # rewrite_data_files would turn an evolution-safe table
-                # back into an id-less (rename-refusing) one
+                # back into an id-less (by-name resolved) one
                 staged = self._stamp_field_ids(
-                    staged, self._field_names_by_id_inv(meta)
+                    sub.coalesce(n_out), self._field_names_by_id_inv(meta)
                 )
                 self._parquet_with_field_ids(
                     lambda s=staged, p=stage: s.write.mode(
@@ -4193,18 +3073,11 @@ class IcebergLiteTable:
 
         min_seq = min([seq] + [fseq for _p, fseq, _pt in kept])
         ml_rows = [
-            {
-                "manifest_path": mpath,
-                "manifest_length": os.path.getsize(mpath),
-                "partition_spec_id": default_spec_id, "content": 0,
-                "sequence_number": seq, "min_sequence_number": min_seq,
-                "added_snapshot_id": snap_id,
-                "added_files_count": len(new_files),
-                "existing_files_count": len(kept),
-                "deleted_files_count": 0,
-                "added_rows_count": sum(n for _, n, _s, _pt in new_files),
-                "existing_rows_count": 0, "deleted_rows_count": 0,
-            }
+            _new_manifest_row(
+                mpath, 0, default_spec_id, snap_id, seq, len(new_files),
+                sum(n for _, n, _s, _pt in new_files),
+                min_seq=min_seq, existing_files=len(kept),
+            )
         ]
         # keep delete manifests that still matter (any equality-delete
         # entry); drop pure-position manifests — their targets are gone
@@ -4229,33 +3102,15 @@ class IcebergLiteTable:
             # seq STRICTLY BELOW its own.  A manifest whose commit
             # sequence (>= every entry's seq) no longer exceeds any
             # surviving file's sequence cannot match anything — carrying
-            # it would only keep merge()/upsert-refusal guards tripped
-            # forever after full compaction.
+            # it would only make every later read pay an anti-join that
+            # removes nothing.
             del_seq = int(row.get("sequence_number") or 0)
             if not any(s < del_seq for _p, s, _pt in kept):
                 continue
             ml_rows.append(row)  # provenance verbatim
-        ml_path = os.path.join(
-            mdir, f"snap-{snap_id}-1-{uuidlib.uuid4().hex}.avro"
+        self._commit_snapshot(
+            meta, snap_id, seq, now_ms, ml_rows, "replace", cur_id
         )
-        write_container(ml_path, _ML_SCHEMA, ml_rows,
-                        extra_metadata={"format-version": b"2"})
-
-        snap = {
-            "snapshot-id": snap_id, "sequence-number": seq,
-            "timestamp-ms": now_ms, "manifest-list": ml_path,
-            "summary": {"operation": "replace"},
-            "schema-id": int(meta.get("current-schema-id", 0)),
-            "parent-snapshot-id": cur_id,
-        }
-        meta["snapshots"] = snaps + [snap]
-        meta["current-snapshot-id"] = snap_id
-        meta["last-sequence-number"] = seq
-        meta["last-updated-ms"] = now_ms
-        meta.setdefault("snapshot-log", []).append(
-            {"timestamp-ms": now_ms, "snapshot-id": snap_id}
-        )
-        self._commit_metadata_json(meta)
         return {
             "snapshot_id": snap_id,
             "rewritten_files": n_rewritten,
@@ -4269,8 +3124,8 @@ class IcebergLiteTable:
         their application properties; summaries live in metadata.json,
         so this is a pure metadata scan).  Returns -1 when none.
 
-        Caveat (documented, matches real Iceberg): the ledger rides
-        snapshot summaries, so :meth:`expire_snapshots` must retain at
+        Caveat (matches real Iceberg): the ledger rides snapshot
+        summaries, so another engine's snapshot expiry must retain at
         least the most recent stamped snapshot or a replay after
         expiry could double-append."""
         best = -1
@@ -4279,943 +3134,3 @@ class IcebergLiteTable:
             if sm.get("dlp.app-id") == app_id and "dlp.batch-id" in sm:
                 best = max(best, int(sm["dlp.batch-id"]))
         return best
-
-    # -- snapshot refs (spec: metadata.json `refs` map) -------------------
-
-    def refs(self) -> dict:
-        """The table's named refs (tags + branches).  ``main`` always
-        resolves — explicitly when present in metadata, implicitly to
-        the current snapshot otherwise (HadoopCatalog tables written
-        by this module don't materialize it)."""
-        out = dict(self.metadata().get("refs") or {})
-        if "main" not in out:
-            cur = self.current_snapshot_id()
-            if cur is not None:
-                out["main"] = {"snapshot-id": cur, "type": "branch"}
-        return out
-
-    def resolve_ref(self, name: str) -> int:
-        r = self.refs().get(name)
-        if r is None:
-            raise FileNotFoundError(
-                f"ref {name!r} not in table (have {sorted(self.refs())})"
-            )
-        return int(r["snapshot-id"])
-
-    def _set_ref(self, name: str, kind: str, snapshot_id: int | None):
-        meta = self.metadata()
-        sid = (
-            int(meta.get("current-snapshot-id"))
-            if snapshot_id is None
-            else int(snapshot_id)
-        )
-        known = {int(s["snapshot-id"]) for s in meta.get("snapshots", [])}
-        if sid not in known:
-            raise FileNotFoundError(
-                f"snapshot {sid} not in table (have {sorted(known)})"
-            )
-        refs = dict(meta.get("refs") or {})
-        refs[name] = {"snapshot-id": sid, "type": kind}
-        meta["refs"] = refs
-        self._commit_metadata_json(meta)
-        return sid
-
-    def create_tag(self, name: str, snapshot_id: int | None = None) -> int:
-        """Pin a snapshot under an immutable name (Iceberg TAG): the
-        snapshot survives :meth:`expire_snapshots` until the tag is
-        dropped — reproducible reads for audits/backtests."""
-        return self._set_ref(name, "tag", snapshot_id)
-
-    def create_branch(
-        self, name: str, snapshot_id: int | None = None
-    ) -> int:
-        """Named branch pointer: readable via ``read(ref=...)``,
-        writable via ``write(..., branch=...)`` (the write-audit-
-        publish staging target), publishable via :meth:`fast_forward`.
-        Pins expiry like a tag."""
-        return self._set_ref(name, "branch", snapshot_id)
-
-    def fast_forward(self, name: str, from_ref: str) -> int:
-        """Publish a staging branch (the WAP loop's final verb):
-        advance branch ``name`` to ``from_ref``'s head, REFUSING unless
-        ``name``'s current head is an ancestor of that head (the
-        fast-forward condition — anything else would silently drop
-        commits, Iceberg's ``fast_forward`` procedure refuses the same
-        way).  Publishing to ``main`` also flips current-snapshot-id
-        and appends to snapshot-log, so every non-ref reader atomically
-        sees the audited commits.  Returns the published snapshot id.
-        """
-        meta = self.metadata()
-        src = self.resolve_ref(from_ref)
-        refs = dict(meta.get("refs") or {})
-        if name in refs:
-            if refs[name].get("type") != "branch":
-                raise ValueError(f"ref {name!r} is a tag; tags are "
-                                 "immutable")
-            tgt = int(refs[name]["snapshot-id"])
-        elif name == "main":
-            tgt = self.current_snapshot_id()
-            if tgt is None:
-                raise FileNotFoundError(
-                    f"table at {self.path} has no current snapshot"
-                )
-        else:
-            raise FileNotFoundError(
-                f"branch {name!r} not in table (have {sorted(refs)})"
-            )
-        snaps = {
-            int(s["snapshot-id"]): s for s in meta.get("snapshots", [])
-        }
-        cur, is_ancestor = src, False
-        while True:
-            if cur == tgt:
-                is_ancestor = True
-                break
-            parent = snaps.get(cur, {}).get("parent-snapshot-id")
-            if parent is None:
-                break
-            cur = int(parent)
-        if not is_ancestor:
-            raise ValueError(
-                f"cannot fast-forward {name!r} (head {tgt}) to "
-                f"{from_ref!r} (head {src}): {tgt} is not an ancestor "
-                f"of {src} — the branches diverged; rebuild the staging "
-                "branch from the current head instead"
-            )
-        refs[name] = {"snapshot-id": src, "type": "branch"}
-        meta["refs"] = refs
-        if name == "main":
-            meta["current-snapshot-id"] = src
-            meta.setdefault("snapshot-log", []).append(
-                {"timestamp-ms": int(time.time() * 1000),
-                 "snapshot-id": src}
-            )
-        self._commit_metadata_json(meta)
-        return src
-
-    def cherrypick_snapshot(
-        self, snapshot_id: int, branch: str = "main"
-    ) -> int:
-        """Re-apply an APPEND snapshot's added files onto ``branch``'s
-        current head as a NEW snapshot — Iceberg's
-        ``cherrypick_snapshot`` procedure, the WAP loop's recovery verb
-        when :meth:`fast_forward` refuses because main advanced past
-        the audit branch point (diverged heads).  Only pure appends are
-        cherry-pickable: a delete/overwrite/replace re-applied onto a
-        different base could retract rows it never audited against
-        (real Iceberg refuses the same way).
-
-        The added manifests are REWRITTEN at the new sequence number
-        (entries re-stamped status=1/new snapshot/new seq): the files
-        logically arrive NOW — after every delete already on the
-        target branch — so under the spec's strict ``data seq <
-        delete seq`` gate those earlier deletes do NOT retract them.
-        Carrying the old sequence number verbatim would backdate the
-        files to before deletes they were never audited against,
-        wrongly exposing them to retraction — exactly the hazard the
-        re-stamp exists to prevent.  The head's own manifests carry verbatim
-        with their provenance.  Refuses when the picked snapshot is
-        already an ancestor of the head (nothing to apply) or when any
-        of its files is already live at the head (double-apply).  The
-        new snapshot's summary carries ``source-snapshot-id`` exactly
-        like the real procedure.  Returns the new snapshot id.
-        """
-        import uuid as uuidlib
-
-        from data_lakehouse_platform_spark.sources.avro_lite import (
-            read_container, write_container,
-        )
-
-        meta = self.metadata()
-        snaps = meta.get("snapshots", [])
-        by_id = {int(s["snapshot-id"]): s for s in snaps}
-        snapshot_id = int(snapshot_id)
-        if snapshot_id not in by_id:
-            raise FileNotFoundError(
-                f"snapshot {snapshot_id} not in table "
-                f"(have {sorted(by_id)})"
-            )
-        picked = by_id[snapshot_id]
-        op = (picked.get("summary") or {}).get("operation")
-        if op != "append":
-            raise IcebergProtocolError(
-                f"cherrypick_snapshot supports pure APPEND snapshots; "
-                f"snapshot {snapshot_id} is {op!r} — re-applying a "
-                "delete/overwrite onto a different base could retract "
-                "rows it never audited against"
-            )
-        cur_id = self._resolve_branch_base(meta, branch)
-        if cur_id is None:
-            raise FileNotFoundError(
-                f"branch {branch!r} has no head to apply onto"
-            )
-        walk = cur_id
-        while walk is not None:
-            if walk == snapshot_id:
-                raise ValueError(
-                    f"snapshot {snapshot_id} is already an ancestor of "
-                    f"{branch!r}'s head — nothing to re-apply (use "
-                    "fast_forward to publish an ancestor chain)"
-                )
-            p = by_id.get(walk, {}).get("parent-snapshot-id")
-            walk = int(p) if p is not None else None
-        added = [
-            r for r in self._manifest_list_rows(picked)
-            if int(r.get("added_snapshot_id") or -1) == snapshot_id
-        ]
-        if not added:
-            raise IcebergProtocolError(
-                f"snapshot {snapshot_id} added no manifests — nothing "
-                "to cherry-pick"
-            )
-        if any(int(r.get("content") or 0) != 0 for r in added):
-            raise IcebergProtocolError(
-                f"snapshot {snapshot_id} carries delete manifests — "
-                "not a pure append"
-            )
-        head = by_id[cur_id]
-        head_files = set()
-        for mp, content, _s in self._manifest_paths(head):
-            if content != 0:
-                continue
-            _, entries = read_container(mp)
-            for e in entries:
-                if int(e.get("status") or 0) != 2:
-                    head_files.add(e["data_file"]["file_path"])
-
-        new_snap_id = max(by_id) + 1
-        seq = int(meta.get("last-sequence-number", 0)) + 1
-        now_ms = int(time.time() * 1000)
-        specs = {
-            int(s0.get("spec-id", 0)): s0.get("fields", [])
-            for s0 in meta.get("partition-specs", [])
-        }
-        cur_fields, cur_sid = self._current_schema(meta)
-        new_rows, n_rows_total = [], 0
-        for r in added:
-            schema_w, entries = read_container(r["manifest_path"])
-            new_entries = []
-            for e in entries:
-                if int(e.get("status") or 0) == 2:
-                    continue
-                fp = e["data_file"]["file_path"]
-                if fp in head_files:
-                    raise IcebergProtocolError(
-                        f"data file {fp} from snapshot {snapshot_id} "
-                        f"is already live at {branch!r}'s head — "
-                        "cherry-pick would double-apply it"
-                    )
-                new_entries.append({
-                    **e, "status": 1, "snapshot_id": new_snap_id,
-                    "sequence_number": seq,
-                    "file_sequence_number": seq,
-                })
-            spec_id = int(r.get("partition_spec_id") or 0)
-            extra = {
-                "schema": json.dumps(
-                    {"type": "struct", "schema-id": cur_sid,
-                     "fields": cur_fields}
-                ).encode(),
-                "partition-spec": json.dumps(
-                    specs.get(spec_id, [])
-                ).encode(),
-                "partition-spec-id": str(spec_id).encode(),
-                "format-version": b"2",
-                "content": b"data",
-            }
-            mpath = os.path.join(
-                self.metadata_dir, f"m-{uuidlib.uuid4().hex}.avro"
-            )
-            write_container(mpath, schema_w, new_entries,
-                            extra_metadata=extra)
-            n_added = sum(
-                int(e["data_file"]["record_count"]) for e in new_entries
-            )
-            n_rows_total += n_added
-            new_rows.append({
-                "manifest_path": mpath,
-                "manifest_length": os.path.getsize(mpath),
-                "partition_spec_id": spec_id, "content": 0,
-                "sequence_number": seq, "min_sequence_number": seq,
-                "added_snapshot_id": new_snap_id,
-                "added_files_count": len(new_entries),
-                "existing_files_count": 0, "deleted_files_count": 0,
-                "added_rows_count": n_added,
-                "existing_rows_count": 0, "deleted_rows_count": 0,
-            })
-        ml_rows = new_rows + self._manifest_list_rows(head)
-        ml_path = os.path.join(
-            self.metadata_dir,
-            f"snap-{new_snap_id}-1-{uuidlib.uuid4().hex}.avro",
-        )
-        write_container(ml_path, _ML_SCHEMA, ml_rows,
-                        extra_metadata={"format-version": b"2"})
-        snap = {
-            "snapshot-id": new_snap_id, "sequence-number": seq,
-            "timestamp-ms": now_ms, "manifest-list": ml_path,
-            "summary": {
-                "operation": "append",
-                "source-snapshot-id": str(snapshot_id),
-            },
-            "schema-id": cur_sid,
-            "parent-snapshot-id": cur_id,
-        }
-        meta["snapshots"] = snaps + [snap]
-        meta["last-sequence-number"] = seq
-        meta["last-updated-ms"] = now_ms
-        self._advance_head(meta, new_snap_id, now_ms, branch)
-        self._commit_metadata_json(meta)
-        return new_snap_id
-
-    def drop_ref(self, name: str) -> None:
-        if name == "main":
-            raise ValueError("cannot drop the main branch")
-        meta = self.metadata()
-        refs = dict(meta.get("refs") or {})
-        if name not in refs:
-            raise FileNotFoundError(f"ref {name!r} not in table")
-        del refs[name]
-        meta["refs"] = refs
-        self._commit_metadata_json(meta)
-
-    def metadata_table(
-        self,
-        spark: SparkSession,
-        kind: str,
-        snapshot_id: int | None = None,
-    ) -> DataFrame:
-        """Iceberg's queryable METADATA TABLES (the ``SELECT * FROM
-        tbl.files / .snapshots / .history / .manifests / .partitions``
-        surface) as DataFrames.  Everything here is derived from
-        manifests/metadata.json only — no data file is ever opened, so
-        at 100 TB these answer in metadata time (the whole point of
-        the spec's stats-in-manifests design).
-
-        kinds: ``files`` (live data+delete files with sequence and
-        stringified partition values), ``snapshots``, ``history``
-        (snapshot-log), ``manifests`` (manifest-list rows of the
-        current/pinned snapshot), ``partitions`` (per-partition-tuple
-        file/record totals), ``refs`` (named refs + implicit main),
-        ``entries`` (raw manifest entries incl. DELETED rows — the
-        sequence/delete-gating debug view), ``all_manifests`` /
-        ``all_files`` (every snapshot's manifests / every referenced
-        file with its first referencing snapshot — the expire/orphan
-        analysis views) (r10).
-        """
-        meta = self.metadata()
-        snaps = {int(s["snapshot-id"]): s for s in meta.get("snapshots", [])}
-
-        def _pinned() -> dict:
-            sid = (
-                self.current_snapshot_id()
-                if snapshot_id is None
-                else snapshot_id
-            )
-            if sid is None or sid not in snaps:
-                raise FileNotFoundError(
-                    f"snapshot {sid} not in table (have {sorted(snaps)})"
-                )
-            return snaps[sid]
-
-        if kind == "files":
-            rows = []
-            snap = _pinned()
-            for mpath, mcontent, mseq in self._manifest_paths(snap):
-                _, entries = read_container(mpath)
-                for e in entries:
-                    if int(e.get("status") or 0) == 2:
-                        continue
-                    d = e["data_file"]
-                    seq = e.get("sequence_number")
-                    part = d.get("partition") or {}
-                    rows.append(
-                        (
-                            int(d.get("content") or 0),
-                            _local_path(d["file_path"]),
-                            str(d.get("file_format", "")),
-                            int(d.get("record_count") or 0),
-                            int(d.get("file_size_in_bytes") or 0),
-                            mseq if seq is None else int(seq),
-                            {
-                                k: (None if v is None else str(v))
-                                for k, v in part.items()
-                            },
-                        )
-                    )
-            return spark.createDataFrame(
-                rows,
-                "content int, file_path string, file_format string, "
-                "record_count long, file_size_in_bytes long, "
-                "sequence_number long, partition map<string,string>",
-            )
-        if kind == "snapshots":
-            rows = [
-                (
-                    int(s.get("timestamp-ms") or 0),
-                    int(s["snapshot-id"]),
-                    (
-                        int(s["parent-snapshot-id"])
-                        if s.get("parent-snapshot-id") is not None
-                        else None
-                    ),
-                    str((s.get("summary") or {}).get("operation", "")),
-                    str(s.get("manifest-list", "")),
-                )
-                for s in meta.get("snapshots", [])
-            ]
-            return spark.createDataFrame(
-                rows,
-                "committed_at_ms long, snapshot_id long, parent_id long, "
-                "operation string, manifest_list string",
-            )
-        if kind == "history":
-            cur = meta.get("current-snapshot-id")
-            rows = [
-                (
-                    int(h.get("timestamp-ms") or 0),
-                    int(h["snapshot-id"]),
-                    int(h["snapshot-id"]) == cur,
-                )
-                for h in meta.get("snapshot-log", [])
-            ]
-            return spark.createDataFrame(
-                rows,
-                "made_current_at_ms long, snapshot_id long, "
-                "is_current boolean",
-            )
-        if kind == "manifests":
-            rows = [
-                (
-                    r["manifest_path"],
-                    int(r.get("manifest_length") or 0),
-                    int(r.get("partition_spec_id") or 0),
-                    int(r.get("content") or 0),
-                    int(r.get("sequence_number") or 0),
-                    int(r.get("min_sequence_number") or 0),
-                    int(r.get("added_snapshot_id") or 0),
-                    int(r.get("added_files_count") or 0),
-                    int(r.get("existing_files_count") or 0),
-                    int(r.get("deleted_files_count") or 0),
-                )
-                for r in self._manifest_list_rows(_pinned())
-            ]
-            return spark.createDataFrame(
-                rows,
-                "path string, length long, partition_spec_id int, "
-                "content int, sequence_number long, "
-                "min_sequence_number long, added_snapshot_id long, "
-                "added_files_count int, existing_files_count int, "
-                "deleted_files_count int",
-            )
-        if kind == "partitions":
-            data_files, _deletes = self.plan_files(
-                snapshot_id=(
-                    snapshot_id
-                    if snapshot_id is not None
-                    else self.current_snapshot_id()
-                )
-            )
-            agg: dict[tuple, list[int]] = {}
-            sizes = {}
-            for p, _seq, part in data_files:
-                key = tuple(sorted(part.items()))
-                agg.setdefault(key, [0, 0])
-                agg[key][0] += 1
-                sizes.setdefault(p, None)
-            # record counts come from the files listing (manifest
-            # record_count), still metadata-only
-            counts: dict[str, int] = {}
-            snap = _pinned()
-            for mpath, mcontent, _mseq in self._manifest_paths(snap):
-                if mcontent == 1:
-                    continue
-                _, entries = read_container(mpath)
-                for e in entries:
-                    if int(e.get("status") or 0) == 2:
-                        continue
-                    d = e["data_file"]
-                    if int(d.get("content") or 0) == 0:
-                        counts[_local_path(d["file_path"])] = int(
-                            d.get("record_count") or 0
-                        )
-            for p, _seq, part in data_files:
-                key = tuple(sorted(part.items()))
-                agg[key][1] += counts.get(p, 0)
-            rows = [
-                (
-                    {k: (None if v is None else str(v)) for k, v in key},
-                    n_files,
-                    n_records,
-                )
-                for key, (n_files, n_records) in sorted(agg.items())
-            ]
-            return spark.createDataFrame(
-                rows,
-                "partition map<string,string>, file_count long, "
-                "record_count long",
-            )
-        if kind == "refs":
-            # the `tbl.refs` metadata table: every named ref plus the
-            # implicit main head — the WAP loop's audit surface
-            rows = [
-                (
-                    str(name),
-                    str(r.get("type", "branch")),
-                    int(r["snapshot-id"]),
-                )
-                for name, r in sorted(
-                    (meta.get("refs") or {}).items()
-                )
-            ]
-            cur = meta.get("current-snapshot-id")
-            if (
-                cur is not None
-                and int(cur) != -1
-                and "main" not in (meta.get("refs") or {})
-            ):
-                rows.insert(0, ("main", "branch", int(cur)))
-            return spark.createDataFrame(
-                rows, "name string, type string, snapshot_id long"
-            )
-        if kind == "entries":
-            # `tbl.entries`: the raw manifest-entry surface of the
-            # pinned snapshot — INCLUDING status=2 (DELETED) rows,
-            # which `files` filters out; the debugging view for
-            # sequence-number / delete-gating questions
-            rows = []
-            snap = _pinned()
-            for mpath, _mcontent, mseq in self._manifest_paths(snap):
-                _, entries = read_container(mpath)
-                for e in entries:
-                    d = e["data_file"]
-                    seq = e.get("sequence_number")
-                    fseq = e.get("file_sequence_number")
-                    rows.append(
-                        (
-                            int(e.get("status") or 0),
-                            (
-                                None
-                                if e.get("snapshot_id") is None
-                                else int(e["snapshot_id"])
-                            ),
-                            mseq if seq is None else int(seq),
-                            None if fseq is None else int(fseq),
-                            int(d.get("content") or 0),
-                            _local_path(d["file_path"]),
-                            str(d.get("file_format", "")),
-                            int(d.get("record_count") or 0),
-                            int(d.get("file_size_in_bytes") or 0),
-                        )
-                    )
-            return spark.createDataFrame(
-                rows,
-                "status int, snapshot_id long, sequence_number long, "
-                "file_sequence_number long, content int, "
-                "file_path string, file_format string, "
-                "record_count long, file_size_in_bytes long",
-            )
-        if kind == "all_manifests":
-            # `tbl.all_manifests`: manifest-list rows of EVERY valid
-            # snapshot, stamped with the snapshot that references them
-            rows = []
-            for sid in sorted(snaps):
-                for r in self._manifest_list_rows(snaps[sid]):
-                    rows.append(
-                        (
-                            _local_path(r["manifest_path"]),
-                            int(r.get("manifest_length") or 0),
-                            int(r.get("content") or 0),
-                            int(r.get("sequence_number") or 0),
-                            int(r.get("min_sequence_number") or 0),
-                            int(r.get("added_snapshot_id") or 0),
-                            sid,
-                        )
-                    )
-            return spark.createDataFrame(
-                rows,
-                "path string, length long, content int, "
-                "sequence_number long, min_sequence_number long, "
-                "added_snapshot_id long, reference_snapshot_id long",
-            )
-        if kind == "all_files":
-            # `tbl.all_files`: every data/delete file referenced by
-            # ANY valid snapshot (the expire/orphan-analysis view) —
-            # one row per distinct path, stamped with the earliest
-            # referencing snapshot
-            seen: dict[str, tuple] = {}
-            for sid in sorted(snaps):
-                for mpath, _mc, mseq in self._manifest_paths(
-                    snaps[sid]
-                ):
-                    _, entries = read_container(mpath)
-                    for e in entries:
-                        if int(e.get("status") or 0) == 2:
-                            continue
-                        d = e["data_file"]
-                        p = _local_path(d["file_path"])
-                        if p in seen:
-                            continue
-                        seq = e.get("sequence_number")
-                        seen[p] = (
-                            int(d.get("content") or 0),
-                            p,
-                            str(d.get("file_format", "")),
-                            int(d.get("record_count") or 0),
-                            int(d.get("file_size_in_bytes") or 0),
-                            mseq if seq is None else int(seq),
-                            sid,
-                        )
-            return spark.createDataFrame(
-                sorted(seen.values(), key=lambda r: r[1]),
-                "content int, file_path string, file_format string, "
-                "record_count long, file_size_in_bytes long, "
-                "sequence_number long, first_referenced_snapshot_id "
-                "long",
-            )
-        raise ValueError(
-            f"unknown metadata table {kind!r} "
-            "(files|snapshots|history|manifests|partitions|refs|"
-            "entries|all_files|all_manifests)"
-        )
-
-    def expire_snapshots(self, retain_last: int = 1) -> list[str]:
-        """Expire all but the newest ``retain_last`` snapshots and
-        physically delete the files ONLY they referenced (manifest
-        lists, manifests, data/delete files under this table's
-        directory) — Iceberg's expire_snapshots maintenance action,
-        the storage-reclaim companion to :meth:`rewrite_data_files`.
-        Reads at kept snapshots keep working; reads at expired ones
-        fail cleanly (snapshot no longer in the table).  Returns the
-        deleted paths."""
-        if retain_last < 1:
-            raise ValueError("retain_last must be >= 1")
-        meta = self.metadata()
-        snaps = sorted(
-            meta.get("snapshots", []),
-            key=lambda s: int(s["snapshot-id"]),
-        )
-        if len(snaps) <= retain_last:
-            return []
-        # refs PIN their snapshots (spec: expire never removes a
-        # snapshot a tag/branch points at)
-        pinned = {
-            int(r["snapshot-id"])
-            for r in (meta.get("refs") or {}).values()
-        }
-        kept = [
-            s
-            for i, s in enumerate(snaps)
-            if i >= len(snaps) - retain_last
-            or int(s["snapshot-id"]) in pinned
-        ]
-        kept_set = {int(s["snapshot-id"]) for s in kept}
-        dropped = [
-            s for s in snaps if int(s["snapshot-id"]) not in kept_set
-        ]
-        if not dropped:
-            return []
-        cur = meta.get("current-snapshot-id")
-        if cur not in kept_set:
-            raise ValueError(
-                "retain_last would expire the current snapshot"
-            )
-
-        def _refs(snapshot: dict) -> set[str]:
-            out = set()
-            ml = snapshot.get("manifest-list")
-            if ml:
-                out.add(os.path.abspath(_local_path(ml)))
-            for mp, _c, _s in self._manifest_paths(snapshot):
-                out.add(os.path.abspath(mp))
-                _, entries = read_container(mp)
-                for e in entries:
-                    out.add(
-                        os.path.abspath(
-                            _local_path(e["data_file"]["file_path"])
-                        )
-                    )
-            return out
-
-        keep_files = set()
-        for s in kept:
-            keep_files |= _refs(s)
-        # Collect EVERY dropped snapshot's references BEFORE deleting
-        # anything: snapshots share manifest files (appends carry them
-        # forward), so deleting while iterating would try to re-read a
-        # manifest an earlier iteration already removed.
-        drop_files = set()
-        for s in dropped:
-            drop_files |= _refs(s)
-        root = os.path.abspath(self.path) + os.sep
-        removed = []
-        for p in sorted(drop_files):
-            # never touch anything outside the table directory
-            if p.startswith(root) and p not in keep_files and (
-                os.path.exists(p)
-            ):
-                os.remove(p)
-                removed.append(p)
-        kept_ids = {int(s["snapshot-id"]) for s in kept}
-        meta["snapshots"] = kept
-        meta["snapshot-log"] = [
-            x
-            for x in meta.get("snapshot-log", [])
-            if int(x["snapshot-id"]) in kept_ids
-        ]
-        self._commit_metadata_json(meta)
-        return sorted(removed)
-
-    def remove_orphan_files(
-        self, older_than_ms: int | None = None
-    ) -> list[str]:
-        """Delete files under ``data/`` that NO snapshot references —
-        Iceberg's remove_orphan_files maintenance procedure, the
-        cleaner for crashed-writer staging debris and files from
-        aborted commits that :meth:`expire_snapshots` (which only
-        deletes what dropped snapshots referenced) can never touch.
-
-        ``older_than_ms`` (default: 3 days ago, the procedure's
-        documented default) is the safety horizon: files younger than
-        it are kept even when unreferenced, because an IN-FLIGHT
-        writer's staged files are unreferenced BY DESIGN until its
-        commit lands — deleting them would corrupt the race it is
-        about to win.  Only the data directory is swept; metadata
-        files (manifests, manifest lists, metadata.json) belong to
-        :meth:`expire_snapshots`'s lifecycle.  Returns deleted paths.
-        """
-        meta = self.metadata()
-        horizon = (
-            int(time.time() * 1000) - 3 * 24 * 3600 * 1000
-            if older_than_ms is None
-            else int(older_than_ms)
-        )
-        referenced: set[str] = set()
-        for s in meta.get("snapshots", []):
-            for mp, _c, _s in self._manifest_paths(s):
-                from data_lakehouse_platform_spark.sources.avro_lite import (
-                    read_container,
-                )
-
-                _, entries = read_container(mp)
-                for e in entries:
-                    # status-2 (DELETED) entries included: an OLDER
-                    # snapshot may still read that file
-                    referenced.add(
-                        os.path.abspath(
-                            _local_path(e["data_file"]["file_path"])
-                        )
-                    )
-        ddir = os.path.join(os.path.abspath(self.path), "data")
-        removed = []
-        for root, _dirs, files in os.walk(ddir):
-            for f in files:
-                p = os.path.abspath(os.path.join(root, f))
-                if p in referenced:
-                    continue
-                if os.path.getmtime(p) * 1000 >= horizon:
-                    continue  # inside the in-flight-writer horizon
-                os.remove(p)
-                removed.append(p)
-        # sweep now-empty staging directories (cosmetic, best-effort)
-        for root, dirs, files in os.walk(ddir, topdown=False):
-            if root != ddir and not dirs and not files:
-                try:
-                    os.rmdir(root)
-                except OSError:
-                    pass
-        return sorted(removed)
-
-    def add_files(self, spark: SparkSession, paths: list[str]) -> int:
-        """Register EXISTING parquet files as a new append snapshot
-        WITHOUT rewriting them — Iceberg's ``add_files`` migration
-        procedure, the zero-copy adoption path for a directory of
-        plain parquet a user wants under snapshot/time-travel
-        management.  The files stay where they are (absolute paths in
-        the manifest; the spec allows locations outside the table
-        dir).  Schemas must match the table's by name+type (files are
-        id-less, so reads resolve them by NAME — exactly the
-        fallback _resolved_scan implements); on a fresh table the
-        first file's Spark-read schema becomes the table schema.
-        Unpartitioned only: a hive-layout directory carries partition
-        values in DIRECTORY NAMES that this registration would
-        silently drop — refused loudly.  The guard scans components
-        BELOW the table root / common registration root: a constant
-        ``=`` ancestor shared by every registered file (a workspace
-        like ``/data/run=5/out/``) is not a varying partition value
-        and passes; any ``key=value`` component that differs across
-        the registration sits below the common root and refuses.
-        Returns the snapshot id.
-        """
-        import pyarrow.parquet as pq
-
-        if not paths:
-            raise ValueError("add_files needs at least one parquet path")
-        # Hive-layout guard: scan directory components RELATIVE to the
-        # table root (for files inside it) or to the common registration
-        # root (for external files) — an ancestor workspace directory
-        # that happens to contain '=' (e.g. /data/run=5/ws/) is not a
-        # partition value of THIS registration and must not trip it.
-        # Components below the root (date=2020/sub/f.parquet) still do:
-        # those partition values would be silently dropped (same
-        # discipline as delta convert_from_parquet).
-        abs_paths = [os.path.abspath(p) for p in paths]
-        for p in abs_paths:
-            if not os.path.exists(p):
-                raise FileNotFoundError(p)
-        reg_root = os.path.commonpath(
-            [os.path.dirname(p) for p in abs_paths]
-        )
-        tbl_root = os.path.abspath(self.path)
-        for p, ap in zip(paths, abs_paths):
-            root = (
-                tbl_root
-                if ap.startswith(tbl_root + os.sep)
-                else reg_root
-            )
-            rel = os.path.relpath(os.path.dirname(ap), root)
-            comps = [] if rel == "." else rel.split(os.sep)
-            if any("=" in comp for comp in comps):
-                raise IcebergProtocolError(
-                    f"{p} sits under a hive-partition directory — its "
-                    "partition values live in the directory name and "
-                    "would be silently dropped; rewrite through "
-                    "write(partition_by=...) instead"
-                )
-        # validate the footer schema of EVERY file (files are id-less,
-        # so a divergent later file would be silently NULL-filled by
-        # the by-name read fallback — silent corruption, not an error).
-        # Footer reads go through pyarrow — zero per-file Spark jobs on
-        # a 10k-file adoption; the arrow schema converts to the same
-        # Iceberg (name, type) tuples the Spark reader would derive.
-        from pyspark.sql.pandas.types import from_arrow_schema
-
-        per_file = [
-            (
-                p,
-                [
-                    (f["name"], f["type"])
-                    for f in self._iceberg_schema(
-                        from_arrow_schema(pq.read_schema(p))
-                    )
-                ],
-            )
-            for p in paths
-        ]
-        fresh = False
-        try:
-            meta = self.metadata()
-            cur_fields, _sid = self._current_schema(meta)
-            tcols = [(f["name"], f["type"]) for f in cur_fields]
-            if self._table_spec(meta):
-                raise IcebergProtocolError(
-                    "add_files targets unpartitioned tables only — "
-                    "registered files carry no partition tuple, so "
-                    "manifest pruning on a partitioned table would be "
-                    "unsound"
-                )
-        except FileNotFoundError:
-            fresh = True
-            tcols = per_file[0][1]
-        # validate BEFORE any commit (incl. fresh-table creation) so a
-        # refused add_files leaves no trace
-        for p, ice in per_file:
-            if ice != tcols:
-                raise ValueError(
-                    f"{p}: file schema {ice} differs from table "
-                    f"schema {tcols}; align or rewrite through write()"
-                )
-        if fresh:
-            # fresh table: create it with the file schema via an empty
-            # write, then register the files as the first real snapshot
-            # (the round's ONLY Spark read — adoption into an existing
-            # table is footer-validated entirely via pyarrow)
-            self.write(spark.read.parquet(paths[0]).limit(0))
-        # one manifest of existing files, committed as a plain append:
-        # reuse write()'s commit shape by constructing entries directly
-        meta = self.metadata()
-        snaps = meta.get("snapshots", [])
-        snap_id = max(
-            (int(s["snapshot-id"]) for s in snaps), default=0
-        ) + 1
-        seq = int(meta.get("last-sequence-number", 0)) + 1
-        now_ms = int(time.time() * 1000)
-        entries = [
-            {
-                "status": 1, "snapshot_id": snap_id,
-                "sequence_number": seq, "file_sequence_number": seq,
-                "data_file": {
-                    "content": 0,
-                    "file_path": os.path.abspath(p),
-                    "file_format": "PARQUET", "partition": {},
-                    "record_count": pq.read_metadata(p).num_rows,
-                    "file_size_in_bytes": os.path.getsize(p),
-                },
-            }
-            for p in paths
-        ]
-        cur_sid = int(meta.get("current-schema-id", 0))
-        cur_fields = next(
-            s["fields"] for s in meta.get("schemas", [])
-            if s.get("schema-id") == cur_sid
-        )
-        import uuid as uuidlib
-
-        from data_lakehouse_platform_spark.sources.avro_lite import (
-            write_container,
-        )
-
-        extra = {
-            "schema": json.dumps(
-                {"type": "struct", "schema-id": cur_sid,
-                 "fields": cur_fields}
-            ).encode(),
-            "partition-spec": json.dumps([]).encode(),
-            "partition-spec-id": b"0",
-            "format-version": b"2",
-            "content": b"data",
-        }
-        mpath = os.path.join(
-            self.metadata_dir, f"m-{uuidlib.uuid4().hex}.avro"
-        )
-        write_container(mpath, _manifest_schema([]), entries,
-                        extra_metadata=extra)
-        n_rows = sum(e["data_file"]["record_count"] for e in entries)
-        ml_rows = [
-            {
-                "manifest_path": mpath,
-                "manifest_length": os.path.getsize(mpath),
-                "partition_spec_id": 0, "content": 0,
-                "sequence_number": seq, "min_sequence_number": seq,
-                "added_snapshot_id": snap_id,
-                "added_files_count": len(paths),
-                "existing_files_count": 0, "deleted_files_count": 0,
-                "added_rows_count": n_rows,
-                "existing_rows_count": 0, "deleted_rows_count": 0,
-            }
-        ]
-        cur_id = meta.get("current-snapshot-id")
-        cur_snap = next(
-            (s for s in snaps if int(s["snapshot-id"]) == cur_id), None
-        )
-        if cur_snap is not None:
-            ml_rows.extend(self._manifest_list_rows(cur_snap))
-        ml_path = os.path.join(
-            self.metadata_dir,
-            f"snap-{snap_id}-1-{uuidlib.uuid4().hex}.avro",
-        )
-        write_container(ml_path, _ML_SCHEMA, ml_rows,
-                        extra_metadata={"format-version": b"2"})
-        snap = {
-            "snapshot-id": snap_id, "sequence-number": seq,
-            "timestamp-ms": now_ms, "manifest-list": ml_path,
-            "summary": {"operation": "append"},
-            "schema-id": cur_sid,
-        }
-        if cur_id is not None and int(cur_id) != -1:
-            snap["parent-snapshot-id"] = int(cur_id)
-        meta["snapshots"] = snaps + [snap]
-        meta["last-sequence-number"] = seq
-        meta["last-updated-ms"] = now_ms
-        self._advance_head(meta, snap_id, now_ms, "main")
-        self._commit_metadata_json(meta)
-        return snap_id

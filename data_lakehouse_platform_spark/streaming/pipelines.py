@@ -365,9 +365,10 @@ def append_stream_to_iceberg(
     ``stream:<checkpoint>``) and ``dlp.batch-id`` (= the micro-batch
     id), and a replayed batch whose id is already at or below
     :meth:`IcebergLiteTable.committed_batches` is skipped before any
-    write — the snapshot-summary ledger real Iceberg sinks use (with
-    the same documented caveat: ``expire_snapshots`` must retain the
-    most recent stamped snapshot).
+    write — the snapshot-summary ledger real Iceberg sinks use, with
+    their caveat: this engine never expires Iceberg snapshots, but
+    another engine's snapshot expiry must retain the most recent
+    stamped snapshot, or a replayed batch could append twice.
 
     Scale: pure appends — each micro-batch stages its own files and
     adds ONE manifest; no read-modify-write of existing data, so the
@@ -430,8 +431,9 @@ def upsert_stream_to_iceberg(
     upsert snapshot's summary is stamped with ``dlp.app-id`` /
     ``dlp.batch-id`` and a replayed batch at or below
     :meth:`IcebergLiteTable.committed_batches` is skipped before any
-    write (same documented caveat: ``expire_snapshots`` must retain
-    the most recent stamped snapshot).
+    write (same caveat as :func:`append_stream_to_iceberg`: another
+    engine's snapshot expiry must retain the most recent stamped
+    snapshot).
 
     Scale: commit cost is BATCH-sized, never table-sized — the delete
     file carries only the batch's key set and no existing data file is

@@ -40,12 +40,12 @@ attribution rewrite; 5 proves the STREAMING bounded-state claims):
      re-serving the snapshot would be a 50x blowup;
  10. data-skipping scan bounds (delta point predicate on a 256-file
      table + iceberg manifest point prune);
- 11. file-scoped ICEBERG MERGE on one partition of a 64-partition
-     2M-row table (read/write amplification bounds);
- 12. MERGE-ON-READ UPSERT (r8 equality-delete writer): same key-hose,
-     but the commit may only touch SOURCE-sized data — zero table
-     files read or rewritten, bytes written ~ source-sized — the
-     claim that a 100 TB table absorbs a streaming upsert in seconds.
+ 12. MERGE-ON-READ UPSERT (r8 equality-delete writer): a key-hose
+     into a 64-partition 2M-row Iceberg table whose commit may only
+     touch SOURCE-sized data — zero table files read or rewritten,
+     bytes written ~ source-sized — the claim that a 100 TB table
+     absorbs a streaming upsert in seconds.  (Number 11 is unused:
+     Iceberg has no copy-on-write MERGE; shape 7 covers Delta's.)
 
 Run: python stress.py   (~3-5 min on local[32]; exit 0 = all bounds hold)
 """
@@ -61,7 +61,7 @@ import urllib.request
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from data_lakehouse_platform_spark.operators.dedup import (  # noqa: E402
     lsh_candidate_pairs,
@@ -835,84 +835,9 @@ def main() -> None:
         )
 
     # ------------------------------------------------------------------
-    # shape 11: file-scoped ICEBERG MERGE — the manifest-surgery twin
-    # of shape 7.  An upsert confined to one identity partition of a
-    # 64-partition / 2M-row table must rewrite only that partition's
-    # files (plus the insert files), with read amplification bounded
-    # at ~two key scans + the touched files.
-    # ------------------------------------------------------------------
-    N11, P11 = 2_000_000, 64
-    s11 = tempfile.mkdtemp(prefix="stress11-")
-    ti = IcebergLiteTable(os.path.join(s11, "t"))
-    ti.write(
-        spark.range(N11).select(
-            F.col("id").alias("k"),
-            (F.col("id") % P11).cast("int").alias("bucket"),
-            (F.col("id") * 3).alias("val"),
-        ),
-        partition_by=["bucket"],
-    )
-    files11, _dels11 = ti.plan_files()
-    n_files_before = len(files11)
-    bytes_before = sum(os.path.getsize(p) for p, _s, _pt in files11)
-    bucket7_files = sum(
-        1 for _p, _s, part in files11 if part.get("bucket") == 7
-    )
-    src11 = spark.range(2_000).select(
-        (F.col("id") * P11 + 7).alias("k"),
-        F.lit(7).cast("int").alias("bucket"),
-        F.lit(-1).cast("long").alias("val"),
-    ).unionAll(
-        spark.range(500).select(
-            (N11 + F.col("id") * P11 + 7).alias("k"),
-            F.lit(7).cast("int").alias("bucket"),
-            F.lit(-2).cast("long").alias("val"),
-        )
-    )
-    mark11 = last_stage(spark)
-    res11 = ti.merge(spark, src11, keys=["k"])
-    merge_in11 = total_input_records(spark, mark11)
-    files11b, _ = ti.plan_files()
-    new_paths = {p for p, _s, _pt in files11b} - {
-        p for p, _s, _pt in files11
-    }
-    new_bytes11 = sum(os.path.getsize(p) for p in new_paths)
-    print(
-        f"[iceberg_merge_scoped] files {n_files_before:,} -> rewrote "
-        f"{res11['files_rewritten']:,} (bucket7 has {bucket7_files:,}),"
-        f" added {res11['files_added']:,}, bytes {bytes_before:,} -> "
-        f"wrote {new_bytes11:,}, merge input {merge_in11:,} vs table "
-        f"{N11:,}",
-        flush=True,
-    )
-    n_after11 = ti.read(spark).count()
-    if n_after11 != N11 + 500:
-        failures.append(
-            f"shape11 WRONG ANSWER: {n_after11:,} rows != {N11 + 500:,}"
-        )
-    if ti.read(spark, predicate="val = -1").count() != 2_000:
-        failures.append("shape11 WRONG ANSWER: updates not applied")
-    if res11["files_rewritten"] > bucket7_files:
-        failures.append(
-            f"shape11 BOUND: rewrote {res11['files_rewritten']:,} files"
-            f" > the touched partition's {bucket7_files:,}"
-        )
-    if new_bytes11 > 0.10 * bytes_before:
-        failures.append(
-            f"shape11 BOUND: merge wrote {new_bytes11:,} bytes > 10% "
-            f"of the {bytes_before:,}-byte table — not file-scoped"
-        )
-    if merge_in11 > 2.6 * N11 + 1_500_000:
-        failures.append(
-            f"shape11 BOUND: merge read {merge_in11:,} records > ~2 "
-            f"key scans + touched files of a {N11:,}-row table"
-        )
-    shutil.rmtree(s11, ignore_errors=True)
-
-    # ------------------------------------------------------------------
     # shape 12: MERGE-ON-READ UPSERT commit cost — the r8 equality-
-    # delete writer.  The same key-hose against a 2M-row table, but
-    # through upsert(): the commit may touch ONLY source-sized data
+    # delete writer.  A key-hose against a 2M-row table through
+    # upsert(): the commit may touch ONLY source-sized data
     # (stage the rows + distinct the key set) — zero table files read,
     # zero rewritten, bytes written ~ source-sized.  This is the claim
     # that a 100 TB table absorbs a streaming upsert in seconds; the

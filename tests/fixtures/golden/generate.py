@@ -23,13 +23,24 @@ Families:
   iceberg_schema_evolved                  add, rename, drop + re-add
                                           and an int->long promotion,
                                           one append under each schema
+                                          (FROZEN, see below)
   iceberg_spec_evolved                    identity-spec files, then
                                           bucket[4]-spec files, then a
                                           position delete across both
+                                          (FROZEN, see below)
 
 A plain run only builds families whose directory is MISSING (additive
 — committed bytes never churn); set GOLDEN_FORCE=1 to rebuild all,
 then review the git diff of the log/metadata files by hand.
+
+The two FROZEN families model tables another Iceberg writer evolved.
+They were built by commit 3d2cccd ("Add schema-evolved and
+spec-evolved Iceberg golden fixtures"), whose iceberg_lite still had
+the schema- and partition-evolution write verbs (add_column,
+rename_column, drop_column, update_column_type, update_spec).  Those
+verbs are retired, so this script can no longer rebuild them: to
+change either fixture, run that commit's generate.py.  GOLDEN_FORCE
+leaves them alone.
 """
 
 import json
@@ -295,67 +306,6 @@ def _build_v3dv(spark, path):
           [s["snapshot-id"] for s in t.metadata().get("snapshots", [])])
 
 
-def _build_schema_evolved(spark, path):
-    """Schema evolution as another Iceberg writer leaves it: one data
-    file per schema, every schema change a metadata-only commit.
-    s1 (id int, bucket, name, score) ids 0-3; add ``extra`` long, s2
-    ids 4-5; rename ``name`` -> ``label``, s3 ids 6-7; drop ``score``
-    and re-add it (a new field id, so older files read NULL), s4 ids
-    8-9; promote ``id`` int -> long, s5 ids 10-11."""
-    from pyspark.sql import functions as F
-
-    from data_lakehouse_platform_spark.sources.iceberg_lite import (
-        IcebergLiteTable,
-    )
-
-    def rows(lo, hi):
-        return seed_df(spark).filter(f"id >= {lo} AND id < {hi}")
-
-    t = IcebergLiteTable(path)
-    t.write(rows(0, 4))                                        # s1
-    t.add_column("extra", "long")
-    t.write(rows(4, 6).withColumn(
-        "extra", (F.col("id") * 100).cast("long")), mode="append")  # s2
-    t.rename_column("name", "label")
-    t.write(rows(6, 8).withColumnRenamed("name", "label").withColumn(
-        "extra", (F.col("id") * 100).cast("long")), mode="append")  # s3
-    t.drop_column("score")
-    t.add_column("score", "double")
-    t.write(rows(8, 10).select(
-        "id", "bucket", F.col("name").alias("label"),
-        (F.col("id") * 100).cast("long").alias("extra"),
-        (-F.col("id")).cast("double").alias("score"),
-    ), mode="append")                                          # s4
-    t.update_column_type("id", "long")
-    t.write(rows(10, 12).select(
-        F.col("id").cast("long").alias("id"), "bucket",
-        F.col("name").alias("label"),
-        (F.col("id") * 100).cast("long").alias("extra"),
-        (-F.col("id")).cast("double").alias("score"),
-    ), mode="append")                                          # s5
-    print("iceberg_schema_evolved snapshots:",
-          [s["snapshot-id"] for s in t.metadata().get("snapshots", [])])
-
-
-def _build_spec_evolved(spark, path):
-    """Partition evolution: s1 writes ids 0-9 under an identity spec
-    on ``bucket``; the default spec then moves to ``bucket[4]`` of
-    ``id`` and s2 appends ids 10-19 under it; s3 position-deletes one
-    row from each spec's files (ids 1 and 11)."""
-    from data_lakehouse_platform_spark.sources.iceberg_lite import (
-        IcebergLiteTable,
-    )
-
-    t = IcebergLiteTable(path)
-    t.write(seed_df(spark).filter("id < 10"),
-            partition_by=["bucket"])                           # s1
-    t.update_spec([("id", "bucket[4]")])
-    t.write(seed_df(spark).filter("id >= 10"), mode="append")  # s2
-    t.delete(spark, "id IN (1, 11)")                           # s3
-    print("iceberg_spec_evolved snapshots:",
-          [s["snapshot-id"] for s in t.metadata().get("snapshots", [])])
-
-
 def main():
     from data_lakehouse_platform_spark.session import get_spark
 
@@ -369,12 +319,8 @@ def main():
             os.path.join(HERE, "iceberg_partitioned")]
     v2c = [os.path.join(HERE, "delta_v2ckpt")]
     v3dv = [os.path.join(HERE, "iceberg_v3dv")]
-    schema_ev = [os.path.join(HERE, "iceberg_schema_evolved")]
-    spec_ev = [os.path.join(HERE, "iceberg_spec_evolved")]
     for group, build in ((flat, _build_flat), (part, _build_partitioned),
-                         (v2c, _build_v2ckpt), (v3dv, _build_v3dv),
-                         (schema_ev, _build_schema_evolved),
-                         (spec_ev, _build_spec_evolved)):
+                         (v2c, _build_v2ckpt), (v3dv, _build_v3dv)):
         if not force and all(os.path.isdir(p) for p in group):
             print(f"{[os.path.basename(p) for p in group]} present; "
                   "skipping (GOLDEN_FORCE=1 rebuilds)")

@@ -1,22 +1,15 @@
-"""Zero-copy adoption + maintenance verbs (r8): Delta CONVERT TO
-DELTA, Iceberg add_files, Iceberg remove_orphan_files — the migration
-on-ramps for data that already exists as plain parquet, and the
-cleaner for debris no snapshot ever referenced."""
+"""Zero-copy adoption (r8): Delta CONVERT TO DELTA — the migration
+on-ramp for data that already exists as plain parquet."""
 
 from __future__ import annotations
 
 import os
-import time
 
 import pytest
 
 from data_lakehouse_platform_spark.sources.delta_lite import (
     DeltaLiteTable,
     DeltaProtocolError,
-)
-from data_lakehouse_platform_spark.sources.iceberg_lite import (
-    IcebergLiteTable,
-    IcebergProtocolError,
 )
 
 
@@ -94,296 +87,6 @@ def test_convert_stats_enable_skipping(spark, tmp_path):
     _meta, live, _proto = t._replay(0)
     for a in live.values():
         assert _json.loads(a["stats"])["numRecords"] >= 0
-
-
-# -- Iceberg add_files ---------------------------------------------------
-
-
-def test_add_files_fresh_table(spark, tmp_path):
-    p = _plain_parquet_dir(spark, tmp_path, "ice-src")
-    files = sorted(
-        os.path.join(p, f) for f in os.listdir(p) if f.endswith(".parquet")
-    )
-    t = IcebergLiteTable(str(tmp_path / "ice"))
-    sid = t.add_files(spark, files)
-    got = sorted(tuple(r) for r in t.read(spark).collect())
-    want = sorted(tuple(r) for r in spark.read.parquet(p).collect())
-    assert got == want
-    assert t.current_snapshot_id() == sid
-    # the registered files were NOT copied into the table dir
-    assert all(os.path.dirname(f) == p for f in files)
-    # further appends/deletes work on top
-    t.write(
-        spark.createDataFrame(
-            [(999, 1.0, "x")], "id long, v double, tag string"
-        ),
-        mode="append",
-    )
-    t.delete(spark, "id = 0")
-    assert t.read(spark).count() == 50
-
-
-def test_add_files_into_existing_table_schema_checked(spark, tmp_path):
-    p = _plain_parquet_dir(spark, tmp_path, "src2")
-    files = sorted(
-        os.path.join(p, f) for f in os.listdir(p) if f.endswith(".parquet")
-    )
-    t = IcebergLiteTable(str(tmp_path / "ice2"))
-    t.write(spark.read.parquet(files[0]).limit(2))
-    n0 = t.read(spark).count()
-    t.add_files(spark, files[1:])
-    assert t.read(spark).count() == n0 + sum(
-        spark.read.parquet(f).count() for f in files[1:]
-    )
-    # schema mismatch refuses
-    bad = str(tmp_path / "bad")
-    spark.range(3).write.parquet(bad)
-    badf = [
-        os.path.join(bad, f)
-        for f in os.listdir(bad)
-        if f.endswith(".parquet")
-    ]
-    with pytest.raises(ValueError, match="differs from table schema"):
-        t.add_files(spark, badf)
-
-
-def test_add_files_refusals(spark, tmp_path):
-    t = IcebergLiteTable(str(tmp_path / "ice3"))
-    with pytest.raises(ValueError, match="at least one"):
-        t.add_files(spark, [])
-    hp = str(tmp_path / "hive2")
-    spark.range(10).selectExpr(
-        "id", "CAST(id % 2 AS STRING) AS part"
-    ).write.partitionBy("part").parquet(hp)
-    hfiles = [
-        os.path.join(dp, f)
-        for dp, _d, fs in os.walk(hp)
-        for f in fs
-        if f.endswith(".parquet")
-    ]
-    with pytest.raises(IcebergProtocolError, match="hive-partition"):
-        t.add_files(spark, hfiles)
-    # partitioned tables refuse registration (no partition tuple)
-    tp = IcebergLiteTable(str(tmp_path / "icep"))
-    tp.write(
-        spark.createDataFrame([(1, "eu", 1.0)],
-                              "id int, region string, v double"),
-        partition_by=["region"],
-    )
-    src = str(tmp_path / "flat")
-    spark.createDataFrame(
-        [(2, "us", 2.0)], "id int, region string, v double"
-    ).coalesce(1).write.parquet(src)
-    sfiles = [
-        os.path.join(src, f)
-        for f in os.listdir(src)
-        if f.endswith(".parquet")
-    ]
-    with pytest.raises(IcebergProtocolError, match="unpartitioned"):
-        tp.add_files(spark, sfiles)
-
-
-def test_add_files_no_per_file_spark_jobs(spark, tmp_path):
-    """Adoption into an EXISTING table footer-validates every file via
-    pyarrow, not one spark.read.parquet job per file (r10, VERDICT r9
-    wrong#4): a 10k-file adoption must not run 10k driver-side Spark
-    jobs.  Asserted via the job-group status tracker: zero jobs in the
-    group wrapping the add_files call."""
-    p = _plain_parquet_dir(spark, tmp_path, "many", n=200)
-    files = sorted(
-        os.path.join(p, f) for f in os.listdir(p) if f.endswith(".parquet")
-    )
-    assert len(files) >= 2
-    t = IcebergLiteTable(str(tmp_path / "ice-jobs"))
-    t.write(spark.read.parquet(files[0]).limit(1))
-    sc = spark.sparkContext
-    sc.setJobGroup("addfiles-probe", "add_files must run no jobs")
-    try:
-        t.add_files(spark, files)
-    finally:
-        sc.setJobGroup("", "")
-    jobs = sc.statusTracker().getJobIdsForGroup("addfiles-probe")
-    assert list(jobs) == [], (
-        f"add_files ran {len(jobs)} Spark jobs during adoption; "
-        "footer validation must stay pyarrow-only"
-    )
-    # and the adoption itself is sound
-    assert t.read(spark).count() == 1 + sum(
-        spark.read.parquet(f).count() for f in files
-    )
-
-
-def test_add_files_ignores_eq_in_unrelated_ancestors(spark, tmp_path):
-    """The hive-layout guard scans directory components RELATIVE to
-    the registration root, not the absolute path (ADVICE r9): a
-    workspace ancestor like .../run=5/out/ must not trip the refusal,
-    while true hive components BELOW the root still do."""
-    ws = tmp_path / "run=5" / "out"
-    os.makedirs(str(ws))
-    src = str(ws / "flat")
-    spark.range(10).selectExpr("id", "id * 2 AS v").repartition(
-        2
-    ).write.parquet(src)
-    files = sorted(
-        os.path.join(src, f)
-        for f in os.listdir(src)
-        if f.endswith(".parquet")
-    )
-    t = IcebergLiteTable(str(tmp_path / "ice-anc"))
-    t.add_files(spark, files)  # must NOT raise despite run=5 ancestor
-    assert t.read(spark).count() == 10
-
-    # hive components below the registration root still refuse
-    hp = str(ws / "hive")
-    spark.range(10).selectExpr(
-        "id", "CAST(id % 2 AS STRING) AS part"
-    ).write.partitionBy("part").parquet(hp)
-    hfiles = [
-        os.path.join(dp, f)
-        for dp, _d, fs in os.walk(hp)
-        for f in fs
-        if f.endswith(".parquet")
-    ]
-    with pytest.raises(IcebergProtocolError, match="hive-partition"):
-        t.add_files(spark, hfiles)
-
-
-# -- Iceberg remove_orphan_files ----------------------------------------
-
-
-def test_remove_orphan_files(spark, tmp_path):
-    t = IcebergLiteTable(str(tmp_path / "t"))
-    t.write(spark.range(20).selectExpr("id", "id * 2 AS v"))
-    t.write(spark.range(5).selectExpr("id + 100 AS id", "id AS v"),
-            mode="append")
-    before = sorted(tuple(r) for r in t.read(spark).collect())
-    ddir = os.path.join(t.path, "data")
-    # crashed-writer debris: a staging dir + a stray file, both stale
-    stale_dir = os.path.join(ddir, "stage-deadbeef")
-    os.makedirs(stale_dir)
-    orphan1 = os.path.join(stale_dir, "part-0.parquet")
-    orphan2 = os.path.join(ddir, "stray.parquet")
-    for p in (orphan1, orphan2):
-        with open(p, "wb") as fh:
-            fh.write(b"not really parquet")
-        os.utime(p, (time.time() - 86400 * 7,) * 2)  # 7 days old
-    # a RECENT orphan (in-flight writer): must be kept
-    recent = os.path.join(ddir, "inflight.parquet")
-    with open(recent, "wb") as fh:
-        fh.write(b"x")
-
-    removed = t.remove_orphan_files()
-    # the planted debris goes; so do Spark's _SUCCESS/.crc sidecar
-    # files (genuinely unreferenced, exactly what the real procedure
-    # deletes) — but never a referenced data file
-    assert {os.path.abspath(p) for p in (orphan1, orphan2)} <= set(removed)
-    assert not any(
-        p.endswith(".parquet") and "stray" not in p and "stage-deadbeef" not in p
-        for p in removed
-    )
-    assert os.path.exists(recent)  # horizon protected it
-    assert not os.path.exists(stale_dir)  # empty staging dir swept
-    # nothing referenced was touched; reads identical
-    assert sorted(tuple(r) for r in t.read(spark).collect()) == before
-    # explicit horizon: now the recent orphan goes too
-    removed2 = t.remove_orphan_files(
-        older_than_ms=int(time.time() * 1000) + 1000
-    )
-    assert os.path.abspath(recent) in removed2
-    assert sorted(tuple(r) for r in t.read(spark).collect()) == before
-
-
-def test_remove_orphans_keeps_time_travel_files(spark, tmp_path):
-    """Files only OLD snapshots reference are NOT orphans."""
-    t = IcebergLiteTable(str(tmp_path / "t"))
-    t.write(spark.range(5).selectExpr("id", "id AS v"))
-    v0 = t.current_snapshot_id()
-    t.write(spark.range(5).selectExpr("id + 10 AS id", "id AS v"),
-            mode="overwrite")
-    # age every data file past the horizon
-    ddir = os.path.join(t.path, "data")
-    for dp, _d, fs in os.walk(ddir):
-        for f in fs:
-            os.utime(os.path.join(dp, f),
-                     (time.time() - 86400 * 7,) * 2)
-    removed = t.remove_orphan_files()
-    # only non-data sidecar debris (_SUCCESS / .crc) may go — every
-    # parquet file belongs to SOME snapshot and must survive
-    assert not any(p.endswith(".parquet") for p in removed)
-    # the overwritten snapshot still time-travels
-    assert t.read(spark, snapshot_id=v0).count() == 5
-
-
-# -- ADVICE r8 regressions -----------------------------------------------
-
-
-def test_add_files_validates_every_file_schema(spark, tmp_path):
-    """ADVICE r8 (medium): only paths[0] used to be schema-checked; a
-    divergent LATER file would register unchecked and the id-less
-    by-name read fallback would silently NULL-fill its missing
-    columns.  Every footer must now be validated before commit."""
-    good1 = str(tmp_path / "g1.parquet")
-    good2 = str(tmp_path / "g2.parquet")
-    bad = str(tmp_path / "bad.parquet")
-    spark.range(5).selectExpr("id", "CAST(id AS DOUBLE) AS v") \
-        .coalesce(1).write.parquet(str(tmp_path / "d1"))
-    spark.range(5, 10).selectExpr("id", "CAST(id AS DOUBLE) AS v") \
-        .coalesce(1).write.parquet(str(tmp_path / "d2"))
-    spark.range(3).selectExpr(
-        "id", "CAST(id AS STRING) AS other"
-    ).coalesce(1).write.parquet(str(tmp_path / "d3"))
-    for src, dst in [("d1", good1), ("d2", good2), ("d3", bad)]:
-        f = next(
-            f for f in os.listdir(str(tmp_path / src))
-            if f.endswith(".parquet")
-        )
-        os.rename(str(tmp_path / src / f), dst)
-
-    t = IcebergLiteTable(str(tmp_path / "tbl"))
-    with pytest.raises(ValueError, match="bad.parquet.*differs"):
-        t.add_files(spark, [good1, bad])
-    # refusal happened BEFORE any commit: table still absent
-    with pytest.raises(FileNotFoundError):
-        t.metadata()
-    # divergent later file on a FRESH table is refused too (first
-    # file's schema becomes the table schema; others must match it)
-    with pytest.raises(ValueError, match="differs"):
-        IcebergLiteTable(str(tmp_path / "tbl2")).add_files(
-            spark, [good1, good2, bad]
-        )
-    # and the all-consistent set commits fine
-    t3 = IcebergLiteTable(str(tmp_path / "tbl3"))
-    t3.add_files(spark, [good1, good2])
-    assert t3.read(spark).count() == 10
-
-
-def test_add_files_refuses_deeply_nested_hive_dirs(spark, tmp_path):
-    """ADVICE r8 (low), reconciled with ADVICE r9 in r10: the refusal
-    scans directory components BELOW the common registration root —
-    date=2020/sub/f.parquet nested deeper than the immediate parent
-    still refuses whenever the registration spans the layout (the
-    silent-drop hazard is a VARYING partition value across registered
-    files; a single constant `=` ancestor shared by every file is a
-    workspace path, covered by
-    test_add_files_ignores_eq_in_unrelated_ancestors)."""
-    for d in ("2020", "2021"):
-        nested = tmp_path / f"date={d}" / "sub"
-        os.makedirs(str(nested))
-        spark.range(4).selectExpr("id").coalesce(1).write.parquet(
-            str(nested / "w")
-        )
-        f = next(
-            f
-            for f in os.listdir(str(nested / "w"))
-            if f.endswith(".parquet")
-        )
-        os.rename(str(nested / "w" / f), str(nested / "f.parquet"))
-    targets = [
-        str(tmp_path / f"date={d}" / "sub" / "f.parquet")
-        for d in ("2020", "2021")
-    ]
-    with pytest.raises(IcebergProtocolError, match="hive-partition"):
-        IcebergLiteTable(str(tmp_path / "t")).add_files(spark, targets)
 
 
 def test_convert_schema_covers_nested_subdirs(spark, tmp_path):

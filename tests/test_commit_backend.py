@@ -94,15 +94,20 @@ def test_iceberg_commit_through_backend(spark, tmp_path):
         commit_backend=CoordinatedCommitSlots(claims),
     )
     t.write(spark.range(4).selectExpr("id", "id * 2 AS v"))
-    t.add_column("w", "long")  # evolution commit rides the backend too
-    assert len(claims) == 2  # v1 (write) + v2 (evolution)
+    t.delete(spark, "id = 0")  # a delete commit rides the backend too
+    assert len(claims) == 2  # v1 (write) + v2 (delete)
     # steal the next metadata slot: the commit must ABORT, and the
     # table must still read its pre-steal state
     nxt = os.path.join(t.metadata_dir, "v3.metadata.json")
     claims[os.path.abspath(nxt)] = "other-writer"
     with pytest.raises(ConcurrentModificationError):
-        t.rename_column("v", "value")
-    assert t.read(spark).columns == ["id", "v", "w"]
+        t.upsert(
+            spark, spark.range(1, 2).selectExpr("id", "id * 9 AS v"),
+            keys=["id"],
+        )
+    assert sorted(tuple(r) for r in t.read(spark).collect()) == [
+        (1, 2), (2, 4), (3, 6)
+    ]
 
 
 def test_posix_is_the_default(tmp_path):

@@ -240,99 +240,62 @@ def test_delta_verbs_against_model(spark, tmp_path, seed, backend):
                                           (11, "s3"), (31, "s3")])
 @pytest.mark.slow
 def test_iceberg_verbs_against_model(spark, tmp_path, seed, backend):
-    """The Iceberg twin: seeded random append / position-delete (both
-    surgical and mass) / compaction / ZORDER rewrite / tag+expire /
-    SCHEMA EVOLUTION (add, rename, drop, int->long promotion) sequence
-    vs the dict model; every surviving snapshot still time-travels to
-    its recorded state READ THROUGH ITS OWN SCHEMA, and the tagged
-    snapshot survives expiry.  (The round-5 lesson: this layer caught
-    a real expire_snapshots bug on first run — every new verb joins
-    the sequence.)"""
+    """The Iceberg twin, over the verbs the Iceberg sinks use: seeded
+    random append (plus its incremental append scan) / position delete
+    (surgical and mass) / upsert / compaction / stamped sink append
+    sequence vs the dict model; every recorded snapshot still
+    time-travels to its state."""
     import random as _random
 
     from data_lakehouse_platform_spark.sources.iceberg_lite import (
         IcebergLiteTable,
+        IcebergProtocolError,
     )
 
     rng = _random.Random(seed)
     t = IcebergLiteTable(
         str(tmp_path / f"im{seed}"), commit_backend=_backend(backend)
     )
-
-    # model: row id -> {col: value}; cols is the CURRENT value-column
-    # list (id is fixed).  v starts int to leave a promotion available.
-    cols: list[tuple[str, str]] = [("v", "int")]
-    model: dict[int, dict[str, int | None]] = {}
+    model: dict[int, int] = {}  # row id -> v
     next_id = 0
-    n_added = 0
 
     def fresh(n):
         nonlocal next_id
         out = {}
         for _ in range(n):
-            out[next_id] = {c: rng.randrange(1000) for c, _ty in cols}
+            out[next_id] = rng.randrange(1000)
             next_id += 1
         return out
 
     def df(rows):
-        ddl = "id long, " + ", ".join(f"{c} {ty}" for c, ty in cols)
-        return spark.createDataFrame(
-            [tuple([k] + [r[c] for c, _ty in cols])
-             for k, r in rows.items()],
-            ddl,
-        )
+        return spark.createDataFrame(sorted(rows.items()), "id long, v int")
 
-    def snap_state():
-        return {
-            k: tuple(r.get(c) for c, _ty in cols) for k, r in model.items()
-        }
+    def read(**kw):
+        return {r.id: r.v for r in t.read(spark, **kw).collect()}
 
     rows = fresh(8)
     sid = t.write(df(rows).coalesce(2))
     model.update(rows)
-    history = {sid: ([c for c, _ty in cols], snap_state())}
-    tagged = None
-    branched = None  # (snapshot id the branch pins, its recorded state)
+    history = {sid: dict(model)}
     ledger_batch = -1  # committed_batches model (streaming-sink ledger)
 
-    spec_evolved = False
     for step in range(16):
         op = rng.choice(
-            ["append", "delete", "mass_delete", "compact", "zorder",
-             "tag", "branch", "ledger", "add_col", "rename_col",
-             "drop_col", "promote", "merge", "evolve_spec"]
+            ["append", "delete", "mass_delete", "upsert", "compact",
+             "ledger"]
         )
-        if op == "evolve_spec" and not spec_evolved:
-            # r7 verb: partition evolution mid-history — a metadata-only
-            # commit; later appends/merges land under identity(id),
-            # earlier files keep their (empty) spec, reads stay exact
-            t.update_spec(["id"])
-            spec_evolved = True
-            got = {
-                r.id: tuple(r[c] for c, _ty in cols)
-                for r in t.read(spark).collect()
-            }
-            assert got == snap_state(), f"seed={seed} step={step} spec"
-            continue
-        if op == "evolve_spec":
-            continue
         if op == "append":
             prev_sid = t.current_snapshot_id()
             rows = fresh(rng.randrange(1, 4))
             sid = t.write(df(rows).coalesce(1), mode="append")
             model.update(rows)
-            # r7 verb: the incremental append scan over exactly this
-            # commit must serve exactly these rows (current schema)
+            # the incremental append scan over exactly this commit must
+            # serve exactly these rows
             inc = {
-                r.id: tuple(r[c] for c, _ty in cols)
-                for r in t.incremental_read(
-                    spark, prev_sid, sid
-                ).collect()
+                r.id: r.v
+                for r in t.incremental_read(spark, prev_sid, sid).collect()
             }
-            assert inc == {
-                k: tuple(r[c] for c, _ty in cols)
-                for k, r in rows.items()
-            }, f"seed={seed} step={step} incremental append"
+            assert inc == rows, f"seed={seed} step={step} incremental"
         elif op == "delete" and model:
             victim = rng.choice(sorted(model))
             before = t.current_snapshot_id()
@@ -343,18 +306,10 @@ def test_iceberg_verbs_against_model(spark, tmp_path, seed, backend):
                 continue
             # a delete snapshot is not representable as appends:
             # refuse loudly by default, contribute nothing when skipped
-            import pytest as _pytest
-
-            from data_lakehouse_platform_spark.sources.iceberg_lite import (
-                IcebergProtocolError as _IPE,
-            )
-
-            with _pytest.raises(_IPE, match="delete"):
+            with pytest.raises(IcebergProtocolError, match="delete"):
                 t.incremental_append_files(before, sid)
             assert (
-                t.incremental_append_files(
-                    before, sid, on_change="skip"
-                )
+                t.incremental_append_files(before, sid, on_change="skip")
                 == []
             ), f"seed={seed} step={step} skipped delete leaked"
         elif op == "mass_delete" and len(model) > 4:
@@ -363,27 +318,19 @@ def test_iceberg_verbs_against_model(spark, tmp_path, seed, backend):
             for k in [k for k in model if k >= pivot]:
                 model.pop(k)
             sid = res["snapshot_id"]
-        elif op == "merge" and model:
-            # r7 verb: copy-on-write upsert — random existing ids
-            # update, fresh ids insert; an overwrite snapshot, so the
-            # incremental append scan must refuse it (like delete)
-            upd = rng.sample(sorted(model), rng.randrange(1, min(4, len(model)) + 1))
-            src = {
-                k: {c: rng.randrange(1000) for c, _ty in cols}
-                for k in upd
-            }
+        elif op == "upsert" and model:
+            # merge-on-read upsert — random existing ids update, fresh
+            # ids insert; an overwrite snapshot, so the incremental
+            # append scan must refuse it (like delete)
+            upd = rng.sample(
+                sorted(model), rng.randrange(1, min(4, len(model)) + 1)
+            )
+            src = {k: rng.randrange(1000) for k in upd}
             src.update(fresh(rng.randrange(0, 3)))
             before = t.current_snapshot_id()
-            res = t.merge(spark, df(src), keys=["id"])
+            sid = t.upsert(spark, df(src), keys=["id"])["snapshot_id"]
             model.update(src)
-            sid = res["snapshot_id"]
-            import pytest as _pytest
-
-            from data_lakehouse_platform_spark.sources.iceberg_lite import (
-                IcebergProtocolError as _IPE,
-            )
-
-            with _pytest.raises(_IPE, match="overwrite"):
+            with pytest.raises(IcebergProtocolError, match="overwrite"):
                 t.incremental_append_files(before, sid)
         elif op == "compact":
             prev_sid = t.current_snapshot_id()
@@ -395,25 +342,6 @@ def test_iceberg_verbs_against_model(spark, tmp_path, seed, backend):
             assert (
                 t.incremental_append_files(prev_sid, sid) == []
             ), f"seed={seed} step={step} compaction leaked into scan"
-        elif op == "zorder":
-            res = t.rewrite_data_files(
-                spark, target_file_bytes=1 << 20, zorder_by=["id"]
-            )
-            sid = res["snapshot_id"]
-            if res["new_files"] == 0:
-                continue
-        elif op == "tag" and tagged is None:
-            t.create_tag("pin")
-            tagged = t.current_snapshot_id()
-            continue
-        elif op == "branch" and branched is None:
-            t.create_branch("audit")
-            branched = (
-                t.current_snapshot_id(),
-                [c for c, _ty in cols],
-                snap_state(),
-            )
-            continue
         elif op == "ledger":
             # the streaming sink's exactly-once ledger: each append
             # stamps (app-id, batch-id) into the snapshot summary and
@@ -430,113 +358,11 @@ def test_iceberg_verbs_against_model(spark, tmp_path, seed, backend):
             )
             model.update(rows)
             assert t.committed_batches("model-sink") == ledger_batch
-        elif op == "add_col":
-            n_added += 1
-            name = f"c{n_added}"
-            t.add_column(name, "long")
-            cols.append((name, "long"))
-            for r in model.values():
-                r[name] = None
-            # metadata-only: the CURRENT read must show the new column
-            got = {
-                r.id: tuple(r[c] for c, _ty in cols)
-                for r in t.read(spark).collect()
-            }
-            assert got == snap_state(), f"seed={seed} step={step} add"
-            continue
-        elif op == "rename_col" and len(cols) >= 1:
-            old = rng.choice([c for c, _ty in cols])
-            new = f"{old}_r"
-            t.rename_column(old, new)
-            cols[:] = [
-                (new, ty) if c == old else (c, ty) for c, ty in cols
-            ]
-            for r in model.values():
-                r[new] = r.pop(old)
-            got = {
-                r.id: tuple(r[c] for c, _ty in cols)
-                for r in t.read(spark).collect()
-            }
-            assert got == snap_state(), f"seed={seed} step={step} rename"
-            continue
-        elif op == "drop_col" and len(cols) >= 2:
-            victim_c = rng.choice([c for c, _ty in cols])
-            t.drop_column(victim_c)
-            cols[:] = [(c, ty) for c, ty in cols if c != victim_c]
-            for r in model.values():
-                r.pop(victim_c, None)
-            got = {
-                r.id: tuple(r[c] for c, _ty in cols)
-                for r in t.read(spark).collect()
-            }
-            assert got == snap_state(), f"seed={seed} step={step} drop"
-            continue
-        elif op == "promote":
-            cand = [c for c, ty in cols if ty == "int"]
-            if not cand:
-                continue
-            c = cand[0]
-            t.update_column_type(c, "long")
-            cols[:] = [
-                (c2, "long") if c2 == c else (c2, ty)
-                for c2, ty in cols
-            ]
-            got = {
-                r.id: tuple(r[c2] for c2, _ty in cols)
-                for r in t.read(spark).collect()
-            }
-            assert got == snap_state(), f"seed={seed} step={step} promote"
-            continue
         else:
             continue
-        got = {
-            r.id: tuple(r[c] for c, _ty in cols)
-            for r in t.read(spark).collect()
-        }
-        assert got == snap_state(), f"seed={seed} step={step} op={op}"
-        history[sid] = ([c for c, _ty in cols], snap_state())
+        assert read() == model, f"seed={seed} step={step} op={op}"
+        history[sid] = dict(model)
 
-    if tagged is None:
-        t.create_tag("pin")
-        tagged = t.current_snapshot_id()
-
-    # every recorded snapshot time-travels to its state through the
-    # schema it was taken under (post-drop snapshots don't resurrect
-    # the dropped column; pre-add snapshots don't show the added one)
-    for sid, (scols, state) in history.items():
-        tdf = t.read(spark, snapshot_id=sid)
-        assert tdf.columns == ["id"] + scols, f"snapshot {sid} schema"
-        got = {r.id: tuple(r[c] for c in scols) for r in tdf.collect()}
-        assert got == state, f"time travel to {sid}"
-
-    # expire to the newest snapshot: the tag AND the branch pin their
-    # snapshots through expiry, and the branch still reads its state
-    t.expire_snapshots(retain_last=1)
-    surviving = {int(s["snapshot-id"]) for s in t.snapshots()}
-    assert tagged in surviving
-    if branched is not None:
-        bsid, bcols, bstate = branched
-        assert bsid in surviving
-        bdf = t.read(spark, ref="audit")
-        assert bdf.columns == ["id"] + bcols
-        got = {r.id: tuple(r[c] for c in bcols) for r in bdf.collect()}
-        assert got == bstate
-    # the ledger replays to its high-water mark even after expiry
-    # (expire retains the newest snapshot; stamped summaries survive
-    # on every retained snapshot)
-    if ledger_batch >= 0:
-        assert t.committed_batches("model-sink") <= ledger_batch
-    for sid in surviving:
-        if sid in history:
-            scols, state = history[sid]
-            got = {
-                r.id: tuple(r[c] for c in scols)
-                for r in t.read(spark, snapshot_id=sid).collect()
-            }
-            assert got == state, f"post-expire snapshot {sid}"
-    scols, state = history[tagged]
-    got = {
-        r.id: tuple(r[c] for c in scols)
-        for r in t.read(spark, ref="pin").collect()
-    }
-    assert got == state
+    # every recorded snapshot time-travels to its state
+    for sid, state in history.items():
+        assert read(snapshot_id=sid) == state, f"time travel to {sid}"

@@ -1,13 +1,15 @@
-"""Iceberg schema-evolution WRITES (iceberg_lite): add / rename /
-drop / type-promote as metadata-only commits, appends after evolution,
-time-travel reading through the SNAPSHOT's schema, field-id stamped
-parquet footers, and the loud refusals around id-less files and
-partition-spec sources."""
+"""Iceberg schema evolution as another writer leaves it: this engine's
+own writes stamp field ids into parquet footers, and the sink's append
+into the frozen ``iceberg_schema_evolved`` fixture (add, rename, drop
++ re-add, int->long promotion; tests/fixtures/golden/generate.py)
+follows the CURRENT schema.  The fixture's per-snapshot reads are
+pinned in test_golden_fixtures.py."""
 
 from __future__ import annotations
 
 import glob
 import os
+import shutil
 
 import pyarrow.parquet as pq
 import pytest
@@ -15,7 +17,11 @@ from pyspark.sql import functions as F
 
 from data_lakehouse_platform_spark.sources.iceberg_lite import (
     IcebergLiteTable,
-    IcebergProtocolError,
+)
+
+_GOLDEN = os.path.join(
+    os.path.dirname(__file__), "fixtures", "golden",
+    "iceberg_schema_evolved",
 )
 
 
@@ -43,197 +49,36 @@ def test_own_writes_carry_field_ids(spark, tmp_path):
         assert ids == {"k": b"1", "v": b"2", "s": b"3"}
 
 
-def test_add_column_then_append_then_time_travel(spark, tmp_path):
-    t = _mk(spark, tmp_path)
-    s1 = t.current_snapshot_id()
-    sid = t.add_column("w", "long")
-    assert sid == 1
-    meta = t.metadata()
-    # the new field got a never-reused id above the old high-water mark
-    cur = next(s for s in meta["schemas"] if s["schema-id"] == 1)
-    assert [(f["name"], f["id"]) for f in cur["fields"]] == [
-        ("k", 1), ("v", 2), ("s", 3), ("w", 4)
-    ]
-    assert meta["last-column-id"] == 4
-
-    # old files read the new column as NULL
-    rows = {r.k: r.w for r in t.read(spark).collect()}
-    assert rows == {i: None for i in range(6)}
-
-    # appends must provide the evolved schema
-    df_old_shape = spark.range(2).select(
-        F.col("id").alias("k"), (F.col("id") * 10).alias("v"),
-        F.lit("x").alias("s"),
-    )
+def test_append_to_evolved_table_follows_current_schema(spark, tmp_path):
+    dst = str(tmp_path / "evolved")
+    shutil.copytree(_GOLDEN, dst)
+    t = IcebergLiteTable(dst)
+    # the pre-evolution shape is refused: no implicit evolution
     with pytest.raises(ValueError, match="schema differs"):
-        t.write(df_old_shape)
-    df_new = spark.range(6, 8).select(
-        F.col("id").alias("k"), (F.col("id") * 10).alias("v"),
-        F.lit("x").alias("s"), (F.col("id") + 100).alias("w"),
-    )
-    t.write(df_new)
-    got = {r.k: r.w for r in t.read(spark).collect()}
-    assert got == {**{i: None for i in range(6)}, 6: 106, 7: 107}
-
-    # time travel to the pre-evolution snapshot shows the OLD schema
-    old = t.read(spark, snapshot_id=s1)
-    assert old.columns == ["k", "v", "s"]
-    assert old.count() == 6
-
-
-def test_rename_reads_old_files_through_field_id(spark, tmp_path):
-    t = _mk(spark, tmp_path)
-    t.rename_column("v", "value")
-    df = t.read(spark)
-    assert df.columns == ["k", "value", "s"]
-    assert {r.value for r in df.collect()} == {0, 10, 20, 30, 40, 50}
-    # append with the new name, then read both generations together
-    t.write(
-        spark.range(6, 8).select(
-            F.col("id").alias("k"), (F.col("id") * 10).alias("value"),
-            F.lit("x").alias("s"),
+        t.write(
+            spark.createDataFrame(
+                [(12, 0, "row-12", 30.0)],
+                "id int, bucket int, name string, score double",
+            ),
+            mode="append",
         )
-    )
-    assert t.read(spark).where("value >= 60").count() == 2
-
-
-def test_drop_then_readd_same_name_reads_null_not_old_data(spark, tmp_path):
-    t = _mk(spark, tmp_path)
-    t.drop_column("v")
-    assert t.read(spark).columns == ["k", "s"]
-    t.add_column("v", "long")
-    # the re-added column has a NEW field-id: old files must read NULL,
-    # never the dropped column's data (the id-reuse corruption the
-    # high-water mark exists to prevent)
-    meta = t.metadata()
-    cur = next(
-        s for s in meta["schemas"]
-        if s["schema-id"] == meta["current-schema-id"]
-    )
-    assert next(f["id"] for f in cur["fields"] if f["name"] == "v") == 4
-    assert {r.v for r in t.read(spark).collect()} == {None}
-
-
-def test_type_promotion_casts_old_files_up(spark, tmp_path):
-    t = IcebergLiteTable(str(tmp_path / "promo"))
     t.write(
-        spark.range(3).select(
-            F.col("id").cast("int").alias("k"),
-            F.col("id").cast("float").alias("x"),
-        )
-    )
-    t.update_column_type("k", "long")
-    t.update_column_type("x", "double")
-    df = t.read(spark)
-    assert dict(df.dtypes) == {"k": "bigint", "x": "double"}
-    t.write(
-        spark.range(3, 5).select(
-            F.col("id").alias("k"), F.col("id").cast("double").alias("x")
-        )
-    )
-    assert df.sparkSession is spark and t.read(spark).count() == 5
-    with pytest.raises(IcebergProtocolError, match="safe promotion"):
-        t.update_column_type("x", "float")
-
-
-def test_decimal_widening(spark, tmp_path):
-    t = IcebergLiteTable(str(tmp_path / "dec"))
-    t.write(
-        spark.range(3).select(
-            F.col("id").alias("k"),
-            F.col("id").cast("decimal(10,2)").alias("amt"),
-        )
-    )
-    t.update_column_type("amt", "decimal(20,2)")
-    assert dict(t.read(spark).dtypes)["amt"] == "decimal(20,2)"
-    with pytest.raises(IcebergProtocolError, match="safe promotion"):
-        t.update_column_type("amt", "decimal(20,4)")
-
-
-def test_evolution_refusals(spark, tmp_path):
-    t = IcebergLiteTable(str(tmp_path / "part"))
-    t.write(
-        spark.range(6).select(
-            F.col("id").alias("k"),
-            (F.col("id") % 2).cast("int").alias("b"),
+        spark.createDataFrame(
+            [(12, 0, "row-12", 1200, -12.0)],
+            "id long, bucket int, label string, extra long, score double",
         ),
-        partition_by=["b"],
+        mode="append",
     )
-    with pytest.raises(IcebergProtocolError, match="partition-spec source"):
-        t.drop_column("b")
-    with pytest.raises(ValueError, match="already exists"):
-        t.add_column("k", "long")
-    with pytest.raises(ValueError, match="does not exist"):
-        t.rename_column("zz", "yy")
-    with pytest.raises(ValueError, match="already exists"):
-        t.rename_column("k", "b")
-    with pytest.raises(ValueError, match="not a supported"):
-        t.add_column("m", "map<string,int>")
-
-
-def test_rename_refused_on_idless_files(spark, tmp_path):
-    """A table whose live files lack field-id footers (external plain
-    parquet) must refuse rename loudly instead of silently NULLing."""
-    t = _mk(spark, tmp_path)
-    # strip the field ids by rewriting one data file with pyarrow
-    f = glob.glob(os.path.join(t.path, "data", "**", "*.parquet"),
-                  recursive=True)[0]
-    tbl = pq.read_table(f)
-    import pyarrow as pa
-
-    stripped = pa.Table.from_arrays(
-        [tbl.column(i) for i in range(tbl.num_columns)],
-        names=tbl.column_names,
-    )
-    pq.write_table(stripped, f)
-    crc = os.path.join(os.path.dirname(f), f".{os.path.basename(f)}.crc")
-    if os.path.exists(crc):  # hadoop sidecar checksum of the old bytes
-        os.remove(crc)
-    with pytest.raises(IcebergProtocolError, match="lack field-id"):
-        t.rename_column("v", "value")
-    # re-adding a name that id-less files physically contain is refused
-    # (their old data would leak into the new column by-name); a fresh
-    # name is fine because absent columns read NULL either way.
-    t.drop_column("v")
-    with pytest.raises(IcebergProtocolError, match="physically contain"):
-        t.add_column("v", "long")
-    t.add_column("brand_new", "long")
-    assert {r.brand_new for r in t.read(spark).collect()} == {None}
-
-
-def test_partition_source_rename_still_writes(spark, tmp_path):
-    """Renaming a partition source keeps the spec working (source-id
-    is authoritative): the next append partitions by the new name."""
-    t = IcebergLiteTable(str(tmp_path / "psrc"))
-    t.write(
-        spark.range(4).select(
-            F.col("id").alias("k"),
-            (F.col("id") % 2).cast("int").alias("b"),
-        ),
-        partition_by=["b"],
-    )
-    t.rename_column("b", "bucket_col")
-    t.write(
-        spark.range(4, 8).select(
-            F.col("id").alias("k"),
-            (F.col("id") % 2).cast("int").alias("bucket_col"),
-        )
-    )
-    assert t.read(spark).count() == 8
-    files, _d = t.plan_files(partition_filter={"b": 1})
-    assert files and all("b=1" in p for p, _s, _pt in files)
-
-
-def test_old_snapshots_survive_many_evolutions(spark, tmp_path):
-    t = _mk(spark, tmp_path)
-    s1 = t.current_snapshot_id()
-    t.add_column("w", "long")
-    t.rename_column("s", "label")
-    t.drop_column("w")
-    # history() and the snapshot log are intact; the old snapshot reads
-    # its own 3-column schema
-    old = t.read(spark, snapshot_id=s1)
-    assert old.columns == ["k", "v", "s"]
-    cur = t.read(spark)
-    assert cur.columns == ["k", "v", "label"]
-    assert cur.count() == old.count() == 6
+    new = [p for p, _s, _pt in t.plan_files()[0] if p.startswith(dst)]
+    assert new
+    for f in new:
+        ids = {
+            fld.name: (fld.metadata or {}).get(b"PARQUET:field_id")
+            for fld in pq.read_schema(f)
+        }
+        # the TABLE's ids, not positional ones: score was re-added as 6
+        assert ids == {"id": b"1", "bucket": b"2", "label": b"3",
+                       "extra": b"5", "score": b"6"}
+    got = {r.id: (r.label, r.extra, r.score) for r in t.read(spark).collect()}
+    assert got[12] == ("row-12", 1200, -12.0)
+    assert got[0] == ("row-0", None, None) and len(got) == 13

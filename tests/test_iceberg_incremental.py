@@ -3,7 +3,8 @@ incremental_read) and the streaming source over iceberg_lite tables
 (sources/iceberg_stream.py): snapshot-offset exactly-once tailing,
 bootstrap with position deletes applied, replace (compaction)
 snapshots skipped, delete/overwrite snapshots refused/skipped/emitted
-per option, field-id resolution across schema evolution."""
+per option.  The scan across schema evolution is pinned on the frozen
+fixture (test_golden_fixtures.py)."""
 
 from __future__ import annotations
 
@@ -90,33 +91,13 @@ def test_incremental_chain_validation(spark, tmp_path):
     _append(spark, t, [(4, "d")])
     with pytest.raises(ValueError, match="not an ancestor"):
         t.incremental_append_files(10**9, s1)
-    t.expire_snapshots(retain_last=1)
+    # another engine's snapshot expiry: a metadata version keeping only
+    # the newest snapshot, whose parent link now dangles
+    meta = t.metadata()
+    meta["snapshots"] = meta["snapshots"][-1:]
+    t._commit_metadata_json(meta)
     with pytest.raises(IcebergProtocolError, match="expired"):
         t.incremental_append_files(None)
-
-
-def test_incremental_reads_through_schema_evolution(spark, tmp_path):
-    t = _mk(spark, tmp_path)
-    s0 = t.current_snapshot_id()
-    t.rename_column("val", "name")
-    t.add_column("score", "long")
-    t.write(
-        spark.createDataFrame(
-            [(3, "c", 30)], "id long, name string, score long"
-        ),
-        mode="append",
-    )
-    got = sorted(
-        tuple(r)
-        for r in t.incremental_read(spark, s0).collect()
-    )
-    assert got == [(3, "c", 30)]
-    # full scan resolves the pre-rename file by field id
-    got = sorted(
-        tuple(r)
-        for r in t.incremental_read(spark, None).collect()
-    )
-    assert got == [(1, "a", None), (2, "b", None), (3, "c", 30)]
 
 
 # -- streaming source ---------------------------------------------------
@@ -254,15 +235,3 @@ def test_stream_bootstrap_applies_equality_deletes(registered, tmp_path):
     # and the stream agrees with the batch reader exactly
     batch = sorted(tuple(r) for r in t.read(spark).collect())
     assert got == batch
-
-
-def test_stream_bootstrap_equality_delete_only_table(registered, tmp_path):
-    spark = registered
-    t = _mk(spark, tmp_path)
-    t.delete_equality(
-        spark, spark.createDataFrame([(1,)], "id long"), ["id"]
-    )
-    got = _drain(
-        spark, t.path, str(tmp_path / "o2"), str(tmp_path / "c2")
-    )
-    assert got == [(2, "b")]

@@ -334,7 +334,7 @@ def test_iceberg_format_v3_and_beyond_gates(tmp_path):
     assert IcebergLiteTable(str(root)).metadata()["format-version"] == 3
 
     # next-row-id (row lineage) no longer refuses — every compliant
-    # v3 table carries it, and read_with_lineage serves the surface;
+    # v3 table carries it, and a plain read ignores it;
     # a genuinely-unsupported construct (encryption keys) still does
     rootf = tmp_path / "v3feat"
     (rootf / "metadata").mkdir(parents=True)
@@ -878,39 +878,6 @@ def test_iceberg_field_id_resolution_rename_and_add(spark, tmp_path):
     assert t.read(spark).columns == ["ident", "val", "score"]
 
 
-def test_iceberg_expire_snapshots(spark, tmp_path):
-    """expire_snapshots drops old snapshots and physically deletes
-    only THEIR files; kept snapshots still read, expired ones fail
-    cleanly, the current snapshot can't be expired."""
-    t = IcebergLiteTable(str(tmp_path / "ex"))
-    s1 = t.write(
-        spark.createDataFrame([(1, "a")], "id long, val string")
-    )
-    s2 = t.write(
-        spark.createDataFrame([(2, "b")], "id long, val string"),
-        mode="overwrite",
-    )
-    s3 = t.write(
-        spark.createDataFrame([(3, "c")], "id long, val string"),
-        mode="append",
-    )
-    removed = t.expire_snapshots(retain_last=2)
-    assert removed  # snapshot 1's manifest list at minimum
-    assert all(str(tmp_path / "ex") in p for p in removed)
-    # s2/s3 still read; s2's data file survives (s3 references it)
-    assert sorted(r.id for r in t.read(spark).collect()) == [2, 3]
-    assert [r.id for r in t.read(spark, snapshot_id=s2).collect()] == [2]
-    with pytest.raises(FileNotFoundError):
-        t.read(spark, snapshot_id=s1)
-    assert [h["snapshot-id"] for h in t.history()] == [s2, s3]
-    # expiring everything but the tip still works; idempotent after
-    t.expire_snapshots(retain_last=1)
-    assert sorted(r.id for r in t.read(spark).collect()) == [2, 3]
-    assert t.expire_snapshots(retain_last=1) == []
-    with pytest.raises(ValueError, match="retain_last"):
-        t.expire_snapshots(retain_last=0)
-
-
 def test_iceberg_bucket_transform_write_prune_roundtrip(spark, tmp_path):
     """Round 5: bucket[N] hidden partitioning — partition values are
     the spec's (murmur3 & Int.MAX) % N (validated against the
@@ -1089,175 +1056,6 @@ def test_iceberg_year_and_hour_transforms(spark, tmp_path):
     assert [r.id for r in got.collect()] == [2]
 
 
-def test_iceberg_metadata_tables(spark, tmp_path):
-    """The queryable metadata-table surface (tbl.files / .snapshots /
-    .history / .manifests / .partitions) — all derived from manifests
-    only, no data file opened."""
-    t = IcebergLiteTable(str(tmp_path / "mt"))
-    df = spark.createDataFrame(
-        [(1, "a"), (2, "a"), (3, "b")], "id long, k string"
-    )
-    s1 = t.write(df, partition_by=["k"])
-    s2 = t.write(
-        spark.createDataFrame([(4, "b")], "id long, k string"),
-        mode="append",
-    )
-    t.delete(spark, "id = 1")
-
-    files = t.metadata_table(spark, "files")
-    by_content = {
-        r.content: r for r in files.collect()
-    }
-    assert 1 in by_content  # the position-delete file is listed
-    data = [r for r in files.collect() if r.content == 0]
-    assert sum(r.record_count for r in data) == 4  # manifest counts
-    assert {r.partition.get("k") for r in data} == {"a", "b"}
-    # pinned to the first snapshot: only the first write's files
-    f1 = t.metadata_table(spark, "files", snapshot_id=s1)
-    assert all(r.content == 0 for r in f1.collect())
-    assert sum(r.record_count for r in f1.collect()) == 3
-
-    snaps = t.metadata_table(spark, "snapshots")
-    got = {
-        r.snapshot_id: (r.parent_id, r.operation)
-        for r in snaps.collect()
-    }
-    assert got[s1] == (None, "append")
-    assert got[s2] == (s1, "append")
-    assert len(got) == 3
-
-    hist = t.metadata_table(spark, "history").collect()
-    assert [r.snapshot_id for r in hist] == sorted(
-        r.snapshot_id for r in hist
-    )
-    assert sum(1 for r in hist if r.is_current) == 1
-
-    man = t.metadata_table(spark, "manifests").collect()
-    assert {r.content for r in man} == {0, 1}
-    assert {r.added_snapshot_id for r in man} >= {s1, s2}
-
-    parts = {
-        tuple(sorted(r.partition.items())): (r.file_count, r.record_count)
-        for r in t.metadata_table(spark, "partitions").collect()
-    }
-    assert parts[(("k", "a"),)][1] == 2
-    assert parts[(("k", "b"),)][1] == 2
-
-    refs = {
-        r.name: (r.type, r.snapshot_id)
-        for r in t.metadata_table(spark, "refs").collect()
-    }
-    cur = [r.snapshot_id for r in hist if r.is_current][0]
-    assert refs["main"] == ("branch", cur)
-
-    # entries (r10): the raw manifest-entry view keeps DELETED rows
-    ent = t.metadata_table(spark, "entries").collect()
-    assert {r.status for r in ent} >= {1}
-    assert sum(
-        r.record_count for r in ent if r.status != 2 and r.content == 0
-    ) == sum(r.record_count for r in data)
-    # all_manifests: every snapshot's list rows, reference-stamped
-    am = t.metadata_table(spark, "all_manifests").collect()
-    assert {r.reference_snapshot_id for r in am} == set(got)
-    # all_files: distinct union across snapshots >= the live set
-    af = t.metadata_table(spark, "all_files").collect()
-    live_paths = {r.file_path for r in files.collect()}
-    assert live_paths <= {r.file_path for r in af}
-    assert len({r.file_path for r in af}) == len(af)  # deduped
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="unknown metadata table"):
-        t.metadata_table(spark, "no_such_table")
-
-
-def test_iceberg_rewrite_zorder(spark, tmp_path):
-    """rewrite_data_files(zorder_by=...): every partition's files are
-    re-clustered along the Morton interleave; per-file footer min/max
-    spans on the clustered columns shrink vs the scattered layout, and
-    rows survive identically."""
-    import pyarrow.parquet as pq
-
-    t = IcebergLiteTable(str(tmp_path / "zo"))
-    # scatter: interleave x so each original file spans the whole range
-    rows = [(i, (i * 37) % 100, f"v{i}") for i in range(400)]
-    df = spark.createDataFrame(rows, "id long, x long, v string")
-    t.write(df.repartition(4))
-    res = t.rewrite_data_files(
-        spark, target_file_bytes=4 << 10, zorder_by=["x"]
-    )
-    assert res["new_files"] >= 2
-    files, _ = t.plan_files()
-
-    def spans(paths):
-        out = []
-        for p in paths:
-            md = pq.read_metadata(p)
-            lo = min(
-                md.row_group(i).column(1).statistics.min
-                for i in range(md.num_row_groups)
-            )
-            hi = max(
-                md.row_group(i).column(1).statistics.max
-                for i in range(md.num_row_groups)
-            )
-            out.append(hi - lo)
-        return out
-
-    new_spans = spans([p for p, _s, _pt in files])
-    # clustered: average x-span per file well below the full range
-    assert sum(new_spans) / len(new_spans) < 60, new_spans
-    got = sorted(
-        (r.id, r.x, r.v) for r in t.read(spark).collect()
-    )
-    assert got == sorted(rows)
-
-
-def test_iceberg_snapshot_refs(spark, tmp_path):
-    """Tags/branches: named refs resolve in read(ref=...), pin their
-    snapshots through expire_snapshots, and main always resolves."""
-    t = IcebergLiteTable(str(tmp_path / "refs"))
-    s1 = t.write(spark.createDataFrame([(1,)], "id long"))
-    t.create_tag("audit-q1")  # pins s1 (current at tag time)
-    s2 = t.write(spark.createDataFrame([(2,)], "id long"), mode="append")
-    s3 = t.write(spark.createDataFrame([(3,)], "id long"), mode="append")
-
-    assert t.resolve_ref("audit-q1") == s1
-    assert t.resolve_ref("main") == s3
-    assert sorted(
-        r.id for r in t.read(spark, ref="audit-q1").collect()
-    ) == [1]
-    assert sorted(r.id for r in t.read(spark, ref="main").collect()) == [
-        1, 2, 3
-    ]
-    with pytest.raises(FileNotFoundError, match="nope"):
-        t.read(spark, ref="nope")
-    with pytest.raises(ValueError, match="not both"):
-        t.read(spark, snapshot_id=s1, ref="main")
-
-    # expire keeps the tag-pinned snapshot even beyond retain_last
-    removed = t.expire_snapshots(retain_last=1)
-    ids = {int(s["snapshot-id"]) for s in t.snapshots()}
-    assert ids == {s1, s3}  # s2 expired, s1 pinned by the tag
-    assert sorted(
-        r.id for r in t.read(spark, ref="audit-q1").collect()
-    ) == [1]
-    assert removed  # s2-only files reclaimed
-
-    # dropping the tag unpins; main is protected
-    t.drop_ref("audit-q1")
-    with pytest.raises(ValueError, match="main"):
-        t.drop_ref("main")
-    t.expire_snapshots(retain_last=1)
-    assert {int(s["snapshot-id"]) for s in t.snapshots()} == {s3}
-    # branch pointer reads too
-    t.create_branch("dev", snapshot_id=s3)
-    assert t.refs()["dev"]["type"] == "branch"
-    assert sorted(r.id for r in t.read(spark, ref="dev").collect()) == [
-        1, 2, 3
-    ]
-
-
 def test_iceberg_v3_write_refused(spark, tmp_path):
     """A format-version 3 table refuses WRITES (r10: reads work when
     no v3 construct is in play) — committing v2-shaped snapshots into
@@ -1275,3 +1073,35 @@ def test_iceberg_v3_write_refused(spark, tmp_path):
         t.write(spark.createDataFrame([(2,)], "id long"), mode="append")
     # reads keep working (no v3 construct in play)
     assert t.read(spark).count() == 1
+
+
+def test_commits_keep_materialized_main_ref_in_sync(spark, tmp_path):
+    """A table whose metadata carries a ``refs.main`` entry (as other
+    Iceberg writers materialize it) keeps that ref on the current
+    snapshot through every sink verb's commit — append, delete,
+    upsert and compaction alike — so a ref-resolving reader never sees
+    a stale main."""
+    t = IcebergLiteTable(str(tmp_path / "refs"))
+    t.write(spark.createDataFrame([(1, "a"), (2, "b")], "id int, v string"))
+    meta = t.metadata()
+    meta["refs"] = {
+        "main": {"snapshot-id": t.current_snapshot_id(), "type": "branch"}
+    }
+    t._commit_metadata_json(meta)
+
+    def main_ref():
+        return t.metadata()["refs"]["main"]["snapshot-id"]
+
+    t.write(spark.createDataFrame([(3, "c")], "id int, v string"),
+            mode="append")
+    assert main_ref() == t.current_snapshot_id()
+    t.delete(spark, "id = 1")
+    assert main_ref() == t.current_snapshot_id()
+    t.upsert(spark, spark.createDataFrame([(2, "B")], "id int, v string"),
+             keys=["id"])
+    assert main_ref() == t.current_snapshot_id()
+    t.rewrite_data_files(spark)
+    assert main_ref() == t.current_snapshot_id()
+    assert sorted(tuple(r) for r in t.read(spark).collect()) == [
+        (2, "B"), (3, "c")
+    ]

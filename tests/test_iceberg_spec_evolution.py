@@ -1,43 +1,44 @@
-"""Iceberg PARTITION EVOLUTION: update_spec as a metadata-only commit,
-mixed-spec reads/merges via per-manifest spec resolution, the
-partition_filter soundness guard, and spec migration through
-rewrite_data_files."""
+"""Iceberg PARTITION EVOLUTION as another writer leaves it: the frozen
+``iceberg_spec_evolved`` fixture holds ids 0-9 under an identity spec
+on ``bucket``, ids 10-19 under ``bucket[4]`` of ``id``, and a position
+delete of ids 1 and 11 (tests/fixtures/golden/generate.py).  Its
+mixed-spec reads are pinned in test_golden_fixtures.py; here the sink
+verbs run on a COPY of it: an append lays out under the default spec,
+and rewrite_data_files migrates every file to it."""
 
 from __future__ import annotations
 
-import pytest
-from pyspark.sql import functions as F
+import os
+import shutil
 
 from data_lakehouse_platform_spark.sources.avro_lite import read_container
 from data_lakehouse_platform_spark.sources.iceberg_lite import (
     IcebergLiteTable,
-    IcebergProtocolError,
 )
 
-
-def _mk(spark, tmp_path):
-    t = IcebergLiteTable(str(tmp_path / "t"))
-    df = spark.createDataFrame(
-        [(i, ["eu", "us"][i % 2], "2024-0%d-01" % (i % 3 + 1), float(i))
-         for i in range(20)],
-        "id int, region string, d string, v double",
-    ).select("id", "region", F.col("d").cast("date").alias("d"), "v")
-    t.write(df, partition_by=["region"])
-    return t
+_GOLDEN = os.path.join(
+    os.path.dirname(__file__), "fixtures", "golden", "iceberg_spec_evolved"
+)
+_DDL = "id int, bucket int, name string, score double"
 
 
-def _rows(t, spark, **kw):
-    return sorted(
-        (r.id, r.region, str(r.d), r.v)
-        for r in t.read(spark, **kw).collect()
-    )
+def _row(i):
+    return (i, i % 3, f"row-{i}", i * 2.5)
+
+
+def _copy(tmp_path):
+    dst = str(tmp_path / "t")
+    shutil.copytree(_GOLDEN, dst)
+    return IcebergLiteTable(dst)
+
+
+def _rows(t, spark):
+    return sorted(tuple(r) for r in t.read(spark).collect())
 
 
 def _ml_spec_ids(t):
-    meta = t.metadata()
     snap = next(
-        s
-        for s in meta["snapshots"]
+        s for s in t.snapshots()
         if int(s["snapshot-id"]) == t.current_snapshot_id()
     )
     _, ml = read_container(snap["manifest-list"])
@@ -48,172 +49,33 @@ def _ml_spec_ids(t):
     }
 
 
-def test_update_spec_is_metadata_only(spark, tmp_path):
-    t = _mk(spark, tmp_path)
-    pre = _rows(t, spark)
-    snaps_before = len(t.snapshots())
-    new_id = t.update_spec([("d", "day")])
-    meta = t.metadata()
-    assert meta["default-spec-id"] == new_id == 1
-    assert len(meta["partition-specs"]) == 2
-    # field ids continue from last-partition-id, never reused
-    f_new = meta["partition-specs"][1]["fields"][0]
-    f_old = meta["partition-specs"][0]["fields"][0]
-    assert f_new["field-id"] > f_old["field-id"]
-    assert len(t.snapshots()) == snaps_before  # no data snapshot
-    assert _rows(t, spark) == pre
-
-
-def test_mixed_spec_write_and_read(spark, tmp_path):
-    t = _mk(spark, tmp_path)
-    t.update_spec([("d", "day")])
-    add = spark.createDataFrame(
-        [(100, "ap", "2024-06-15", 1.5)],
-        "id int, region string, d string, v double",
-    ).select("id", "region", F.col("d").cast("date").alias("d"), "v")
-    t.write(add, mode="append")
-    got = _rows(t, spark)
-    assert len(got) == 21 and (100, "ap", "2024-06-15", 1.5) in got
-    assert _ml_spec_ids(t) == {0, 1}
-    # new-spec files land under the day transform's directory layout
-    files = [p for p, _s, part in t.plan_files()[0] if "d_day=" in str(part) or "d_day" in part]
-    assert files, "appended file should carry the new spec's partition key"
-
-
-def test_partition_filter_guard_on_mixed_specs(spark, tmp_path):
-    t = _mk(spark, tmp_path)
-    # single-spec: filter works
-    kept, _ = t.plan_files(partition_filter={"region": "eu"})[0], None
-    t.update_spec([("d", "day")])
-    add = spark.createDataFrame(
-        [(100, "eu", "2024-06-15", 1.5)],
-        "id int, region string, d string, v double",
-    ).select("id", "region", F.col("d").cast("date").alias("d"), "v")
-    t.write(add, mode="append")
-    with pytest.raises(IcebergProtocolError, match="not\\s+present on every"):
-        t.plan_files(partition_filter={"region": "eu"})
-    # the predicate path stays exact across specs
-    got = sorted(
-        r.id for r in t.read(spark, predicate="region = 'eu'").collect()
+def test_append_lands_under_default_spec(spark, tmp_path):
+    t = _copy(tmp_path)
+    t.write(
+        spark.createDataFrame([_row(i) for i in (20, 21)], _DDL),
+        mode="append",
     )
-    assert got == [i for i in range(20) if i % 2 == 0] + [100]
-
-
-def test_merge_across_specs(spark, tmp_path):
-    t = _mk(spark, tmp_path)
-    t.update_spec([("d", "day")])
-    add = spark.createDataFrame(
-        [(100, "ap", "2024-06-15", 1.5)],
-        "id int, region string, d string, v double",
-    ).select("id", "region", F.col("d").cast("date").alias("d"), "v")
-    t.write(add, mode="append")
-    v0 = t.current_snapshot_id()
-    pre = _rows(t, spark)
-    src = spark.createDataFrame(
-        [(0, "eu", "2024-01-01", -1.0), (100, "ap", "2024-06-15", -2.0),
-         (200, "xx", "2024-07-01", 9.0)],
-        "id int, region string, d string, v double",
-    ).select("id", "region", F.col("d").cast("date").alias("d"), "v")
-    t.merge(spark, src, keys=["id"])
-    got = dict((i, v) for i, _r, _d, v in _rows(t, spark))
-    assert got[0] == -1.0 and got[100] == -2.0 and got[200] == 9.0
-    assert len(got) == 22
-    # the old-spec manifest was rebuilt under ITS OWN spec id
-    assert 0 in _ml_spec_ids(t)
-    # pre-merge snapshot still reads exactly
-    assert _rows(t, spark, snapshot_id=v0) == pre
+    want = [_row(i) for i in range(22) if i not in (1, 11)]
+    assert _rows(t, spark) == sorted(want)
+    assert _ml_spec_ids(t) == {0, 1}
+    new = [
+        part for p, _s, part in t.plan_files()[0]
+        if p.startswith(t.path)
+    ]
+    assert new and all(set(part) == {"id_bucket"} for part in new)
 
 
 def test_rewrite_migrates_layout_to_default_spec(spark, tmp_path):
-    t = _mk(spark, tmp_path)
-    t.update_spec([("d", "day")])
-    add = spark.createDataFrame(
-        [(100, "ap", "2024-06-15", 1.5)],
-        "id int, region string, d string, v double",
-    ).select("id", "region", F.col("d").cast("date").alias("d"), "v")
-    t.write(add, mode="append")
-    t.delete(spark, "id = 3")
-    expected = [r for r in _rows(t, spark)]
+    t = _copy(tmp_path)
+    expected = _rows(t, spark)
     res = t.rewrite_data_files(spark, target_file_bytes=1 << 20)
-    assert res["rewritten_files"] > 0
+    assert res["rewritten_files"] == 7
     assert _rows(t, spark) == expected
     # everything now lives under the default spec; dict partition
     # filters are sound again (on the NEW key)
     assert _ml_spec_ids(t) == {1}
     data_files, deletes = t.plan_files()
     assert deletes == []  # position deletes folded in
-    assert all("d_day" in part for _p, _s, part in data_files)
-
-
-def test_update_spec_to_unpartitioned(spark, tmp_path):
-    t = _mk(spark, tmp_path)
-    t.update_spec([])
-    add = spark.createDataFrame(
-        [(100, "ap", "2024-06-15", 1.5)],
-        "id int, region string, d string, v double",
-    ).select("id", "region", F.col("d").cast("date").alias("d"), "v")
-    t.write(add, mode="append")
-    assert len(_rows(t, spark)) == 21
-    new_files = [
-        part for _p, _s, part in t.plan_files()[0] if part == {}
-    ]
-    assert new_files  # unpartitioned file landed
-
-
-def test_update_spec_refusals(spark, tmp_path):
-    t = _mk(spark, tmp_path)
-    with pytest.raises(ValueError, match="identical"):
-        t.update_spec(["region"])
-    with pytest.raises(ValueError, match="not in the current schema"):
-        t.update_spec(["nope"])
-
-
-def test_skipping_still_prunes_after_evolution(spark, tmp_path):
-    t = _mk(spark, tmp_path)
-    t.update_spec([("d", "day")])
-    add = spark.createDataFrame(
-        [(1000 + i, "ap", "2024-06-15", 9.0) for i in range(5)],
-        "id int, region string, d string, v double",
-    ).select("id", "region", F.col("d").cast("date").alias("d"), "v")
-    t.write(add, mode="append")
-    kept, total = t.files_matching(spark, "id >= 1000")
-    assert len(kept) < total  # old-spec files pruned by id bounds
-    got = sorted(
-        r.id for r in t.read(spark, predicate="id >= 1000").collect()
-    )
-    assert got == [1000, 1001, 1002, 1003, 1004]
-
-
-def test_rollback_to_ancestor(spark, tmp_path):
-    t = _mk(spark, tmp_path)
-    v0 = t.current_snapshot_id()
-    pre = _rows(t, spark)
-    t.write(
-        spark.createDataFrame(
-            [(100, "ap", "2024-06-15", 1.5)],
-            "id int, region string, d string, v double",
-        ).select("id", "region", F.col("d").cast("date").alias("d"), "v"),
-        mode="append",
-    )
-    v1 = t.current_snapshot_id()
-    t.rollback_to(v0)
-    assert t.current_snapshot_id() == v0
-    assert _rows(t, spark) == pre
-    # abandoned snapshot still time-travels until expiry
-    assert len(_rows(t, spark, snapshot_id=v1)) == 21
-    # a later write parents off the rolled-back snapshot
-    t.write(
-        spark.createDataFrame(
-            [(200, "eu", "2024-07-01", 2.0)],
-            "id int, region string, d string, v double",
-        ).select("id", "region", F.col("d").cast("date").alias("d"), "v"),
-        mode="append",
-    )
-    snaps = {int(s["snapshot-id"]): s for s in t.snapshots()}
-    assert snaps[t.current_snapshot_id()]["parent-snapshot-id"] == v0
-    # non-ancestor rollback refused (v1 is now off the current lineage)
-    from data_lakehouse_platform_spark.sources.iceberg_lite import (
-        IcebergProtocolError as _IPE,
-    )
-    with pytest.raises(_IPE, match="ancestor"):
-        t.rollback_to(v1)
+    assert all(set(part) == {"id_bucket"} for _p, _s, part in data_files)
+    kept, _d = t.plan_files(partition_filter={"id_bucket": 0})
+    assert 0 < len(kept) < len(data_files)

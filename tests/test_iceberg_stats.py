@@ -196,28 +196,6 @@ def test_timestamp_bounds_roundtrip(spark, tmp_path):
     )
 
 
-def test_merge_surgery_carries_bounds(spark, tmp_path):
-    t = IcebergLiteTable(str(tmp_path / "t"))
-    for lo in (0, 100):
-        t.write(
-            spark.createDataFrame(
-                [(lo + i, float(i)) for i in range(10)],
-                "id int, v double",
-            ).coalesce(1),
-            mode="append",
-        )
-    src = spark.createDataFrame([(0, -1.0)], "id int, v double")
-    t.merge(spark, src, keys=["id"])
-    # the untouched file (ids 100..109) was carried through manifest
-    # surgery as EXISTING — its bounds must still prune
-    kept, total = t.files_matching(spark, "id = 105")
-    assert total >= 2 and len(kept) == 1
-    # and the merged replacement files have fresh bounds — every file
-    # except the carried 100..109 one admits id <= 9
-    kept, total = t.files_matching(spark, "id <= 9")
-    assert len(kept) == total - 1
-
-
 def test_delete_prunes_scan_and_stays_exact(spark, tmp_path):
     t = IcebergLiteTable(str(tmp_path / "t"))
     for lo in (0, 100):

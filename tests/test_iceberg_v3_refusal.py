@@ -85,8 +85,9 @@ def test_v3_refusal_names_row_lineage_types_defaults_dvs(spark, tmp_path):
     assert "format-version=3" in msg
     assert "variant" in msg and "timestamp_ns" in msg
     assert "default values" in msg
-    # Puffin DVs and row lineage are READABLE since r10 (sources/
-    # puffin.py; read_with_lineage), so neither is a refusal reason
+    # Puffin DVs are READABLE since r10 (sources/puffin.py) and row
+    # lineage is hidden metadata a plain read ignores, so neither is a
+    # refusal reason
     assert "deletion vectors" not in msg
     assert "row lineage" not in msg
 
@@ -129,8 +130,7 @@ def test_v3_no_constructs_reads_data_and_time_travels(spark, tmp_path):
         tuple(r) for r in t.read(spark, snapshot_id=s1).collect()
     )
     assert pinned == [(1, "a"), (2, "b")]
-    # metadata tables work too (pure reads)
-    assert t.metadata_table(spark, "snapshots").count() == 2
+    assert len(t.snapshots()) == 2
     # mutations refuse — append, delete, maintenance alike
     with pytest.raises(IcebergProtocolError, match="refuses to COMMIT"):
         t.write(spark.createDataFrame([(4, "d")], "id int, v string"),
@@ -261,76 +261,19 @@ def _stamp_ml_first_row_ids(t, first_by_path):
                     extra_metadata={"format-version": b"3"})
 
 
-def test_v3_row_lineage_read(spark, tmp_path):
-    """r10: read_with_lineage derives _row_id = file first_row_id +
-    row position and _last_updated_sequence_number = the file's data
-    sequence number, per the v3 spec; without assignments it refuses
-    rather than fabricate lineage."""
+def test_v3_row_lineage_table_reads_plainly(spark, tmp_path):
+    """Row lineage (next-row-id, manifest-list first_row_id) is hidden
+    metadata: a v3 table carrying it reads as plain rows — no refusal,
+    no lineage columns — with its Puffin DV applied."""
     t = IcebergLiteTable(str(tmp_path / "v3lin"))
-    t.write(spark.createDataFrame(
-        [(i, f"a{i}") for i in range(6)], "id int, v string"
-    ).coalesce(1))
-    t.write(spark.createDataFrame(
-        [(100 + i, f"b{i}") for i in range(4)], "id int, v string"
-    ).coalesce(1), mode="append")
-    _stamp_v3(t)
-
-    # plain reads are lineage-agnostic and just work
-    assert t.read(spark).count() == 10
-
-    # no assignments anywhere -> loud refusal, never fabricated ids
-    with pytest.raises(IcebergProtocolError, match="first_row_id"):
-        t.read_with_lineage(spark)
-
-    import pyarrow.parquet as pq
-
-    files, _ = t.plan_files()
-    file_a = next(
-        p for p, _s, _pt in files if pq.read_metadata(p).num_rows == 6
-    )
-    file_b = next(
-        p for p, _s, _pt in files if pq.read_metadata(p).num_rows == 4
-    )
-    _stamp_ml_first_row_ids(t, {file_a: 0, file_b: 6})
-
-    df = t.read_with_lineage(spark)
-    assert [f.name for f in df.schema.fields] == [
-        "id", "v", "_row_id", "_last_updated_sequence_number",
-    ]
-    rows = {r.id: (r._row_id, r._last_updated_sequence_number)
-            for r in df.collect()}
-    # file A: ids 0-5 in write order -> row ids 0-5, seq 1
-    for i in range(6):
-        assert rows[i] == (i, 1), (i, rows[i])
-    # file B: ids 100-103 -> row ids 6-9, seq 2
-    for i in range(4):
-        assert rows[100 + i] == (6 + i, 2), (i, rows[100 + i])
-
-
-def test_v3_row_lineage_with_dv(spark, tmp_path):
-    """Lineage composes with Puffin DVs: retracted rows disappear,
-    surviving rows keep their original _row_id (position-derived ids
-    are stable under merge-on-read deletes)."""
-    t = IcebergLiteTable(str(tmp_path / "v3lindv"))
     t.write(spark.createDataFrame(
         [(i, f"a{i}") for i in range(6)], "id int, v string"
     ).coalesce(1))
     files, _ = t.plan_files()
     (file_a,) = [p for p, _s, _pt in files]
     _add_dv_snapshot(t, {file_a: [1, 4]})  # also stamps v3
-    _stamp_ml_first_row_ids(t, {file_a: 50})
-    rows = {r.id: r._row_id for r in t.read_with_lineage(spark).collect()}
-    assert rows == {0: 50, 2: 52, 3: 53, 5: 55}
-
-
-def test_v3_lineage_refuses_materialized_columns(spark, tmp_path):
-    """A data file CARRYING a materialized _row_id column must refuse
-    the positional derivation (carried-over rows keep their original
-    ids; deriving would misattribute)."""
-    t = IcebergLiteTable(str(tmp_path / "v3mat"))
-    t.write(spark.createDataFrame(
-        [(1, "a", 7)], "id int, v string, _row_id long"
-    ).coalesce(1))
     _stamp_v3(t)
-    with pytest.raises(IcebergProtocolError, match="materialized"):
-        t.read_with_lineage(spark)
+    _stamp_ml_first_row_ids(t, {file_a: 50})
+    df = t.read(spark)
+    assert df.columns == ["id", "v"]
+    assert sorted(r.id for r in df.collect()) == [0, 2, 3, 5]

@@ -50,16 +50,10 @@ _NAMED_APIS = [
 
 # Table-format VERBS the doc names (methods, so the module-attr pin
 # above can't see them): each must exist on its class AND stay in the
-# doc.  r8 additions: equality-delete writes + WAP.
+# doc.  Iceberg keeps only the verbs its streaming sinks need.
 _NAMED_METHODS = [
     ("data_lakehouse_platform_spark.sources.iceberg_lite",
-     "IcebergLiteTable", "delete_equality"),
-    ("data_lakehouse_platform_spark.sources.iceberg_lite",
      "IcebergLiteTable", "upsert"),
-    ("data_lakehouse_platform_spark.sources.iceberg_lite",
-     "IcebergLiteTable", "fast_forward"),
-    ("data_lakehouse_platform_spark.sources.iceberg_lite",
-     "IcebergLiteTable", "create_branch"),
     ("data_lakehouse_platform_spark.sources.iceberg_lite",
      "IcebergLiteTable", "rewrite_data_files"),
     ("data_lakehouse_platform_spark.sources.delta_lite",
@@ -76,10 +70,6 @@ _NAMED_METHODS = [
      "DeltaLiteTable", "optimize"),
     ("data_lakehouse_platform_spark.sources.delta_lite",
      "DeltaLiteTable", "convert_from_parquet"),
-    ("data_lakehouse_platform_spark.sources.iceberg_lite",
-     "IcebergLiteTable", "remove_orphan_files"),
-    ("data_lakehouse_platform_spark.sources.iceberg_lite",
-     "IcebergLiteTable", "add_files"),
 ]
 
 # Registry keys the doc cites as script replacements.

@@ -77,9 +77,13 @@ def test_oracle_arrow_dtype_parity(spark, duck):
     Assert the full registry is Arrow-type-exact so the class cannot
     recur.  Spark schemas come from the lazy plan (no execution); oracle
     schemas from a LIMIT-0 Arrow fetch."""
+    import os as _os
     import sys as _sys
 
-    _sys.path.insert(0, "/root/repo/.claude/skills/verify")
+    _sys.path.insert(0, _os.path.join(
+        _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__))),
+        ".claude", "skills", "verify",
+    ))
     from oracle_dtype_scan import scan
 
     qs = {name: q.build for name, q in _QUERIES.items()}

@@ -23,7 +23,13 @@ import pytest
 )
 def test_stress_bounds_hold():
     proc = subprocess.run(
-        [sys.executable, "/root/repo/stress.py"],
+        [
+            sys.executable,
+            os.path.join(
+                os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                "stress.py",
+            ),
+        ],
         capture_output=True,
         text=True,
         timeout=600,
