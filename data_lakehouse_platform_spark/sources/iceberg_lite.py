@@ -484,10 +484,14 @@ def bucket_partition_value(value, n: int, src_type: str) -> int | None:
         import datetime as _dt
 
         if isinstance(value, _dt.datetime):
+            # an aware value counts from the UTC epoch (its own zone's
+            # midnight would shift it by the offset); integer timedelta
+            # division keeps every microsecond
             epoch = _dt.datetime(
-                1970, 1, 1, tzinfo=value.tzinfo if value.tzinfo else None
+                1970, 1, 1,
+                tzinfo=_dt.timezone.utc if value.tzinfo else None,
             )
-            micros = int((value - epoch).total_seconds() * 1_000_000)
+            micros = (value - epoch) // _dt.timedelta(microseconds=1)
         else:
             micros = int(value)
         b = micros.to_bytes(8, "little", signed=True)
@@ -676,7 +680,9 @@ def _decode_bound(b, ice_type: str, tz_name):
                 days=struct.unpack("<i", b)[0]
             )
         if ice_type == "long":
-            return struct.unpack("<q", b)[0]
+            # a 4-byte bound was written while the column was still an
+            # int (int -> long promotion keeps the old files' stats)
+            return struct.unpack("<i" if len(b) == 4 else "<q", b)[0]
         if ice_type in ("timestamptz", "timestamp"):
             micros = struct.unpack("<q", b)[0]
             base = datetime.datetime(
@@ -686,9 +692,8 @@ def _decode_bound(b, ice_type: str, tz_name):
                 return _to_session_naive(base, tz_name)
             return base.replace(tzinfo=None)
         if ice_type in ("float", "double"):
-            v = struct.unpack(
-                "<f" if ice_type == "float" else "<d", b
-            )[0]
+            # float -> double promotion: old files keep 4-byte bounds
+            v = struct.unpack("<f" if len(b) == 4 else "<d", b)[0]
             return None if (math.isnan(v) or math.isinf(v)) else v
         if ice_type == "string":
             return b.decode("utf-8")
@@ -1071,12 +1076,13 @@ class IcebergLiteTable:
             data_files = [t for t in data_files if keep(t[2])]
         return data_files, deletes
 
-    def _live_file_stats(self, snap: dict) -> dict[str, dict]:
-        """{abs data-file path: raw manifest stats} for a snapshot's
-        live files — record_count plus the avro map-arrays
-        (null_value_counts / lower_bounds / upper_bounds) folded to
-        {field id: value} dicts.  A second metadata-only manifest pass,
-        read only when a predicate asks for skipping."""
+    _STAT_KEYS = (
+        "value_counts", "null_value_counts", "lower_bounds", "upper_bounds"
+    )
+
+    def _live_data_entries(self, snap: dict) -> dict[str, dict]:
+        """{abs data-file path: manifest ``data_file`` record} for a
+        snapshot's live data files.  Metadata-only."""
         out: dict[str, dict] = {}
         for mpath, mcontent, _mseq in self._manifest_paths(snap):
             if mcontent == 1:
@@ -1088,22 +1094,28 @@ class IcebergLiteTable:
                 dfile = e["data_file"]
                 if int(dfile.get("content") or 0) != 0:
                     continue
-
-                def _fold(key):
-                    arr = dfile.get(key)
-                    if not arr:
-                        return {}
-                    return {
-                        int(kv["key"]): kv["value"] for kv in arr
-                    }
-
-                out[os.path.abspath(_local_path(dfile["file_path"]))] = {
-                    "record_count": int(dfile.get("record_count") or 0),
-                    "null_value_counts": _fold("null_value_counts"),
-                    "lower_bounds": _fold("lower_bounds"),
-                    "upper_bounds": _fold("upper_bounds"),
-                }
+                out[os.path.abspath(_local_path(dfile["file_path"]))] = dfile
         return out
+
+    def _live_file_stats(self, snap: dict) -> dict[str, dict]:
+        """{abs data-file path: raw manifest stats} for a snapshot's
+        live files — record_count plus the avro map-arrays
+        (null_value_counts / lower_bounds / upper_bounds) folded to
+        {field id: value} dicts.  A second metadata-only manifest pass,
+        read only when a predicate asks for skipping."""
+
+        def _fold(dfile, key):
+            return {int(kv["key"]): kv["value"] for kv in dfile.get(key) or []}
+
+        return {
+            path: {
+                "record_count": int(dfile.get("record_count") or 0),
+                "null_value_counts": _fold(dfile, "null_value_counts"),
+                "lower_bounds": _fold(dfile, "lower_bounds"),
+                "upper_bounds": _fold(dfile, "upper_bounds"),
+            }
+            for path, dfile in self._live_data_entries(snap).items()
+        }
 
     def _file_skip_domain(
         self,
@@ -2926,7 +2938,7 @@ class IcebergLiteTable:
         }
         migrate = bool(data_spec_ids - {default_spec_id})
         kept: list[tuple[str, int, dict]] = []
-        new_files: list[tuple[str, int, int, dict]] = []
+        new_files: list[tuple[str, int, int, dict, dict]] = []
         n_rewritten = 0
         if migrate:
             # SPEC MIGRATION: the table holds manifests under evolved
@@ -2944,9 +2956,7 @@ class IcebergLiteTable:
                 sub_all, self._table_spec(meta), name_to_id,
                 id_to_name, id_types,
             )
-            new_files = [
-                (pth, n, sz, part) for pth, n, sz, part, _st in staged5
-            ]
+            new_files = staged5
             n_rewritten = len(data_files)
         else:
             groups: dict[tuple, list] = {}
@@ -2985,6 +2995,10 @@ class IcebergLiteTable:
                     spark,
                 )
                 part = dict(key)
+                stats = self._collect_file_stats(
+                    sub, stage, self._field_names_by_id_inv(meta),
+                    self._field_types_by_id(meta),
+                )
                 for root, _d, files in os.walk(stage):
                     for f in sorted(files):
                         if f.endswith(".parquet"):
@@ -2995,6 +3009,7 @@ class IcebergLiteTable:
                                     pq.read_metadata(full).num_rows,
                                     os.path.getsize(full),
                                     part,
+                                    stats.get(os.path.abspath(full), {}),
                                 )
                             )
                 n_rewritten += len(cand)
@@ -3024,6 +3039,8 @@ class IcebergLiteTable:
             }
             for pf in spec_fields
         ]
+        # untouched files keep the column stats their writer recorded
+        live = self._live_data_entries(cur_snap_pre)
         entries = [
             {
                 "status": 1, "snapshot_id": snap_id,
@@ -3032,9 +3049,10 @@ class IcebergLiteTable:
                     "content": 0, "file_path": path,
                     "file_format": "PARQUET", "partition": part,
                     "record_count": nrows, "file_size_in_bytes": size,
+                    **fstats,
                 },
             }
-            for path, nrows, size, part in new_files
+            for path, nrows, size, part, fstats in new_files
         ] + [
             # untouched files ride along as EXISTING with their
             # ORIGINAL sequence numbers (equality-delete gating intact)
@@ -3046,6 +3064,13 @@ class IcebergLiteTable:
                     "file_format": "PARQUET", "partition": part,
                     "record_count": pq.read_metadata(path).num_rows,
                     "file_size_in_bytes": os.path.getsize(path),
+                    **{
+                        k: v
+                        for k, v in live.get(
+                            os.path.abspath(path), {}
+                        ).items()
+                        if k in self._STAT_KEYS
+                    },
                 },
             }
             for path, fseq, part in kept
@@ -3075,7 +3100,7 @@ class IcebergLiteTable:
         ml_rows = [
             _new_manifest_row(
                 mpath, 0, default_spec_id, snap_id, seq, len(new_files),
-                sum(n for _, n, _s, _pt in new_files),
+                sum(n for _p, n, _s, _pt, _st in new_files),
                 min_seq=min_seq, existing_files=len(kept),
             )
         ]

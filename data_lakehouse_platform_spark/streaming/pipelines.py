@@ -474,10 +474,11 @@ def upsert_stream_to_iceberg(
             exists = False
         if exists and table.committed_batches(app_id) >= batch_id:
             return  # replayed batch: already committed, exactly-once
-        # last-write-wins within the batch: upsert refuses duplicate
-        # keys (cardinality violation), so collapse to one row per key
-        # — by the source's own event order when given (repartition-
-        # stable), else by (partition-id, row-position) as documented
+        # last-write-wins within the batch: upsert appends every source
+        # row (two rows of one key would both land), so collapse to one
+        # row per key — by the source's own event order when given
+        # (repartition-stable), else by (partition-id, row-position) as
+        # documented
         if order_by is not None:
             order = (
                 F.col(order_by).desc(),

@@ -82,3 +82,174 @@ def test_append_to_evolved_table_follows_current_schema(spark, tmp_path):
     got = {r.id: (r.label, r.extra, r.score) for r in t.read(spark).collect()}
     assert got[12] == ("row-12", 1200, -12.0)
     assert got[0] == ("row-0", None, None) and len(got) == 13
+
+
+# -- reads of the frozen fixture, one evolution step per test --------
+# fixture rows: id i in 0..11, bucket i % 3, name/label "row-i",
+# old score i * 2.5 (field 4, dropped), extra i * 100 from id 4 on,
+# re-added score -i (field 6) from id 8 on.  Snapshot k adds 2 ids
+# (4 in the first), each under the schema of its snapshot.
+
+_SNAP_IDS = {1: 4, 2: 6, 3: 8, 4: 10, 5: 12}  # snapshot -> ids 0..n-1
+
+
+def _fixture():
+    return IcebergLiteTable(_GOLDEN)
+
+
+def _copy(tmp_path):
+    dst = str(tmp_path / "evolved")
+    shutil.copytree(_GOLDEN, dst)
+    return IcebergLiteTable(dst)
+
+
+def _latest_row(i):
+    return (i, i % 3, f"row-{i}", i * 100 if i >= 4 else None,
+            float(-i) if i >= 8 else None)
+
+
+def test_rename_reads_old_files_through_field_id(spark):
+    """``name`` became ``label`` at snapshot 3: files written before the
+    rename answer a read, a predicate and a stats prune on the NEW
+    name, because all three resolve field id 3."""
+    t = _fixture()
+    assert "name" not in t.read(spark).columns
+    got = t.read(spark, predicate="label = 'row-1'").collect()
+    assert [(r.id, r.label) for r in got] == [(1, "row-1")]
+    kept, total = t.files_matching(spark, "label = 'row-5'")
+    assert total == 5 and len(kept) == 1
+    # the snapshot before the rename still reads under the old name
+    old = t.read(spark, snapshot_id=2)
+    assert "label" not in old.columns
+    assert sorted(r.name for r in old.collect()) == sorted(
+        f"row-{i}" for i in range(6)
+    )
+
+
+def test_drop_then_readd_same_name_reads_null_not_old_data(spark):
+    """``score`` (field 4) was dropped and re-added as field 6: rows
+    from before the re-add read NULL, never the dropped values, while
+    time travel to before the drop still sees them."""
+    t = _fixture()
+    got = {r.id: r.score for r in t.read(spark).collect()}
+    assert got == {i: _latest_row(i)[4] for i in range(12)}
+    with_score = sorted(
+        r.id
+        for r in t.read(spark, predicate="score IS NOT NULL").collect()
+    )
+    assert with_score == [8, 9, 10, 11]
+    before_drop = {
+        r.id: r.score for r in t.read(spark, snapshot_id=3).collect()
+    }
+    assert before_drop == {i: i * 2.5 for i in range(8)}
+
+
+def test_type_promotion_casts_old_files_up(spark):
+    """``id`` went int -> long at snapshot 5: every file reads as
+    bigint, and the 4-byte bounds of the int-era files still prune."""
+    t = _fixture()
+    df = t.read(spark)
+    assert dict(df.dtypes)["id"] == "bigint"
+    assert sorted(r.id for r in df.collect()) == list(range(12))
+    kept, total = t.files_matching(spark, "id >= 10")
+    assert total == 5 and len(kept) == 1
+    kept, _t = t.files_matching(spark, "id = 3")
+    assert len(kept) == 1
+    assert [r.id for r in t.read(spark, predicate="id = 3").collect()] == [3]
+
+
+def test_add_column_then_append_then_time_travel(spark, tmp_path):
+    """An append after the evolutions lands under the current schema;
+    the snapshot from before ``extra`` existed still reads four
+    columns and its four rows."""
+    t = _copy(tmp_path)
+    sid = t.write(
+        spark.createDataFrame(
+            [(12, 0, "row-12", 1200, -12.0)],
+            "id long, bucket int, label string, extra long, score double",
+        ),
+        mode="append",
+    )
+    assert sid == 6
+    first = t.read(spark, snapshot_id=1)
+    assert first.columns == ["id", "bucket", "name", "score"]
+    assert sorted(tuple(r) for r in first.collect()) == [
+        (i, i % 3, f"row-{i}", i * 2.5) for i in range(4)
+    ]
+    got = sorted(tuple(r) for r in t.read(spark).collect())
+    assert got == [_latest_row(i) for i in range(13)]
+
+
+@pytest.mark.parametrize("sid", sorted(_SNAP_IDS))
+def test_time_travel_predicate_read_per_schema(spark, sid):
+    """A predicate read at each snapshot resolves the predicate column
+    under THAT snapshot's schema and returns exactly its rows."""
+    t = _fixture()
+    got = sorted(
+        r.id
+        for r in t.read(spark, snapshot_id=sid, predicate="bucket = 1")
+        .collect()
+    )
+    assert got == [i for i in range(_SNAP_IDS[sid]) if i % 3 == 1]
+
+
+@pytest.mark.parametrize("start", [1, 2, 4])
+def test_incremental_read_from_each_evolution(spark, start):
+    """The append scan after snapshot ``start`` returns the later ids
+    under the CURRENT schema, across the rename, drop and promotion."""
+    t = _fixture()
+    df = t.incremental_read(spark, start)
+    assert df.columns == ["id", "bucket", "label", "extra", "score"]
+    got = sorted(tuple(r) for r in df.collect())
+    assert got == [_latest_row(i) for i in range(_SNAP_IDS[start], 12)]
+
+
+def test_upsert_matches_old_schema_files_by_field_id(spark, tmp_path):
+    """The equality delete of an upsert on ``id`` retracts rows of the
+    int-era, pre-rename files too: deletes match on field id 1, whatever
+    the file calls or types it."""
+    t = _copy(tmp_path)
+    src = [(2, 2, "new-2", 7, 2.0), (9, 0, "new-9", 9, 9.0)]
+    t.upsert(
+        spark,
+        spark.createDataFrame(
+            src,
+            "id long, bucket int, label string, extra long, score double",
+        ),
+        keys=["id"],
+    )
+    got = sorted(tuple(r) for r in t.read(spark).collect())
+    want = [_latest_row(i) for i in range(12) if i not in (2, 9)] + src
+    assert got == sorted(want)
+
+
+def test_delete_by_renamed_column_on_old_files(spark, tmp_path):
+    """A position delete driven by a predicate on the renamed column
+    finds its row in a file written under the old name."""
+    t = _copy(tmp_path)
+    res = t.delete(spark, "label = 'row-1'")
+    assert res["rows_deleted"] == 1 and res["files_touched"] == 1
+    got = sorted(r.id for r in t.read(spark).collect())
+    assert got == [i for i in range(12) if i != 1]
+    assert 1 in {r.id for r in t.read(spark, snapshot_id=5).collect()}
+
+
+def test_rewrite_projects_every_file_to_current_schema(spark, tmp_path):
+    """Compaction rewrites the five per-schema files as current-schema
+    files with the table's field ids; values, the dropped column's
+    NULLs included, read the same, and the old snapshots still do."""
+    t = _copy(tmp_path)
+    before = sorted(tuple(r) for r in t.read(spark).collect())
+    res = t.rewrite_data_files(spark)
+    assert res["rewritten_files"] == 5
+    assert sorted(tuple(r) for r in t.read(spark).collect()) == before
+    for p, _s, _pt in t.plan_files()[0]:
+        ids = {
+            fld.name: (fld.metadata or {}).get(b"PARQUET:field_id")
+            for fld in pq.read_schema(p)
+        }
+        assert ids == {"id": b"1", "bucket": b"2", "label": b"3",
+                       "extra": b"5", "score": b"6"}
+    assert sorted(
+        r.score for r in t.read(spark, snapshot_id=3).collect()
+    ) == [i * 2.5 for i in range(8)]
