@@ -1609,11 +1609,6 @@ class IcebergLiteTable:
             out = out.unionByName(d)
         return out
 
-    def _field_names_by_id_inv(self, meta: dict) -> dict[str, int]:
-        """name -> field-id for the current schema (the field-id
-        stamping direction)."""
-        return {n: i for i, n in self._field_names_by_id(meta).items()}
-
     @staticmethod
     def _field_names_by_id(meta: dict) -> dict[int, str]:
         """Top-level field id -> name for the current schema (v2
@@ -2937,6 +2932,10 @@ class IcebergLiteTable:
             if int(r.get("content") or 0) == 0
         }
         migrate = bool(data_spec_ids - {default_spec_id})
+        fields_m, _csid = self._current_schema(meta)
+        name_to_id = {f["name"]: int(f["id"]) for f in fields_m}
+        id_to_name = {v: k for k, v in name_to_id.items()}
+        id_types = {int(f["id"]): f["type"] for f in fields_m}
         kept: list[tuple[str, int, dict]] = []
         new_files: list[tuple[str, int, int, dict, dict]] = []
         n_rewritten = 0
@@ -2947,16 +2946,11 @@ class IcebergLiteTable:
             # way to converge the layout after a partition evolution.
             # All deletes are applied during the read, so no delete
             # manifest carries forward.
-            fields_m, _csid = self._current_schema(meta)
-            name_to_id = {f["name"]: int(f["id"]) for f in fields_m}
-            id_to_name = {v: k for k, v in name_to_id.items()}
-            id_types = {int(f["id"]): f["type"] for f in fields_m}
             sub_all = self._read_files(spark, meta, data_files, deletes)
-            staged5 = self._stage_data_files(
+            new_files = self._stage_data_files(
                 sub_all, self._table_spec(meta), name_to_id,
                 id_to_name, id_types,
             )
-            new_files = staged5
             n_rewritten = len(data_files)
         else:
             groups: dict[tuple, list] = {}
@@ -2979,39 +2973,13 @@ class IcebergLiteTable:
                 total = sum(os.path.getsize(m[0]) for m in cand)
                 n_out = max(1, -(-total // target_file_bytes))
                 sub = self._read_files(spark, meta, cand, deletes)
-                stage = os.path.join(
-                    self.path, "data", f"rw-{uuidlib.uuid4().hex[:12]}"
-                )
-                # compacted files must keep their field-id footers, or one
-                # rewrite_data_files would turn an evolution-safe table
-                # back into an id-less (by-name resolved) one
-                staged = self._stamp_field_ids(
-                    sub.coalesce(n_out), self._field_names_by_id_inv(meta)
-                )
-                self._parquet_with_field_ids(
-                    lambda s=staged, p=stage: s.write.mode(
-                        "errorifexists"
-                    ).parquet(p),
-                    spark,
-                )
-                part = dict(key)
-                stats = self._collect_file_stats(
-                    sub, stage, self._field_names_by_id_inv(meta),
-                    self._field_types_by_id(meta),
-                )
-                for root, _d, files in os.walk(stage):
-                    for f in sorted(files):
-                        if f.endswith(".parquet"):
-                            full = os.path.join(root, f)
-                            new_files.append(
-                                (
-                                    full,
-                                    pq.read_metadata(full).num_rows,
-                                    os.path.getsize(full),
-                                    part,
-                                    stats.get(os.path.abspath(full), {}),
-                                )
-                            )
+                # the group shares one partition tuple: stage without
+                # partition columns and record that tuple
+                for path, nrows, size, _p, stats in self._stage_data_files(
+                    sub.coalesce(n_out), [], name_to_id, id_to_name,
+                    id_types,
+                ):
+                    new_files.append((path, nrows, size, dict(key), stats))
                 n_rewritten += len(cand)
 
         if not new_files:
@@ -3028,12 +2996,11 @@ class IcebergLiteTable:
         mdir = self.metadata_dir
 
         spec_fields = self._table_spec(meta)
-        id_to_type = self._field_types_by_id(meta)
         part_avro = [
             {
                 "name": pf["name"],
                 "type": _partition_avro_type(
-                    pf["transform"], id_to_type[pf["source-id"]]
+                    pf["transform"], id_types[pf["source-id"]]
                 ),
                 "field-id": pf["field-id"],
             }

@@ -46,8 +46,8 @@ def test_golden_delta_reads_bit_exact(spark):
     assert latest == sorted(expect)
 
 
-def test_golden_iceberg_reads_bit_exact(spark):
-    t = IcebergLiteTable(os.path.join(GOLDEN, "iceberg_table"))
+def test_golden_iceberg_reads_bit_exact(spark, iceberg_golden):
+    t = IcebergLiteTable(iceberg_golden("iceberg_table"))
     snaps = [int(s["snapshot-id"]) for s in t.metadata()["snapshots"]]
     assert snaps == [1, 2, 3]
     s1 = sorted(
@@ -166,11 +166,11 @@ def test_golden_partitioned_delta_reads_bit_exact(spark):
     )
 
 
-def test_golden_partitioned_iceberg_reads_bit_exact(spark):
+def test_golden_partitioned_iceberg_reads_bit_exact(spark, iceberg_golden):
     """r9 second family: hidden bucket[4] partitioning + a one-snapshot
     equality-delete upsert (merge-on-read) — ids 0-2 carry the
     upserted +10 scores, the equality delete retracts their originals."""
-    t = IcebergLiteTable(os.path.join(GOLDEN, "iceberg_partitioned"))
+    t = IcebergLiteTable(iceberg_golden("iceberg_partitioned"))
     rows = sorted(
         (r.id, r.bucket, r.name, r.score) for r in t.read(spark).collect()
     )
@@ -295,12 +295,12 @@ def test_fresh_v2ckpt_build_matches_golden_shapes(spark, tmp_path):
     assert len(fs) == len(gs) and all(f.endswith(".parquet") for f in fs)
 
 
-def test_golden_v3dv_iceberg_reads_bit_exact(spark):
+def test_golden_v3dv_iceberg_reads_bit_exact(spark, iceberg_golden):
     """r10 fourth family: a v3 table with a Puffin deletion-vector
     snapshot — pins the Puffin writer's bytes and the DV read path
     (ids 0 and 2 retracted from the six-row file; time travel to the
     pre-DV snapshot sees everything)."""
-    t = IcebergLiteTable(os.path.join(GOLDEN, "iceberg_v3dv"))
+    t = IcebergLiteTable(iceberg_golden("iceberg_v3dv"))
     assert t.metadata()["format-version"] == 3
     rows = sorted(
         (r.id, r.bucket, r.name, r.score) for r in t.read(spark).collect()
@@ -329,7 +329,9 @@ def test_golden_v3dv_iceberg_reads_bit_exact(spark):
     assert read_dv_positions(pf, blob["offset"], blob["length"]) == [0, 2]
 
 
-def test_fresh_v3dv_build_matches_golden_shapes(spark, tmp_path):
+def test_fresh_v3dv_build_matches_golden_shapes(
+    spark, tmp_path, iceberg_golden
+):
     """A fresh generator run reproduces the same snapshot/metadata
     shape and an identical DV decode as the committed fixture."""
     import sys
@@ -339,7 +341,7 @@ def test_fresh_v3dv_build_matches_golden_shapes(spark, tmp_path):
 
     _build_v3dv(spark, str(tmp_path / "v3dv"))
     fresh = IcebergLiteTable(str(tmp_path / "v3dv"))
-    golden = IcebergLiteTable(os.path.join(GOLDEN, "iceberg_v3dv"))
+    golden = IcebergLiteTable(iceberg_golden("iceberg_v3dv"))
 
     def shape(t):
         m = t.metadata()
@@ -360,14 +362,14 @@ def _seed_row(i):
     return (i, i % 3, f"row-{i}", i * 2.5)
 
 
-def test_golden_schema_evolved_iceberg_reads_bit_exact(spark):
+def test_golden_schema_evolved_iceberg_reads_bit_exact(spark, iceberg_golden):
     """Schema-evolved fixture: one data file per schema (add ``extra``,
     rename ``name`` -> ``label``, drop and re-add ``score``, promote
     ``id`` int -> long).  Every snapshot reads through ITS OWN schema,
     with older files resolved by field id: a renamed column keeps its
     values, an added column reads NULL, a re-added name reads NULL
     (new field id, never the dropped data), an int file casts up."""
-    t = IcebergLiteTable(os.path.join(GOLDEN, "iceberg_schema_evolved"))
+    t = IcebergLiteTable(iceberg_golden("iceberg_schema_evolved"))
     snaps = t.metadata()["snapshots"]
     assert [int(s["snapshot-id"]) for s in snaps] == [1, 2, 3, 4, 5]
     assert [int(s["schema-id"]) for s in snaps] == [0, 1, 2, 4, 5]
@@ -407,11 +409,11 @@ def test_golden_schema_evolved_iceberg_reads_bit_exact(spark):
     assert sorted(tuple(r) for r in latest.collect()) == sorted(expect[5][1])
 
 
-def test_golden_schema_evolved_incremental_read(spark):
+def test_golden_schema_evolved_incremental_read(spark, iceberg_golden):
     """The incremental append scan projects every file through the
     CURRENT schema by field id, pre-rename and pre-promotion files
     included."""
-    t = IcebergLiteTable(os.path.join(GOLDEN, "iceberg_schema_evolved"))
+    t = IcebergLiteTable(iceberg_golden("iceberg_schema_evolved"))
     got = sorted(tuple(r) for r in t.incremental_read(spark, 3).collect())
     assert got == [
         (i, i % 3, f"row-{i}", i * 100, float(-i)) for i in range(8, 12)
@@ -421,7 +423,7 @@ def test_golden_schema_evolved_incremental_read(spark):
     assert sorted(r.id for r in full.collect()) == list(range(12))
 
 
-def test_golden_spec_evolved_iceberg_reads_bit_exact(spark):
+def test_golden_spec_evolved_iceberg_reads_bit_exact(spark, iceberg_golden):
     """Spec-evolved fixture: ids 0-9 under an identity spec on
     ``bucket``, ids 10-19 under ``bucket[4]`` of ``id``, then one
     position delete over both (ids 1 and 11).  Every snapshot reads
@@ -435,7 +437,7 @@ def test_golden_spec_evolved_iceberg_reads_bit_exact(spark):
         IcebergProtocolError,
     )
 
-    t = IcebergLiteTable(os.path.join(GOLDEN, "iceberg_spec_evolved"))
+    t = IcebergLiteTable(iceberg_golden("iceberg_spec_evolved"))
     meta = t.metadata()
     assert [int(s["snapshot-id"]) for s in meta["snapshots"]] == [1, 2, 3]
     assert [

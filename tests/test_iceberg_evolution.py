@@ -8,8 +8,9 @@ pinned in test_golden_fixtures.py."""
 from __future__ import annotations
 
 import glob
+import json
 import os
-import shutil
+from decimal import Decimal
 
 import pyarrow.parquet as pq
 import pytest
@@ -19,10 +20,11 @@ from data_lakehouse_platform_spark.sources.iceberg_lite import (
     IcebergLiteTable,
 )
 
-_GOLDEN = os.path.join(
-    os.path.dirname(__file__), "fixtures", "golden",
-    "iceberg_schema_evolved",
-)
+
+@pytest.fixture
+def t(iceberg_golden):
+    """A relocated copy of the frozen fixture, private to the test."""
+    return IcebergLiteTable(iceberg_golden("iceberg_schema_evolved"))
 
 
 def _mk(spark, tmp_path, name="t"):
@@ -49,10 +51,8 @@ def test_own_writes_carry_field_ids(spark, tmp_path):
         assert ids == {"k": b"1", "v": b"2", "s": b"3"}
 
 
-def test_append_to_evolved_table_follows_current_schema(spark, tmp_path):
-    dst = str(tmp_path / "evolved")
-    shutil.copytree(_GOLDEN, dst)
-    t = IcebergLiteTable(dst)
+def test_append_to_evolved_table_follows_current_schema(spark, t):
+    before = {p for p, _s, _pt in t.plan_files()[0]}
     # the pre-evolution shape is refused: no implicit evolution
     with pytest.raises(ValueError, match="schema differs"):
         t.write(
@@ -69,7 +69,7 @@ def test_append_to_evolved_table_follows_current_schema(spark, tmp_path):
         ),
         mode="append",
     )
-    new = [p for p, _s, _pt in t.plan_files()[0] if p.startswith(dst)]
+    new = [p for p, _s, _pt in t.plan_files()[0] if p not in before]
     assert new
     for f in new:
         ids = {
@@ -93,26 +93,15 @@ def test_append_to_evolved_table_follows_current_schema(spark, tmp_path):
 _SNAP_IDS = {1: 4, 2: 6, 3: 8, 4: 10, 5: 12}  # snapshot -> ids 0..n-1
 
 
-def _fixture():
-    return IcebergLiteTable(_GOLDEN)
-
-
-def _copy(tmp_path):
-    dst = str(tmp_path / "evolved")
-    shutil.copytree(_GOLDEN, dst)
-    return IcebergLiteTable(dst)
-
-
 def _latest_row(i):
     return (i, i % 3, f"row-{i}", i * 100 if i >= 4 else None,
             float(-i) if i >= 8 else None)
 
 
-def test_rename_reads_old_files_through_field_id(spark):
+def test_rename_reads_old_files_through_field_id(spark, t):
     """``name`` became ``label`` at snapshot 3: files written before the
     rename answer a read, a predicate and a stats prune on the NEW
     name, because all three resolve field id 3."""
-    t = _fixture()
     assert "name" not in t.read(spark).columns
     got = t.read(spark, predicate="label = 'row-1'").collect()
     assert [(r.id, r.label) for r in got] == [(1, "row-1")]
@@ -126,11 +115,10 @@ def test_rename_reads_old_files_through_field_id(spark):
     )
 
 
-def test_drop_then_readd_same_name_reads_null_not_old_data(spark):
+def test_drop_then_readd_same_name_reads_null_not_old_data(spark, t):
     """``score`` (field 4) was dropped and re-added as field 6: rows
     from before the re-add read NULL, never the dropped values, while
     time travel to before the drop still sees them."""
-    t = _fixture()
     got = {r.id: r.score for r in t.read(spark).collect()}
     assert got == {i: _latest_row(i)[4] for i in range(12)}
     with_score = sorted(
@@ -144,10 +132,9 @@ def test_drop_then_readd_same_name_reads_null_not_old_data(spark):
     assert before_drop == {i: i * 2.5 for i in range(8)}
 
 
-def test_type_promotion_casts_old_files_up(spark):
+def test_type_promotion_casts_old_files_up(spark, t):
     """``id`` went int -> long at snapshot 5: every file reads as
     bigint, and the 4-byte bounds of the int-era files still prune."""
-    t = _fixture()
     df = t.read(spark)
     assert dict(df.dtypes)["id"] == "bigint"
     assert sorted(r.id for r in df.collect()) == list(range(12))
@@ -158,11 +145,70 @@ def test_type_promotion_casts_old_files_up(spark):
     assert [r.id for r in t.read(spark, predicate="id = 3").collect()] == [3]
 
 
-def test_add_column_then_append_then_time_travel(spark, tmp_path):
+def _promote(t, new_types):
+    """Commit a safe type promotion as another engine's ``ALTER COLUMN
+    ... TYPE`` leaves it: a new current schema in the next metadata
+    version, written by hand, with every data file untouched."""
+    meta = t.metadata()
+    cur = next(
+        s for s in meta["schemas"]
+        if s["schema-id"] == meta["current-schema-id"]
+    )
+    sid = max(s["schema-id"] for s in meta["schemas"]) + 1
+    meta["schemas"].append({
+        **cur, "schema-id": sid,
+        "fields": [
+            {**f, "type": new_types.get(f["name"], f["type"])}
+            for f in cur["fields"]
+        ],
+    })
+    meta["current-schema-id"] = sid
+    hint = os.path.join(t.metadata_dir, "version-hint.text")
+    with open(hint) as fh:
+        v = int(fh.read()) + 1
+    with open(os.path.join(t.metadata_dir, f"v{v}.metadata.json"),
+              "w") as fh:
+        json.dump(meta, fh)
+    with open(hint, "w") as fh:
+        fh.write(str(v))
+
+
+def test_float_and_decimal_promotion_cast_old_files_up(spark, tmp_path):
+    """float -> double and decimal(10,2) -> decimal(20,2): the file
+    written before the promotion reads through the cast to the current
+    types, beside a file written after it, and its 4-byte float bounds
+    still prune."""
+    t = IcebergLiteTable(str(tmp_path / "promo"))
+    t.write(
+        spark.range(3).select(
+            F.col("id").alias("k"),
+            (F.col("id") + 0.5).cast("float").alias("x"),
+            F.col("id").cast("decimal(10,2)").alias("amt"),
+        ).coalesce(1)
+    )
+    _promote(t, {"x": "double", "amt": "decimal(20,2)"})
+    assert dict(t.read(spark).dtypes) == {
+        "k": "bigint", "x": "double", "amt": "decimal(20,2)"
+    }
+    t.write(
+        spark.range(3, 5).select(
+            F.col("id").alias("k"),
+            (F.col("id") + 0.5).alias("x"),
+            F.col("id").cast("decimal(20,2)").alias("amt"),
+        ).coalesce(1),
+        mode="append",
+    )
+    got = sorted(tuple(r) for r in t.read(spark).collect())
+    assert got == [(i, i + 0.5, Decimal(f"{i}.00")) for i in range(5)]
+    kept, total = t.files_matching(spark, "x > 3.0")
+    assert total == 2 and len(kept) == 1
+    assert [r.k for r in t.read(spark, predicate="x < 1.0").collect()] == [0]
+
+
+def test_add_column_then_append_then_time_travel(spark, t):
     """An append after the evolutions lands under the current schema;
     the snapshot from before ``extra`` existed still reads four
     columns and its four rows."""
-    t = _copy(tmp_path)
     sid = t.write(
         spark.createDataFrame(
             [(12, 0, "row-12", 1200, -12.0)],
@@ -181,10 +227,9 @@ def test_add_column_then_append_then_time_travel(spark, tmp_path):
 
 
 @pytest.mark.parametrize("sid", sorted(_SNAP_IDS))
-def test_time_travel_predicate_read_per_schema(spark, sid):
+def test_time_travel_predicate_read_per_schema(spark, t, sid):
     """A predicate read at each snapshot resolves the predicate column
     under THAT snapshot's schema and returns exactly its rows."""
-    t = _fixture()
     got = sorted(
         r.id
         for r in t.read(spark, snapshot_id=sid, predicate="bucket = 1")
@@ -194,21 +239,19 @@ def test_time_travel_predicate_read_per_schema(spark, sid):
 
 
 @pytest.mark.parametrize("start", [1, 2, 4])
-def test_incremental_read_from_each_evolution(spark, start):
+def test_incremental_read_from_each_evolution(spark, t, start):
     """The append scan after snapshot ``start`` returns the later ids
     under the CURRENT schema, across the rename, drop and promotion."""
-    t = _fixture()
     df = t.incremental_read(spark, start)
     assert df.columns == ["id", "bucket", "label", "extra", "score"]
     got = sorted(tuple(r) for r in df.collect())
     assert got == [_latest_row(i) for i in range(_SNAP_IDS[start], 12)]
 
 
-def test_upsert_matches_old_schema_files_by_field_id(spark, tmp_path):
+def test_upsert_matches_old_schema_files_by_field_id(spark, t):
     """The equality delete of an upsert on ``id`` retracts rows of the
     int-era, pre-rename files too: deletes match on field id 1, whatever
     the file calls or types it."""
-    t = _copy(tmp_path)
     src = [(2, 2, "new-2", 7, 2.0), (9, 0, "new-9", 9, 9.0)]
     t.upsert(
         spark,
@@ -223,10 +266,9 @@ def test_upsert_matches_old_schema_files_by_field_id(spark, tmp_path):
     assert got == sorted(want)
 
 
-def test_delete_by_renamed_column_on_old_files(spark, tmp_path):
+def test_delete_by_renamed_column_on_old_files(spark, t):
     """A position delete driven by a predicate on the renamed column
     finds its row in a file written under the old name."""
-    t = _copy(tmp_path)
     res = t.delete(spark, "label = 'row-1'")
     assert res["rows_deleted"] == 1 and res["files_touched"] == 1
     got = sorted(r.id for r in t.read(spark).collect())
@@ -234,11 +276,10 @@ def test_delete_by_renamed_column_on_old_files(spark, tmp_path):
     assert 1 in {r.id for r in t.read(spark, snapshot_id=5).collect()}
 
 
-def test_rewrite_projects_every_file_to_current_schema(spark, tmp_path):
+def test_rewrite_projects_every_file_to_current_schema(spark, t):
     """Compaction rewrites the five per-schema files as current-schema
     files with the table's field ids; values, the dropped column's
     NULLs included, read the same, and the old snapshots still do."""
-    t = _copy(tmp_path)
     before = sorted(tuple(r) for r in t.read(spark).collect())
     res = t.rewrite_data_files(spark)
     assert res["rewritten_files"] == 5

@@ -1,7 +1,7 @@
 """Iceberg incremental append scan (incremental_append_files /
 incremental_read) and the streaming source over iceberg_lite tables
 (sources/iceberg_stream.py): snapshot-offset exactly-once tailing,
-bootstrap with position deletes applied, replace (compaction)
+bootstrap with position and equality deletes applied, replace (compaction)
 snapshots skipped, delete/overwrite snapshots refused/skipped/emitted
 per option.  The scan across schema evolution is pinned on the frozen
 fixture (test_golden_fixtures.py)."""
@@ -235,3 +235,52 @@ def test_stream_bootstrap_applies_equality_deletes(registered, tmp_path):
     # and the stream agrees with the batch reader exactly
     batch = sorted(tuple(r) for r in t.read(spark).collect())
     assert got == batch
+
+
+def _commit_equality_delete(spark, t, keys):
+    """Hand-commit a delete-only snapshot the way a Flink writer's
+    equality-delta commit leaves it: one equality-delete file on
+    ``id`` for ``keys`` and no data files, with the current snapshot's
+    manifests carried forward."""
+    import time
+
+    from data_lakehouse_platform_spark.sources.iceberg_lite import (
+        _new_manifest_row,
+    )
+
+    meta = t.metadata()
+    cur_id = t.current_snapshot_id()
+    name_to_id = {n: i for i, n in t._field_names_by_id(meta).items()}
+    dfiles, _n = t._stage_equality_delete(
+        spark.createDataFrame([(k,) for k in keys], "id long"),
+        ["id"], name_to_id,
+    )
+    snap_id = max(int(s["snapshot-id"]) for s in meta["snapshots"]) + 1
+    seq = int(meta["last-sequence-number"]) + 1
+    mpath, n_rows = t._eq_delete_manifest(
+        meta, dfiles, [name_to_id["id"]], snap_id, seq
+    )
+    cur = next(
+        s for s in meta["snapshots"] if int(s["snapshot-id"]) == cur_id
+    )
+    t._commit_snapshot(
+        meta, snap_id, seq, int(time.time() * 1000),
+        [_new_manifest_row(mpath, 1, 0, snap_id, seq, len(dfiles), n_rows)]
+        + t._manifest_list_rows(cur),
+        "delete", cur_id,
+    )
+
+
+def test_stream_bootstrap_equality_delete_only_table(registered, tmp_path):
+    """The bootstrap snapshot may hold only equality deletes (a Flink
+    writer's delete commit adds no data): the first batch serves the
+    post-delete state, the same as the batch reader."""
+    spark = registered
+    t = _mk(spark, tmp_path)  # (1, "a"), (2, "b")
+    _commit_equality_delete(spark, t, [1])
+    assert t.snapshots()[-1]["summary"]["operation"] == "delete"
+    got = _drain(
+        spark, t.path, str(tmp_path / "o"), str(tmp_path / "c")
+    )
+    assert got == [(2, "b")]
+    assert got == sorted(tuple(r) for r in t.read(spark).collect())

@@ -647,16 +647,24 @@ def test_iceberg_unsupported_transform_refused(spark, tmp_path):
         )
 
 
-def test_iceberg_position_delete_write_roundtrip(spark, tmp_path):
-    """delete(predicate) commits a position-delete file (no data-file
-    rewrite): deleted rows vanish, prior snapshots stay intact, a
-    second overlapping delete stays idempotent, and appends after a
-    delete are unaffected."""
+@pytest.mark.parametrize(
+    "partition_by", [None, ["grp"]], ids=["flat", "partitioned"]
+)
+def test_iceberg_position_delete_write_roundtrip(
+    spark, tmp_path, partition_by
+):
+    """delete(predicate), on a flat and an identity-partitioned table,
+    commits a position-delete file (no data-file rewrite): deleted rows
+    vanish, prior snapshots stay intact, a second overlapping delete
+    stays idempotent, a delete of nothing live commits nothing, and
+    appends after a delete are unaffected."""
     t = IcebergLiteTable(str(tmp_path / "pd"))
     s1 = t.write(
         spark.createDataFrame(
-            [(i, f"v{i}") for i in range(10)], "id long, val string"
-        )
+            [(i, f"v{i}", i % 3) for i in range(10)],
+            "id long, val string, grp int",
+        ),
+        partition_by=partition_by,
     )
     res = t.delete(spark, "id IN (2, 5, 7)")
     assert res["rows_deleted"] == 3
@@ -675,13 +683,18 @@ def test_iceberg_position_delete_write_roundtrip(spark, tmp_path):
     assert sorted(r.id for r in t.read(spark).collect()) == [
         0, 1, 3, 4, 8, 9
     ]
-    # delete matching nothing is a no-op commit-wise
-    res3 = t.delete(spark, "id = 999")
-    assert res3["rows_deleted"] == 0
-    assert res3["snapshot_id"] == res2["snapshot_id"]
+    # a delete matching nothing, or only dead rows, commits nothing
+    n_snaps = len(t.snapshots())
+    for pred in ("id = 999", "id IN (2, 5)"):
+        res3 = t.delete(spark, pred)
+        assert res3 == {"snapshot_id": res2["snapshot_id"],
+                        "rows_deleted": 0, "files_touched": 0}
+    assert len(t.snapshots()) == n_snaps
     # append after deletes: new rows visible, tombstones still applied
     t.write(
-        spark.createDataFrame([(100, "x")], "id long, val string"),
+        spark.createDataFrame(
+            [(100, "x", 1)], "id long, val string, grp int"
+        ),
         mode="append",
     )
     assert sorted(r.id for r in t.read(spark).collect()) == [

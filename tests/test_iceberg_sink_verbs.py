@@ -98,34 +98,6 @@ def test_upsert_chain_keeps_latest_and_time_travels(
 
 
 @_LAYOUTS
-def test_delete_no_match_commits_nothing(spark, tmp_path, partitioned):
-    t = _table(spark, tmp_path, partitioned)
-    head = t.current_snapshot_id()
-    res = t.delete(spark, "id > 1000")
-    assert res == {"snapshot_id": head, "rows_deleted": 0,
-                   "files_touched": 0}
-    assert len(t.snapshots()) == 1
-    assert _rows(t, spark) == sorted(_seed())
-
-
-@_LAYOUTS
-def test_delete_is_idempotent(spark, tmp_path, partitioned):
-    """Deleting the same rows again finds nothing left to delete and
-    commits nothing; the first delete stays time-travelable."""
-    t = _table(spark, tmp_path, partitioned)
-    first = t.delete(spark, "region = 'us' AND id < 6")
-    assert first["rows_deleted"] == 2
-    again = t.delete(spark, "region = 'us' AND id < 6")
-    assert again["rows_deleted"] == 0
-    assert again["snapshot_id"] == first["snapshot_id"]
-    want = [r for r in _seed() if not (r[1] == "us" and r[0] < 6)]
-    assert _rows(t, spark) == sorted(want)
-    assert _rows(t, spark, t.snapshots()[0]["snapshot-id"]) == sorted(
-        _seed()
-    )
-
-
-@_LAYOUTS
 def test_rewrite_keeps_column_bounds(spark, tmp_path, partitioned):
     """Every file compaction writes carries value counts, null counts
     and the true bounds of each column, so a predicate outside every
