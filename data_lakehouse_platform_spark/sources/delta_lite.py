@@ -72,12 +72,14 @@ replace it without touching any verb.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import re
 import time
 import urllib.parse
 import uuid
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -565,6 +567,19 @@ def _stat_domain(
             continue
         dom[c.lower()] = (val, val, 0, nr)
     return dom
+
+
+class _CowSnapshot(NamedTuple):
+    """The version a copy-on-write verb rewrites.  ``current`` is a
+    ``_with_position`` read of it (each row names its file in
+    ``__dv_path``); ``data_cols`` are the table's columns."""
+
+    version: int
+    meta: dict
+    live: dict
+    proto: dict
+    current: DataFrame
+    data_cols: list
 
 
 class DeltaLiteTable:
@@ -1615,6 +1630,111 @@ class DeltaLiteTable:
                 )
             version += 1
 
+    def _cow_snapshot(self, spark: SparkSession) -> _CowSnapshot:
+        """Open the latest version for a copy-on-write verb
+        (:meth:`merge`, :meth:`update`, :meth:`_delete_rewrite`)."""
+        latest = self.latest_version()
+        if latest is None:
+            raise FileNotFoundError(f"no Delta log at {self.log_dir}")
+        meta, live, proto = self._replay(latest)
+        self._check_write_protocol(meta, proto, "mutate")
+        current = self.read(spark, version=latest, _with_position=True)
+        data_cols = [
+            c for c in current.columns
+            if c not in ("__dv_path", "__dv_ridx")
+        ]
+        return _CowSnapshot(latest, meta, live, proto, current, data_cols)
+
+    def _touched_files(self, located: DataFrame, live: dict) -> set[str]:
+        """Live log keys of the data files holding ``located``'s rows
+        (a ``_with_position`` read, so each row names its file in
+        ``__dv_path``).  Only file PATHS reach the driver: the collect
+        is bounded by file count (log-sized metadata), never row
+        count."""
+        root = os.path.abspath(self.path)
+        rels = set()
+        for r in located.select("__dv_path").distinct().collect():
+            rel, absk = self._live_key(
+                urllib.parse.unquote(r["__dv_path"]), root
+            )
+            rels.add(rel if rel in live else absk)
+        missing = sorted(rels - live.keys())
+        if missing:
+            raise DeltaProtocolError(
+                f"matched file {missing[0]} is not in the snapshot"
+            )
+        return rels
+
+    def _commit_rewrite(
+        self,
+        snap: _CowSnapshot,
+        operation: str,
+        params: dict,
+        removed: set[str],
+        rewrite: DataFrame,
+        cdc_acts: list[dict] | None,
+        txn: tuple[str, int] | None = None,
+    ) -> int:
+        """Stage ``rewrite`` as the new data files and commit ONE
+        copy-on-write version on top of ``snap``: commitInfo, then —
+        when ``cdc_acts`` is given — the changeDataFeed protocol bump
+        and the change files, a ``remove`` per replaced file, the
+        optional ``txn`` stamp, and the ``add``s.  The commit is
+        stale-sensitive: the remove list was computed against
+        ``snap.version``, so a lost race aborts (see :meth:`_commit`)."""
+        meta, proto = snap.meta, snap.proto
+        adds, _stage_dir = self._stage_adds(
+            rewrite, meta.get("partitionColumns", []),
+            table_conf=meta.get("configuration"),
+            phys_map=self._write_phys_map(meta),
+            generated=self._generated_exprs(meta),
+        )
+        now_ms = int(time.time() * 1000)
+        actions: list[dict] = [
+            {
+                "commitInfo": {
+                    "timestamp": now_ms,
+                    "operation": operation,
+                    "operationParameters": params,
+                    "engineInfo": "delta-lite/0.1 (protocol v1)",
+                }
+            }
+        ]
+        if cdc_acts is not None:
+            new_proto = self._proto_with_cdf(proto)
+            if new_proto != proto:
+                actions.append({"protocol": new_proto})
+            actions.extend(cdc_acts)
+        for rel in sorted(removed):
+            actions.append(
+                {
+                    "remove": {
+                        "path": rel,
+                        "deletionTimestamp": now_ms,
+                        "dataChange": True,
+                    }
+                }
+            )
+        if txn is not None:
+            app_id, app_version = txn
+            actions.append(
+                {
+                    "txn": {
+                        "appId": str(app_id),
+                        "version": int(app_version),
+                        "lastUpdated": now_ms,
+                    }
+                }
+            )
+        actions.extend(adds)
+        return self._commit(
+            actions,
+            snap.version + 1,
+            stale_sensitive=True,
+            computed_against=snap.version,
+            op_desc=operation,
+        )
+
     def write(
         self,
         df: DataFrame,
@@ -2366,6 +2486,11 @@ class DeltaLiteTable:
         whenMatchedUpdate / whenNotMatchedInsert shape
         (gold_dim_products.py:118-131) as ONE atomic version.
 
+        Keys match with ``=``, so a NULL key never matches (Delta's
+        rule): a NULL-keyed source row inserts.  Every target row
+        that matches a source row is a match of its own — two target
+        rows sharing a key both update, as in delta-spark.
+
         Conditional clauses (delta-spark's optional conditions), both
         SQL predicates over two struct columns ``t`` (the current
         target row) and ``s`` (the matching source row), e.g.
@@ -2378,28 +2503,22 @@ class DeltaLiteTable:
           remaining matched rows update only when it holds, else the
           target row is kept unchanged.  Default: update every match.
 
-        Like real Delta's COW merge, only the data files that actually
-        CONTAIN matched rows are rewritten: touched files are located
-        by a ``_metadata.file_path`` semi-join on the merge keys,
-        their surviving rows are rewritten together with every source
-        row, and every untouched file's add action (deletion-vector
-        descriptor included) stays live in the log untouched — a
-        100 TB fact upsert touching one partition rewrites that
-        partition's files, not the table.  Duplicate keys in
-        ``source`` are refused (delta-spark raises the same
+        There is one rewrite path: the touched rows join the source
+        as ``(t, s)`` pairs, and the same join yields the CDF pre- and
+        post-images.  Like real Delta's COW merge, only the data files
+        that actually CONTAIN matched rows are rewritten: touched
+        files are located by a ``_metadata.file_path`` semi-join on
+        the merge keys, their rows are rewritten together with the
+        inserts, and every untouched file's add action
+        (deletion-vector descriptor included) stays live in the log
+        untouched — a 100 TB fact upsert touching one partition
+        rewrites that partition's files, not the table.  Duplicate
+        keys in ``source`` are refused (delta-spark raises the same
         multiple-source-rows-matched error)."""
         from pyspark.sql import functions as F
 
-        latest = self.latest_version()
-        if latest is None:
-            raise FileNotFoundError(f"no Delta log at {self.log_dir}")
-        meta, live, _proto = self._replay(latest)
-        self._check_write_protocol(meta, _proto, "mutate")
-        current = self.read(spark, version=latest, _with_position=True)
-        data_cols = [
-            c for c in current.columns
-            if c not in ("__dv_path", "__dv_ridx")
-        ]
+        snap = self._cow_snapshot(spark)
+        latest, meta, live, _proto, current, data_cols = snap
         # types too, like write(): a source column of another type
         # would commit files the table schema cannot read
         cur_types = {f.name: f.dataType for f in current.schema.fields}
@@ -2411,7 +2530,8 @@ class DeltaLiteTable:
                 "does not evolve schemas implicitly — align the "
                 "DataFrame first"
             )
-        if self._cdf_enabled(meta):
+        cdf = self._cdf_enabled(meta)
+        if cdf:
             # Pin ONE evaluation of the source (delta-spark's
             # materializeSource): the merge evaluates `source` several
             # times — the touched-file location pass, the rewrite, and
@@ -2431,32 +2551,13 @@ class DeltaLiteTable:
                 f"source has duplicate keys on {keys}; MERGE requires "
                 "at most one source row per target row"
             )
-        # Touched files: every file holding >=1 matched row.  The
-        # collect is bounded by FILE count (log-sized metadata), never
-        # row count.
-        touched_uris = [
-            r["__dv_path"]
-            for r in current.join(
+        # Touched files: every file holding >=1 matched row.
+        touched_rels = self._touched_files(
+            current.join(
                 source.select(*keys).distinct(), on=keys, how="left_semi"
-            )
-            .select("__dv_path")
-            .distinct()
-            .collect()
-        ]
-        root = os.path.abspath(self.path)
-        touched_rels = set()
-        for u in touched_uris:
-            rel, absk = self._live_key(urllib.parse.unquote(u), root)
-            rel = rel if rel in live else absk
-            if rel not in live:
-                raise DeltaProtocolError(
-                    f"matched file {rel} is not in the snapshot"
-                )
-            touched_rels.add(rel)
-
-        part = meta.get("partitionColumns", [])
-        cdf = self._cdf_enabled(meta)
-        change = None  # CDF change frame (rows + _change_type)
+            ),
+            live,
+        )
         # Inserts: source rows matching NO target row (every match
         # lives in a touched file by construction).
         inserts = source.join(
@@ -2473,159 +2574,65 @@ class DeltaLiteTable:
                 f"{strict_ids}; MERGE inserts would write explicit "
                 "values — write(mode='append') generates them instead"
             )
-        if cdf:
-            change = inserts.withColumn("_change_type", F.lit("insert"))
-        if touched_uris:
+        rewrite = inserts
+        changes = [(inserts, "insert")]
+        if touched_rels:
             # Rewrite pass reads ONLY the touched files (targeted scan
             # via the log, not a full-snapshot read + filter): at
             # 100 TB the rewrite I/O is proportional to the files
             # being replaced, and only the match-location pass above
-            # scans the table.
-            touched_rows = self.read(
+            # scans the table.  Matched pairs join as (t, s) structs
+            # so the conditions read like delta-spark's ("s.x <> t.x").
+            t = self.read(
                 spark, version=latest, _only_paths=touched_rels
-            ).select(*data_cols)
-            if (
-                matched_update_condition is None
-                and matched_delete_condition is None
-            ):
-                # fast path: every match updates — survivors are the
-                # touched rows whose key has no source row
-                kept = touched_rows.join(
-                    source.select(*keys), on=keys, how="left_anti"
+            ).select(F.struct(*data_cols).alias("t"))
+            srows = source.select(F.struct(*data_cols).alias("s"))
+            on = None
+            for k in keys:
+                c = F.col("t")[k] == F.col("s")[k]
+                on = c if on is None else (on & c)
+            joined = t.join(srows, on=on, how="left")
+            matched = F.col("s").isNotNull()
+            dele = matched & F.coalesce(
+                F.expr(matched_delete_condition or "false"), F.lit(False)
+            )
+            upd = (
+                matched
+                & ~dele
+                & F.coalesce(
+                    F.expr(matched_update_condition or "true"),
+                    F.lit(False),
                 )
-                updated_src = source.join(
-                    current.select(*keys), on=keys, how="left_semi"
-                ).select(*data_cols)
-                rewrite = kept.unionByName(updated_src)
-                if cdf:
-                    pre = touched_rows.join(
-                        source.select(*keys), on=keys, how="left_semi"
-                    ).withColumn(
-                        "_change_type", F.lit("update_preimage")
-                    )
-                    post = updated_src.withColumn(
-                        "_change_type", F.lit("update_postimage")
-                    )
-                    change = change.unionByName(pre).unionByName(post)
-            else:
-                # clause path: join matched pairs as (t, s) structs so
-                # the conditions read like delta-spark's ("s.x <> t.x")
-                t = touched_rows.select(
-                    F.struct(*data_cols).alias("t")
+            )
+            rewrite = (
+                joined.filter(~dele)
+                .select(
+                    F.when(upd, F.col("s")).otherwise(F.col("t")).alias("r")
                 )
-                srows = source.select(*data_cols).select(
-                    F.struct(*data_cols).alias("s")
-                )
-                on = None
-                for k in keys:
-                    c = F.col("t")[k] == F.col("s")[k]
-                    on = c if on is None else (on & c)
-                joined = t.join(srows, on=on, how="left")
-                matched = F.col("s").isNotNull()
-                dele = (
-                    F.coalesce(
-                        F.expr(matched_delete_condition), F.lit(False)
-                    )
-                    if matched_delete_condition is not None
-                    else F.lit(False)
-                )
-                upd = (
-                    F.coalesce(
-                        F.expr(matched_update_condition), F.lit(False)
-                    )
-                    if matched_update_condition is not None
-                    else F.lit(True)
-                )
-                rewrite = (
-                    joined.filter(~(matched & dele))
-                    .select(
-                        F.when(matched & upd, F.col("s"))
-                        .otherwise(F.col("t"))
-                        .alias("r")
-                    )
-                    .select("r.*")
-                )
-                if cdf:
-                    change = (
-                        change.unionByName(
-                            joined.filter(matched & dele)
-                            .select("t.*")
-                            .withColumn("_change_type", F.lit("delete"))
-                        )
-                        .unionByName(
-                            joined.filter(matched & ~dele & upd)
-                            .select("t.*")
-                            .withColumn(
-                                "_change_type", F.lit("update_preimage")
-                            )
-                        )
-                        .unionByName(
-                            joined.filter(matched & ~dele & upd)
-                            .select("s.*")
-                            .withColumn(
-                                "_change_type", F.lit("update_postimage")
-                            )
-                        )
-                    )
-            rewrite = rewrite.unionByName(inserts)
-        else:
-            rewrite = inserts
-        adds, _stage_dir = self._stage_adds(
-            rewrite, part, table_conf=meta.get("configuration"),
-            phys_map=self._write_phys_map(meta),
-            generated=self._generated_exprs(meta),
-        )
-
-        now_ms = int(time.time() * 1000)
-        actions: list[dict] = [
-            {
-                "commitInfo": {
-                    "timestamp": now_ms,
-                    "operation": "MERGE",
-                    "operationParameters": {
-                        "matchedPredicates": "update",
-                        "keys": keys,
-                    },
-                    "engineInfo": "delta-lite/0.1 (protocol v1)",
-                }
-            }
-        ]
+                .select("r.*")
+                .unionByName(inserts)
+            )
+            changes += [
+                (joined.filter(dele).select("t.*"), "delete"),
+                (joined.filter(upd).select("t.*"), "update_preimage"),
+                (joined.filter(upd).select("s.*"), "update_postimage"),
+            ]
+        cdc_acts = None
         if cdf:
-            new_proto = self._proto_with_cdf(_proto)
-            if new_proto != _proto:
-                actions.append({"protocol": new_proto})
+            change = functools.reduce(
+                DataFrame.unionByName,
+                [
+                    rows.withColumn("_change_type", F.lit(kind))
+                    for rows, kind in changes
+                ],
+            )
             cdc_acts, _cdc_dir = self._stage_cdc(
-                change, part, phys_map=self._write_phys_map(meta)
+                change, meta.get("partitionColumns", []),
+                phys_map=self._write_phys_map(meta),
             )
-            actions.extend(cdc_acts)
-        for rel in sorted(touched_rels):
-            actions.append(
-                {
-                    "remove": {
-                        "path": rel,
-                        "deletionTimestamp": now_ms,
-                        "dataChange": True,
-                    }
-                }
-            )
-        if txn is not None:
-            app_id, app_version = txn
-            actions.append(
-                {
-                    "txn": {
-                        "appId": str(app_id),
-                        "version": int(app_version),
-                        "lastUpdated": now_ms,
-                    }
-                }
-            )
-        actions.extend(adds)
-        v = self._commit(
-            actions,
-            latest + 1,
-            stale_sensitive=True,
-            computed_against=latest,
-            op_desc="MERGE",
+        v = self._commit_rewrite(
+            snap, "MERGE", {"matchedPredicates": "update", "keys": keys},
+            touched_rels, rewrite, cdc_acts, txn,
         )
         return {
             "version": v,
@@ -2642,92 +2649,33 @@ class DeltaLiteTable:
         file PATHS ever reaches the driver."""
         from pyspark.sql import functions as F
 
-        latest = self.latest_version()
-        if latest is None:
-            raise FileNotFoundError(f"no Delta log at {self.log_dir}")
-        meta, live, _proto = self._replay(latest)
-        self._check_write_protocol(meta, _proto, "mutate")
-        current = self.read(spark, version=latest, _with_position=True)
-        data_cols = [
-            c for c in current.columns
-            if c not in ("__dv_path", "__dv_ridx")
-        ]
-        touched_uris = [
-            r["__dv_path"]
-            for r in self.read(
+        snap = self._cow_snapshot(spark)
+        latest, meta, live, _proto, _current, data_cols = snap
+        touched_rels = self._touched_files(
+            self.read(
                 spark, version=latest, predicate=predicate,
                 _with_position=True,
-            )
-            .select("__dv_path")
-            .distinct()
-            .collect()
-        ]
-        if not touched_uris:
+            ),
+            live,
+        )
+        if not touched_rels:
             return {"version": latest, "deleted_rows": 0, "files": 0}
-        root = os.path.abspath(self.path)
-        touched_rels = set()
-        for u in touched_uris:
-            rel, absk = self._live_key(urllib.parse.unquote(u), root)
-            touched_rels.add(rel if rel in live else absk)
-        missing_rels = sorted(touched_rels - live.keys())
-        if missing_rels:
-            raise DeltaProtocolError(
-                f"matched file {missing_rels[0]} is not in the snapshot"
-            )
         touched_rows = self.read(
             spark, version=latest, _only_paths=touched_rels
         ).select(*data_cols)
         keep = ~F.coalesce(F.expr(predicate), F.lit(False))
-        part = meta.get("partitionColumns", [])
-        adds, _stage_dir = self._stage_adds(
-            touched_rows.filter(keep), part,
-            table_conf=meta.get("configuration"),
-            phys_map=self._write_phys_map(meta),
-            generated=self._generated_exprs(meta),
-        )
-        now_ms = int(time.time() * 1000)
-        actions: list[dict] = [
-            {
-                "commitInfo": {
-                    "timestamp": now_ms,
-                    "operation": "DELETE",
-                    "operationParameters": {
-                        "predicate": predicate,
-                        "strategy": "rewrite",
-                    },
-                    "engineInfo": "delta-lite/0.1 (protocol v1)",
-                }
-            }
-        ]
+        cdc_acts = None
         if self._cdf_enabled(meta):
-            new_proto = self._proto_with_cdf(_proto)
-            if new_proto != _proto:
-                actions.append({"protocol": new_proto})
             cdc_acts, _cdc_dir = self._stage_cdc(
                 touched_rows.filter(~keep).withColumn(
                     "_change_type", F.lit("delete")
                 ),
-                part,
+                meta.get("partitionColumns", []),
                 phys_map=self._write_phys_map(meta),
             )
-            actions.extend(cdc_acts)
-        for rel in sorted(touched_rels):
-            actions.append(
-                {
-                    "remove": {
-                        "path": rel,
-                        "deletionTimestamp": now_ms,
-                        "dataChange": True,
-                    }
-                }
-            )
-        actions.extend(adds)
-        v = self._commit(
-            actions,
-            latest + 1,
-            stale_sensitive=True,
-            computed_against=latest,
-            op_desc="DELETE",
+        v = self._commit_rewrite(
+            snap, "DELETE", {"predicate": predicate, "strategy": "rewrite"},
+            touched_rels, touched_rows.filter(keep), cdc_acts,
         )
         return {
             "version": v,
@@ -2753,16 +2701,8 @@ class DeltaLiteTable:
         predicate result means not-matched (SQL WHERE semantics)."""
         from pyspark.sql import functions as F
 
-        latest = self.latest_version()
-        if latest is None:
-            raise FileNotFoundError(f"no Delta log at {self.log_dir}")
-        meta, live, _proto = self._replay(latest)
-        self._check_write_protocol(meta, _proto, "mutate")
-        current = self.read(spark, version=latest, _with_position=True)
-        data_cols = [
-            c for c in current.columns
-            if c not in ("__dv_path", "__dv_ridx")
-        ]
+        snap = self._cow_snapshot(spark)
+        latest, meta, live, _proto, _current, data_cols = snap
         assignments = dict(set)  # param named for delta-spark parity
         unknown = sorted(assignments.keys() - {*data_cols})
         if unknown:
@@ -2770,37 +2710,19 @@ class DeltaLiteTable:
                 f"SET names unknown columns {unknown} "
                 f"(have {sorted(data_cols)})"
             )
-        part = meta.get("partitionColumns", [])
-        touched_uris = [
-            r["__dv_path"]
-            for r in self.read(
+        touched_rels = self._touched_files(
+            self.read(
                 spark, version=latest, predicate=predicate,
                 _with_position=True,
-            )
-            .select("__dv_path")
-            .distinct()
-            .collect()
-        ]
-        if not touched_uris:
+            ),
+            live,
+        )
+        if not touched_rels:
             return {
                 "version": latest,
                 "files_rewritten": 0,
                 "files_untouched": len(live),
             }
-        root = os.path.abspath(self.path)
-        # NB: the `set` parameter (named for delta-spark parity)
-        # shadows the builtin in this scope — build via comprehension.
-        touched_rels = {
-            (lambda rk: rk[0] if rk[0] in live else rk[1])(
-                self._live_key(urllib.parse.unquote(u), root)
-            )
-            for u in touched_uris
-        }
-        missing_rels = sorted(touched_rels - live.keys())
-        if missing_rels:
-            raise DeltaProtocolError(
-                f"matched file {missing_rels[0]} is not in the snapshot"
-            )
         # rewrite pass: targeted read of ONLY the touched files (see
         # merge() — the same file-scoped I/O bound)
         touched_rows = self.read(
@@ -2839,7 +2761,7 @@ class DeltaLiteTable:
                 .withColumn("_change_type", F.lit("update_postimage"))
             )
             cdc_acts, cdc_dir = self._stage_cdc(
-                pre.unionByName(post), part,
+                pre.unionByName(post), meta.get("partitionColumns", []),
                 phys_map=self._write_phys_map(meta),
             )
             change_schema = StructType(
@@ -2868,55 +2790,9 @@ class DeltaLiteTable:
                     for c in data_cols
                 ]
             )
-        adds, _stage_dir = self._stage_adds(
-            rewrite, part, table_conf=meta.get("configuration"),
-            phys_map=self._write_phys_map(meta),
-            generated=self._generated_exprs(meta),
-        )
-        now_ms = int(time.time() * 1000)
-        actions: list[dict] = [
-            {
-                "commitInfo": {
-                    "timestamp": now_ms,
-                    "operation": "UPDATE",
-                    "operationParameters": {"predicate": predicate},
-                    "engineInfo": "delta-lite/0.1 (protocol v1)",
-                }
-            }
-        ]
-        if cdc_acts is not None:
-            new_proto = self._proto_with_cdf(_proto)
-            if new_proto != _proto:
-                actions.append({"protocol": new_proto})
-            actions.extend(cdc_acts)
-        for rel in sorted(touched_rels):
-            actions.append(
-                {
-                    "remove": {
-                        "path": rel,
-                        "deletionTimestamp": now_ms,
-                        "dataChange": True,
-                    }
-                }
-            )
-        if txn is not None:
-            app_id, app_version = txn
-            actions.append(
-                {
-                    "txn": {
-                        "appId": str(app_id),
-                        "version": int(app_version),
-                        "lastUpdated": now_ms,
-                    }
-                }
-            )
-        actions.extend(adds)
-        v = self._commit(
-            actions,
-            latest + 1,
-            stale_sensitive=True,
-            computed_against=latest,
-            op_desc="UPDATE",
+        v = self._commit_rewrite(
+            snap, "UPDATE", {"predicate": predicate}, touched_rels,
+            rewrite, cdc_acts, txn,
         )
         return {
             "version": v,

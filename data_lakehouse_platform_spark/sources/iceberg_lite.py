@@ -2784,14 +2784,35 @@ class IcebergLiteTable:
         ``upsert`` is merge-on-read: commit cost is key-set sized and
         independent of table size; readers pay the match until
         :meth:`rewrite_data_files` compacts.  For a copy-on-write
-        MERGE use :meth:`DeltaLiteTable.merge`.  Returns
-        ``{"snapshot_id", "rows", "keys"}``.
+        MERGE use :meth:`DeltaLiteTable.merge`.  A source with two
+        rows for one key is refused before anything is staged (both
+        rows would land, and the table would hold the key twice).
+        Returns ``{"snapshot_id", "rows", "keys"}``.
         """
+        from pyspark.sql import functions as F
+
         try:
             meta = self.metadata()
         except FileNotFoundError:
             meta = {}
         cur_id = self._head(meta)
+        if cur_id is not None:
+            cur_fields, _sid = self._current_schema(meta)
+            tcols = [f["name"] for f in cur_fields]
+            if sorted(source.columns) != sorted(tcols):
+                raise ValueError(
+                    "source schema differs from table schema; align the "
+                    "DataFrame first (no implicit evolution)"
+                )
+            bad = [k for k in keys if k not in tcols]
+            if bad:
+                raise ValueError(f"upsert keys {bad} not in table columns")
+        dup = source.groupBy(*keys).count().filter(F.col("count") > 1)
+        if dup.limit(1).count() > 0:
+            raise ValueError(
+                f"source has duplicate keys on {keys}; upsert requires "
+                "at most one source row per key"
+            )
         if cur_id is None:
             # empty/fresh table: an upsert is a plain append
             return {
@@ -2801,16 +2822,6 @@ class IcebergLiteTable:
                 "rows": source.count(),
                 "keys": 0,
             }
-        cur_fields, _sid = self._current_schema(meta)
-        tcols = [f["name"] for f in cur_fields]
-        if sorted(source.columns) != sorted(tcols):
-            raise ValueError(
-                "source schema differs from table schema; align the "
-                "DataFrame first (no implicit evolution)"
-            )
-        bad = [k for k in keys if k not in tcols]
-        if bad:
-            raise ValueError(f"upsert keys {bad} not in table columns")
         name_to_id = {f["name"]: int(f["id"]) for f in cur_fields}
         id_to_name = {v: k for k, v in name_to_id.items()}
         id_to_type = {int(f["id"]): f["type"] for f in cur_fields}
@@ -3114,14 +3125,19 @@ class IcebergLiteTable:
         stamped with this ``dlp.app-id`` — the streaming sink's
         exactly-once ledger (the same place real Iceberg sinks record
         their application properties; summaries live in metadata.json,
-        so this is a pure metadata scan).  Returns -1 when none.
+        so this is a pure metadata scan).  Returns -1 when none,
+        including on a new table that has no metadata yet.
 
         Caveat (matches real Iceberg): the ledger rides snapshot
         summaries, so another engine's snapshot expiry must retain at
         least the most recent stamped snapshot or a replay after
         expiry could double-append."""
+        try:
+            snaps = self.snapshots()
+        except FileNotFoundError:
+            return -1
         best = -1
-        for s in self.snapshots():
+        for s in snaps:
             sm = s.get("summary") or {}
             if sm.get("dlp.app-id") == app_id and "dlp.batch-id" in sm:
                 best = max(best, int(sm["dlp.batch-id"]))

@@ -276,6 +276,14 @@ def upsert_stream_to_delta_lite(
     ``DeltaTable.merge`` flow (orders_consumer.py +
     gold_dim_products.py:118-131) landing in an actual ``_delta_log``.
 
+    Last-writer-wins orders rows by ``ts_col`` descending (NULLS
+    LAST), ties broken by ``xxhash64`` of the non-key columns,
+    descending.  Within the batch a window keeps the first row per
+    key; against the table the same order rides the merge's
+    ``matched_update_condition``, so an out-of-order backfill row
+    never clobbers a newer target row and the sink reads no target
+    rows itself.
+
     Exactly-once despite foreachBatch's at-least-once delivery: every
     commit is stamped with the Delta ``txn`` action
     (appId=``stream:<checkpoint>``, version=batch_id) and a replayed
@@ -284,10 +292,6 @@ def upsert_stream_to_delta_lite(
     the same application-transaction scheme delta-spark's sink uses,
     and it survives log checkpointing/clean_log because checkpoints
     carry the txn ledger.
-
-    Scale: the batch dedup shuffles only the micro-batch on
-    ``key_cols``; the MERGE is delta_lite's copy-on-write rewrite — at
-    100 TB, partition the table and let merge's anti-join prune.
     """
     from pyspark.sql import Window
 
@@ -298,45 +302,39 @@ def upsert_stream_to_delta_lite(
     table = DeltaLiteTable(table_path)
     app_id = f"stream:{checkpoint_path}"
 
+    def _ref(side: str, col: str) -> str:
+        return f"{side}.`{col.replace('`', '``')}`"
+
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
         first = table.latest_version() is None
         if not first and table.txn_versions().get(app_id, -1) >= batch_id:
             return  # replayed batch: already committed, exactly-once
-        spark = batch_df.sparkSession
         val_cols = [c for c in batch_df.columns if c not in key_cols]
         w = Window.partitionBy(*key_cols).orderBy(
             F.col(ts_col).desc(), F.xxhash64(*val_cols).desc()
         )
-        if first:
-            winners = (
-                batch_df.withColumn("__rn", F.row_number().over(w))
-                .filter(F.col("__rn") == 1)
-                .drop("__rn")
-            )
-            table.write(winners, txn=(app_id, batch_id))
-            return
-        # Last-writer-wins BY EVENT TIMESTAMP against the TARGET too,
-        # not just within the batch: an out-of-order backfill batch
-        # must not clobber newer target rows, so the target's rows for
-        # the touched keys join the arbitration before the merge.
-        target = table.read(spark)
-        touched = target.join(
-            batch_df.select(*key_cols).distinct(),
-            on=key_cols,
-            how="left_semi",
-        )
-        combined = touched.unionByName(
-            batch_df.select(*touched.columns)
-        )
         winners = (
-            combined.withColumn("__rn", F.row_number().over(w))
+            batch_df.withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") == 1)
             .drop("__rn")
         )
+        if first:
+            table.write(winners, txn=(app_id, batch_id))
+            return
+        # the window's order, source row against target row
+        s_ts, t_ts = _ref("s", ts_col), _ref("t", ts_col)
+        s_vals, t_vals = (
+            ", ".join(_ref(side, c) for c in val_cols) for side in "st"
+        )
+        lww = (
+            f"{s_ts} > {t_ts} OR ({t_ts} IS NULL AND {s_ts} IS NOT NULL)"
+            f" OR ({s_ts} <=> {t_ts} AND xxhash64({s_vals}) > xxhash64({t_vals}))"
+        )
         table.merge(
-            spark, winners, keys=key_cols, txn=(app_id, batch_id)
+            batch_df.sparkSession, winners, keys=key_cols,
+            txn=(app_id, batch_id), matched_update_condition=lww,
         )
 
     writer = (
@@ -388,7 +386,7 @@ def append_stream_to_iceberg(
             exists = table.current_snapshot_id() is not None
         except FileNotFoundError:
             exists = False
-        if exists and table.committed_batches(app_id) >= batch_id:
+        if table.committed_batches(app_id) >= batch_id:
             return  # replayed batch: already committed, exactly-once
         table.write(
             batch_df,
@@ -468,17 +466,12 @@ def upsert_stream_to_iceberg(
 
         if batch_df.isEmpty():
             return
-        try:
-            exists = table.current_snapshot_id() is not None
-        except FileNotFoundError:
-            exists = False
-        if exists and table.committed_batches(app_id) >= batch_id:
+        if table.committed_batches(app_id) >= batch_id:
             return  # replayed batch: already committed, exactly-once
-        # last-write-wins within the batch: upsert appends every source
-        # row (two rows of one key would both land), so collapse to one
-        # row per key — by the source's own event order when given
-        # (repartition-stable), else by (partition-id, row-position) as
-        # documented
+        # last-write-wins within the batch: upsert refuses two rows of
+        # one key, so collapse to one row per key — by the source's own
+        # event order when given (repartition-stable), else by
+        # (partition-id, row-position) as documented
         if order_by is not None:
             order = (
                 F.col(order_by).desc(),

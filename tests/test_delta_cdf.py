@@ -126,6 +126,42 @@ def test_merge_plain_and_conditional(spark, tmp_path):
     ]
 
 
+def test_merge_default_and_true_condition_agree(spark, tmp_path):
+    """No update condition and ``"true"`` take the same rewrite path:
+    a target key held by two rows updates BOTH rows (delta-spark's
+    rule), with a pre- and a post-image per updated row."""
+    schema = "id long, val string, grp string"
+    got = {}
+    for cond in (None, "true"):
+        t = DeltaLiteTable(str(tmp_path / f"t_{cond}"))
+        t.write(
+            spark.createDataFrame(
+                [(1, "a", "x"), (1, "b", "x"), (2, "c", "y")], schema
+            ),
+            configuration=CDF,
+        )
+        t.merge(
+            spark,
+            spark.createDataFrame([(1, "X", "x"), (3, "d", "z")], schema),
+            keys=["id"],
+            matched_update_condition=cond,
+        )
+        rows = sorted(tuple(r) for r in t.read(spark).collect())
+        got[cond] = (rows, _changes(t, spark, 0))
+    assert got[None] == got["true"]
+    rows, changes = got[None]
+    assert rows == [
+        (1, "X", "x"), (1, "X", "x"), (2, "c", "y"), (3, "d", "z")
+    ]
+    assert changes == [
+        (1, 1, "X", "update_postimage"),
+        (1, 1, "X", "update_postimage"),
+        (1, 1, "a", "update_preimage"),
+        (1, 1, "b", "update_preimage"),
+        (1, 3, "d", "insert"),
+    ]
+
+
 def test_overwrite_emits_full_change_set(spark, tmp_path):
     t = _mk(spark, tmp_path)
     t.write(

@@ -522,7 +522,9 @@ def test_eventlog_stream_stream_join(spark, tmp_path):
 def test_upsert_sink_equal_ts_deterministic_winner(spark, tmp_path):
     """Two conflicting updates for one key with the SAME event ts must
     converge deterministically (content-fingerprint tiebreak), not to
-    whichever row an arbitrary partition order produced."""
+    whichever row an arbitrary partition order produced — whether they
+    arrive in one micro-batch or in two, in either order.  A NULL ts
+    loses to any non-NULL one the same way (NULLS LAST)."""
     from data_lakehouse_platform_spark.sources.delta_lite import (
         DeltaLiteTable,
     )
@@ -531,37 +533,41 @@ def test_upsert_sink_equal_ts_deterministic_winner(spark, tmp_path):
     )
 
     spark.dataSource.register(EventLogStreamDataSource)
-    log = str(tmp_path / "ties")
     same_ts = "2024-01-01 10:00:00"
-    rows = [
-        {"event_id": 1, "user_id": 1, "event_type": "a", "ts": same_ts, "value": 1.0},
-        {"event_id": 1, "user_id": 1, "event_type": "b", "ts": same_ts, "value": 2.0},
-    ]
-    append_segment(log, rows)
-    tbl = str(tmp_path / "tbl")
-    src = (
-        spark.readStream.format("eventlog").option("path", log).load()
-        .withColumn("ets", F.to_timestamp("ts"))
-    )
-    q = upsert_stream_to_delta_lite(
-        src, tbl, key_cols=["event_id"], ts_col="ets",
-        checkpoint_path=str(tmp_path / "ck"),
-    )
-    q.awaitTermination(120)
-    got = DeltaLiteTable(tbl).read(spark).collect()
-    assert len(got) == 1
+    a = {"event_id": 1, "user_id": 1, "event_type": "a", "ts": same_ts, "value": 1.0}
+    b = {"event_id": 1, "user_id": 1, "event_type": "b", "ts": same_ts, "value": 2.0}
+    no_ts = {"event_id": 1, "user_id": 1, "event_type": "n", "ts": None, "value": 3.0}
+
+    def sink(name, *batches):
+        """Stream each list of rows as its own micro-batch into a new
+        table; return the single row left for the key."""
+        log = str(tmp_path / f"{name}_log")
+        tbl = str(tmp_path / name)
+        for rows in batches:
+            append_segment(log, rows)
+            src = (
+                spark.readStream.format("eventlog").option("path", log)
+                .load().withColumn("ets", F.to_timestamp("ts"))
+            )
+            q = upsert_stream_to_delta_lite(
+                src, tbl, key_cols=["event_id"], ts_col="ets",
+                checkpoint_path=str(tmp_path / f"{name}_ck"),
+            )
+            q.awaitTermination(120)
+        got = DeltaLiteTable(tbl).read(spark).collect()
+        assert len(got) == 1
+        return got[0].event_type, got[0].value
+
+    winner = sink("tbl", [a, b])
     # the tiebreak is deterministic: re-running from scratch converges
     # to the same winner
-    tbl2 = str(tmp_path / "tbl2")
-    q = upsert_stream_to_delta_lite(
-        src, tbl2, key_cols=["event_id"], ts_col="ets",
-        checkpoint_path=str(tmp_path / "ck2"),
-    )
-    q.awaitTermination(120)
-    got2 = DeltaLiteTable(tbl2).read(spark).collect()
-    assert [(r.event_type, r.value) for r in got] == [
-        (r.event_type, r.value) for r in got2
-    ]
+    assert sink("tbl2", [a, b]) == winner
+    # across batches the merge condition applies the same order
+    assert sink("a_then_b", [a], [b]) == winner
+    assert sink("b_then_a", [b], [a]) == winner
+    assert sink("null_ts", [no_ts, a]) == ("a", 1.0)
+    assert sink("null_then_a", [no_ts], [a]) == ("a", 1.0)
+    assert sink("a_then_null", [a], [no_ts]) == ("a", 1.0)
 
 
 def test_capstone_eventlog_to_delta_lite_sink(spark, tmp_path):

@@ -178,8 +178,10 @@ def test_rewrite_noop_commits_nothing(spark, tmp_path, partitioned):
 
 def test_committed_batches_per_app(spark, tmp_path):
     """The exactly-once ledger reads the largest stamped batch id per
-    application; unstamped commits and other apps do not count."""
+    application; unstamped commits and other apps do not count, and
+    a table with no metadata yet has no ledger."""
     t = IcebergLiteTable(str(tmp_path / "t"))
+    assert t.committed_batches("a") == -1
     t.write(_df(spark, [(0, "eu", 0.0)]))
     assert t.committed_batches("a") == -1
     for app, batch in (("a", 0), ("b", 7), ("a", 3), ("a", 2)):
@@ -194,3 +196,21 @@ def test_committed_batches_per_app(spark, tmp_path):
     assert t.committed_batches("a") == 3
     assert t.committed_batches("b") == 9
     assert t.committed_batches("c") == -1
+
+
+@_LAYOUTS
+def test_upsert_refuses_duplicate_source_keys(spark, tmp_path, partitioned):
+    """Two source rows for one key are refused before anything is
+    staged, on a table with rows and on a new one."""
+    t = _table(spark, tmp_path, partitioned)
+    n = len(t.snapshots())
+    dup = _df(spark, [(1, "eu", 1.0), (1, "us", 2.0)])
+    with pytest.raises(ValueError, match="duplicate keys"):
+        t.upsert(spark, dup, keys=["id"])
+    assert len(t.snapshots()) == n
+    assert _rows(t, spark) == sorted(_seed())
+    fresh = IcebergLiteTable(str(tmp_path / "fresh"))
+    with pytest.raises(ValueError, match="duplicate keys"):
+        fresh.upsert(spark, dup, keys=["id"])
+    with pytest.raises(FileNotFoundError):
+        fresh.metadata()
