@@ -7,6 +7,7 @@ platform needs to switch over:
     lh.table("orders")                      # DataFrame
     lh.sql("SELECT COUNT(*) FROM lineitem") # SQL over registered views
     lh.query("q1_pricing_summary")          # any registry operator
+    lh.profile("q1_pricing_summary")        # its jobs, stages, shuffle bytes
     lh.medallion("/data/lake")              # bronze->silver->gold builder
     lh.delta("/data/gold/dim_products")     # versioned Delta table handle
     lh.iceberg("/data/ice/events")          # Iceberg metadata interop
@@ -54,6 +55,25 @@ class Lakehouse:
 
     def query_names(self) -> list[str]:
         return sorted(all_queries())
+
+    def profile(self, name: str) -> dict:
+        """Run registry query ``name`` and return its stage metrics in
+        two windows, as one flat record: ``build_*`` covers the eager
+        jobs the builder launches while constructing the DataFrame,
+        ``action_*`` a ``noop`` write of the result (see
+        :func:`~data_lakehouse_platform_spark.plans.profile.profile` for
+        the fields).  Every value is a number, so the record goes
+        straight into ``MetricsHistory.append``."""
+        from data_lakehouse_platform_spark.plans.profile import profile
+
+        with profile(self.spark) as build:
+            df = self.query(name)
+        with profile(self.spark) as action:
+            df.write.format("noop").mode("overwrite").save()
+        return {
+            **{f"build_{k}": v for k, v in build.items()},
+            **{f"action_{k}": v for k, v in action.items()},
+        }
 
     # -- lakehouse primitives -------------------------------------------
 

@@ -1,9 +1,10 @@
 """Registry-wide physical-plan audit report.
 
-`python -m data_lakehouse_platform_spark.plans.report` regenerates
-PLANS.md: one row per registry query with the scale-relevant plan
-properties (shuffle count, join strategies, Python nodes, codegen
-spans, scan pushdown). This is the reviewable artifact behind the
+`python -m data_lakehouse_platform_spark.plans.report [sf_dir]`
+regenerates PLANS.md, and is its only generator: one row per registry
+query with the scale-relevant plan properties (shuffle count, join
+strategies, Python nodes, codegen spans, scan pushdown), all counted by
+:func:`audit_plan`. This is the reviewable artifact behind the
 ".explain() every operator" discipline — plan regressions show up as
 a diff here, not as a silent slowdown at deploy scale.
 """
@@ -40,15 +41,21 @@ def plan_report(sf_dir: str) -> str:
     lines = [
         "# PLANS — physical-plan audit of every registry query",
         "",
-        f"Generated against `{sf_dir}` on a vanilla local[8] session, "
-        "shuffle.partitions=32, AQE disabled for the static audit "
-        "(codegen spans and exchanges visible pre-execution; the engine "
-        "runs with AQE on — generator config matters: a different "
-        "parallelism can legitimately flip join strategies between "
-        "generations). Columns: shuffles (hash/range/RR "
-        "exchanges), join strategy counts, Python-eval nodes "
-        "(row-at-a-time / Arrow), whole-stage-codegen spans, scans with "
-        "pushed filters.",
+        f"Generated against `{sf_dir}` by `python -m "
+        "data_lakehouse_platform_spark.plans.report` on a vanilla "
+        "local[8] session, shuffle.partitions=32, AQE disabled for the "
+        "static audit (codegen spans and exchanges visible "
+        "pre-execution; the engine runs with AQE on — generator config "
+        "matters: a different parallelism can legitimately flip join "
+        "strategies between generations). Every column is counted by "
+        "`plans.explain.audit_plan` on the executed plan of the "
+        "registry build: shuffles (hash/range/RR exchanges; "
+        "SinglePartition exchanges excluded — they are audited by the "
+        "contract line below), join strategy counts, Python-eval nodes "
+        "(row-at-a-time / Arrow), whole-stage-codegen spans (distinct "
+        "`*(n)` markers), scans with pushed filters. The last two also "
+        "count the plans of persisted inputs that the executed plan "
+        "prints under `InMemoryRelation`.",
         "",
         "Contract: no cartesian products; no row-at-a-time Python "
         "anywhere; broadcast joins on every dim side; single-partition "
@@ -58,15 +65,12 @@ def plan_report(sf_dir: str) -> str:
         "|---|---|---|---|---|---|---|---|---|---|",
     ]
     for name, q in sorted(all_queries().items()):
-        df = q.build(spark, sf_dir)
-        # Execute THIS QueryExecution (a noop write would plan a fresh
-        # one) so AQE finalizes it — join strategy swaps and codegen
-        # spans are only truthful on the final plan. execute().count()
-        # runs the physical plan WITHOUT shipping result rows to the
-        # driver (executeCollect would materialize every row of every
-        # registry query driver-side — OOM bait at larger SFs).
-        df._jdf.queryExecution().executedPlan().execute().count()
-        a = audit_plan(df)
+        # With AQE off the executed plan is fixed at planning time, so
+        # the audit needs no execution of the query.
+        a = audit_plan(q.build(spark, sf_dir))
+        # a builder's persisted inputs must not turn up as cached scans
+        # in a later query's plan
+        spark.catalog.clearCache()
         lines.append(
             f"| `{name}` | {a.shuffles} | {a.broadcast_hash_joins} "
             f"| {a.sort_merge_joins} | {a.broadcast_nested_loop_joins} "

@@ -17,6 +17,7 @@ Reference parity notes cite /root/reference file:line in each builder.
 
 from __future__ import annotations
 
+import importlib
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -52,7 +53,7 @@ _REGISTRY: dict[str, Query] = {}
 # queries_r8_ext directly would register its entries before
 # queries_llm's and silently shift the first 50 — so all_queries()
 # sorts by (this rank, in-module registration sequence) instead.  New
-# modules append HERE and in all_queries()'s import list.
+# modules append HERE; all_queries() imports every module listed.
 _MODULE_RANK = {
     f"{__package__}.{m}": i
     for i, m in enumerate(
@@ -185,8 +186,8 @@ def register(name: str, oracle: str | None, doc: str = "") -> Callable[[QueryFn]
         if rank is None:
             raise ValueError(
                 f"{mod!r} is not in queries._MODULE_RANK — append the "
-                "new module there (and in all_queries) so registry "
-                "order stays import-order-independent"
+                "new module there so registry order stays "
+                "import-order-independent"
             )
         seq = _MODULE_COUNTERS.get(mod, 0)
         _MODULE_COUNTERS[mod] = seq + 1
@@ -197,33 +198,10 @@ def register(name: str, oracle: str | None, doc: str = "") -> Callable[[QueryFn]
 
 
 def all_queries() -> dict[str, Query]:
-    # Import side-effect modules that register additional queries.
-    from data_lakehouse_platform_spark import queries_llm  # noqa: F401
-    from data_lakehouse_platform_spark import queries_pipeline  # noqa: F401
-    from data_lakehouse_platform_spark import queries_relational_ext  # noqa: F401
-    from data_lakehouse_platform_spark import queries_tpch_deep  # noqa: F401
-    from data_lakehouse_platform_spark import queries_analytics_ext  # noqa: F401
-    from data_lakehouse_platform_spark import queries_curation_ext  # noqa: F401
-    from data_lakehouse_platform_spark import queries_events_ext  # noqa: F401
-    from data_lakehouse_platform_spark import queries_stats_ext  # noqa: F401
-    from data_lakehouse_platform_spark import queries_seq_ext  # noqa: F401
-    from data_lakehouse_platform_spark import queries_mixture_ext  # noqa: F401
-    from data_lakehouse_platform_spark import queries_robust_ext  # noqa: F401
-    # Registered last ON PURPOSE: the external driver grades the first 50
-    # registry keys by registration order (pinned by
-    # tests/test_oracle_parity.py::test_driver_first_50_stable), so new
-    # modules must only ever append.
-    from data_lakehouse_platform_spark import queries_sketch_ext  # noqa: F401
-    from data_lakehouse_platform_spark import queries_trend_ext  # noqa: F401
-    from data_lakehouse_platform_spark import queries_survival_ext  # noqa: F401
-    from data_lakehouse_platform_spark import queries_econ_ext  # noqa: F401
-    from data_lakehouse_platform_spark import queries_ops_ext  # noqa: F401
-    from data_lakehouse_platform_spark import queries_resolution_ext  # noqa: F401,E501
-    from data_lakehouse_platform_spark import queries_lakeops_ext  # noqa: F401,E501
-    from data_lakehouse_platform_spark import queries_stattests_ext  # noqa: F401,E501
-    from data_lakehouse_platform_spark import queries_r8_ext  # noqa: F401
-    from data_lakehouse_platform_spark import queries_r9_ext  # noqa: F401
-    from data_lakehouse_platform_spark import queries_r10_ext  # noqa: F401
+    # Import the side-effect modules that register the rest of the
+    # registry: every module named in _MODULE_RANK.
+    for mod in _MODULE_RANK:
+        importlib.import_module(mod)
 
     # canonical order regardless of which module a caller imported
     # first (see _MODULE_RANK)

@@ -17,8 +17,8 @@ sizes, and asserts:
   near-dup graph itself denser, a harder-than-linear INSTANCE that
   the bucket caps must still contain);
 * worst-task-records(10x) <= 13x worst-task-records(1x) + slack, from
-  the Spark status API, stress.py-style — wall time alone can hide a
-  funnel that a bigger box would absorb.
+  the driver's status store (``plans.profile``, as in stress.py) — wall
+  time alone can hide a funnel that a bigger box would absorb.
 
 Replication: cross-join with a 10-row replica range; every key column
 is shifted by replica * 10M so replicas are disjoint entities
@@ -39,13 +39,13 @@ import os
 import shutil
 import sys
 import time
-import urllib.error
-import urllib.request
 
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+from data_lakehouse_platform_spark.plans.profile import profile  # noqa: E402
 
 SRC = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 DST = os.environ.get("SPARK_GRAFT_SCALE_DIR", "/tmp/spark_graft_scale10")
@@ -200,54 +200,16 @@ def generate(spark) -> None:
         json.dump(want, fh)
 
 
-# -- status API (stress.py's worst-task probe) --------------------------
-
-
-def _api(spark, path: str):
-    base = spark.sparkContext.uiWebUrl
-    app = spark.sparkContext.applicationId
-    with urllib.request.urlopen(f"{base}/api/v1/applications/{app}{path}") as r:
-        return json.load(r)
-
-
-def _last_stage(spark) -> int:
-    stages = _api(spark, "/stages?status=COMPLETE")
-    return max((s["stageId"] for s in stages), default=-1)
-
-
-def _max_task_records(spark, since_stage: int) -> int:
-    worst = 0
-    for s in _api(spark, "/stages?status=COMPLETE"):
-        if s["stageId"] <= since_stage:
-            continue
-        try:
-            ts = _api(
-                spark,
-                f"/stages/{s['stageId']}/{s['attemptId']}"
-                "/taskSummary?quantiles=1.0",
-            )
-        except urllib.error.HTTPError:
-            continue
-        shuffle = int(
-            ts.get("shuffleReadMetrics", {}).get("readRecords", [0])[0]
-        )
-        scan = int(ts.get("inputMetrics", {}).get("recordsRead", [0])[0])
-        worst = max(worst, shuffle, scan)
-    return worst
-
-
 def _run(spark, fn, sf_dir) -> tuple[float, int]:
     """min wall over 2 runs (shakes JIT/IO noise) + worst task records
     of the faster run."""
     best = (float("inf"), 0)
     for _ in range(2):
         spark.catalog.clearCache()
-        mark = _last_stage(spark)
-        t0 = time.perf_counter()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        wall = time.perf_counter() - t0
-        if wall < best[0]:
-            best = (wall, _max_task_records(spark, mark))
+        with profile(spark) as rec:
+            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        if rec["wall_s"] < best[0]:
+            best = (rec["wall_s"], rec["max_task_records"])
     return best
 
 
@@ -256,14 +218,7 @@ def main() -> None:
 
     import __spark_entry__ as entry
 
-    spark = get_spark(
-        "dlp-scale-bench",
-        extra_conf={
-            "spark.ui.enabled": "true",
-            "spark.ui.retainedStages": "4000",
-            "spark.sql.shuffle.partitions": "32",
-        },
-    )
+    spark = get_spark("dlp-scale-bench", shuffle_partitions=32)
     spark.sparkContext.setLogLevel("ERROR")
 
     t0 = time.perf_counter()
@@ -315,6 +270,9 @@ def main() -> None:
         "metric": "scale_lane_10x",
         "replicas": REPLICAS,
         "src": SRC,
+        "sf": os.path.basename(SRC),
+        "cores": spark.sparkContext.defaultParallelism,
+        "spark_version": spark.version,
         "gen_wall_sec": round(gen_wall, 1),
         "queries": results,
         "bounds_hold": not failures,

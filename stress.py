@@ -1,6 +1,6 @@
 #!/usr/bin/env python
 """Scale-stress kit: adversarial skew shapes with HARD task-input
-assertions from the Spark status REST API.
+assertions from the driver's status store (``plans.profile``).
 
 The property/oracle tests prove the skew-safe operators are
 *equivalent* to their plain twins; nothing there proves the BOUNDS at
@@ -52,11 +52,9 @@ Run: python stress.py   (~3-5 min on local[32]; exit 0 = all bounds hold)
 
 from __future__ import annotations
 
-import json
 import os
 import sys
 import time
-import urllib.request
 
 from pyspark.sql import Window
 from pyspark.sql import functions as F
@@ -77,76 +75,24 @@ from data_lakehouse_platform_spark.operators.sessionize import (  # noqa: E402
 from data_lakehouse_platform_spark.operators.text import (  # noqa: E402
     explode_shingles,
 )
+from data_lakehouse_platform_spark.plans.profile import profile  # noqa: E402
 from data_lakehouse_platform_spark.session import get_spark  # noqa: E402
 
 
-def _api(spark, path: str):
-    base = spark.sparkContext.uiWebUrl
-    app = spark.sparkContext.applicationId
-    with urllib.request.urlopen(f"{base}/api/v1/applications/{app}{path}") as r:
-        return json.load(r)
-
-
-def max_task_records(spark, since_stage: int) -> int:
-    """Worst single-task input across all stages completed after
-    ``since_stage``: max of shuffle-read records and scan records at
-    quantile 1.0 (the slowest/fattest task)."""
-    worst = 0
-    for s in _api(spark, "/stages?status=COMPLETE"):
-        if s["stageId"] <= since_stage:
-            continue
-        try:
-            ts = _api(
-                spark,
-                f"/stages/{s['stageId']}/{s['attemptId']}"
-                "/taskSummary?quantiles=1.0",
-            )
-        except urllib.error.HTTPError:
-            continue  # stage with no task data
-        shuffle = int(ts.get("shuffleReadMetrics", {}).get("readRecords", [0])[0])
-        scan = int(ts.get("inputMetrics", {}).get("recordsRead", [0])[0])
-        worst = max(worst, shuffle, scan)
-    return worst
-
-
-
-def total_input_records(spark, since_stage: int) -> int:
-    """Total scan-input records across all stages completed after
-    ``since_stage`` — the pruning metric (worst-task can't see file
-    skipping when every file is the same size)."""
-    total = 0
-    for s in _api(spark, "/stages?status=COMPLETE"):
-        if s["stageId"] <= since_stage:
-            continue
-        total += int(s.get("inputRecords") or 0)
-    return total
-
-
-def last_stage(spark) -> int:
-    stages = _api(spark, "/stages")
-    return max((s["stageId"] for s in stages), default=-1)
-
-
 def run_shape(spark, name, fn):
-    mark = last_stage(spark)
-    t0 = time.perf_counter()
-    result = fn()
-    wall = time.perf_counter() - t0
-    worst = max_task_records(spark, mark)
+    """Run ``fn`` and return its worst single-task input: the max of
+    shuffle-read and scan records at quantile 1.0 over every stage it
+    completed."""
+    with profile(spark) as rec:
+        result = fn()
+    worst = rec["max_task_records"]
     print(f"[{name}] result={result} worst_task_records={worst:,} "
-          f"wall={wall:.1f}s", flush=True)
+          f"wall={rec['wall_s']:.1f}s", flush=True)
     return worst
 
 
 def main() -> None:
-    spark = get_spark(
-        "dlp-stress",
-        extra_conf={
-            "spark.ui.enabled": "true",
-            "spark.ui.retainedStages": "2000",
-            "spark.sql.shuffle.partitions": "32",
-        },
-    )
+    spark = get_spark("dlp-stress", shuffle_partitions=32)
     spark.sparkContext.setLogLevel("ERROR")
     failures: list[str] = []
 
@@ -488,15 +434,17 @@ def main() -> None:
     files_full, _d0 = ice.plan_files()
     files_pruned, _d1 = ice.plan_files(partition_filter={"bucket": 7})
 
-    mark6 = last_stage(spark)
-    n_full = ice.read(spark).count()
-    full_input = total_input_records(spark, mark6)
+    # total scan input is the pruning metric: the worst task cannot see
+    # file skipping when every file is the same size
+    with profile(spark) as rec6:
+        n_full = ice.read(spark).count()
+    full_input = rec6["input_records"]
 
-    mark6b = last_stage(spark)
-    n_pruned = ice.read(
-        spark, partition_filter={"bucket": 7}
-    ).count()
-    pruned_input = total_input_records(spark, mark6b)
+    with profile(spark) as rec6b:
+        n_pruned = ice.read(
+            spark, partition_filter={"bucket": 7}
+        ).count()
+    pruned_input = rec6b["input_records"]
     print(
         f"[iceberg_prune] files {len(files_full):,}->"
         f"{len(files_pruned):,} rows {n_full:,}->{n_pruned:,} "
@@ -567,9 +515,9 @@ def main() -> None:
             _F.lit(-2).cast("long").alias("val"),
         )
     )
-    mark7 = last_stage(spark)
-    res7 = dt.merge(spark, src, keys=["k"])
-    merge_input = total_input_records(spark, mark7)
+    with profile(spark) as rec7:
+        res7 = dt.merge(spark, src, keys=["k"])
+    merge_input = rec7["input_records"]
     new_actions = dt._actions(dt.latest_version())
     new_bytes = sum(
         a["add"]["size"] for a in new_actions if "add" in a
@@ -779,9 +727,9 @@ def main() -> None:
         .repartitionByRange(FILES10, "id")
     )
     kept10, total10 = t10.files_matching(spark, "id = 777777")
-    mark10 = last_stage(spark)
-    got10 = t10.read(spark, predicate="id = 777777").count()
-    scan10 = total_input_records(spark, mark10)
+    with profile(spark) as rec10:
+        got10 = t10.read(spark, predicate="id = 777777").count()
+    scan10 = rec10["input_records"]
     per_file = N10 // FILES10
     print(
         f"[delta_skip_point] files={len(kept10)}/{total10} rows={got10} "
@@ -800,9 +748,9 @@ def main() -> None:
             f"shape10 SCAN BOUND: {scan10:,} input records > 4x one "
             f"file ({per_file:,}) — the read ignored the kept-file list"
         )
-    mark10b = last_stage(spark)
-    res10 = t10.delete(spark, "id = 900000", strategy="dv")
-    del_scan10 = total_input_records(spark, mark10b)
+    with profile(spark) as rec10b:
+        res10 = t10.delete(spark, "id = 900000", strategy="dv")
+    del_scan10 = rec10b["input_records"]
     print(
         f"[delta_skip_delete] deleted={res10['deleted_rows']} "
         f"files={res10['files']} locate_scan_input={del_scan10:,}",
@@ -870,9 +818,9 @@ def main() -> None:
             F.lit(-2).cast("long").alias("val"),
         )
     )
-    mark12 = last_stage(spark)
-    res12 = tu.upsert(spark, src12, keys=["k"])
-    upsert_in12 = total_input_records(spark, mark12)
+    with profile(spark) as rec12:
+        res12 = tu.upsert(spark, src12, keys=["k"])
+    upsert_in12 = rec12["input_records"]
     files12b, dels12b = tu.plan_files()
     new_paths12 = {p for p, _s, _pt in files12b} - {
         p for p, _s, _pt in files12

@@ -202,3 +202,24 @@ def test_progress_listener_end_to_end(spark, tmp_path):
     assert lst.snapshot() == []  # buffer drained
     got = h.read(spark).filter("name = 'num_input_rows'")
     assert got.count() >= 1
+
+
+def test_lakehouse_profile_feeds_metrics_history(spark, tmp_path):
+    """``Lakehouse.profile`` gives one flat numeric record, build and
+    action windows apart, that the parquet history takes as it is."""
+    from data_lakehouse_platform_spark.engine import Lakehouse
+    from tests.conftest import SF_DIR
+
+    rec = Lakehouse(spark=spark, sf_dir=SF_DIR).profile("q1_pricing_summary")
+    # resolving the lineitem table is an eager job of the builder; the
+    # noop write runs the plan
+    assert rec["build_jobs"] >= 1 and rec["action_jobs"] >= 1
+    assert rec["action_stages"] >= 1 and rec["action_input_records"] > 0
+    assert set(rec) == {f"{w}_{k}" for w in ("build", "action") for k in (
+        "wall_s", "jobs", "stages", "tasks", "shuffle_read_bytes",
+        "shuffle_write_bytes", "spill_bytes", "input_records",
+        "max_task_records")}
+    h = MetricsHistory(str(tmp_path / "hist"))
+    assert h.append(spark, rec, labels={"query": "q1_pricing_summary"}) == len(rec)
+    back = {r.name: r.value for r in h.read(spark).collect()}
+    assert back == {k: float(v) for k, v in rec.items()}

@@ -1,6 +1,7 @@
 """Opt-in scale-stress gate: runs stress.py (adversarial hot-key shapes
-with task-input assertions from the Spark status REST API) in its own
-JVM, because the shared test session runs with the UI disabled.
+with task-input assertions read through ``plans.profile``) in its own
+JVM, so its multi-million-row shapes and shuffle settings stay out of
+the shared test session.
 
 Slow (~2-4 min) and orthogonal to correctness, so it is gated behind
 SPARK_GRAFT_STRESS=1 rather than slowing every suite run:
